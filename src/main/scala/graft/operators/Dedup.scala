@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
+import graft.core.Fixpoint
 import TextAnalysis._
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -818,9 +819,9 @@ object Dedup {
     * needs O(diameter) rounds; the jump step doubles resolved-pointer
     * depth per round, giving O(log n) rounds even on path-shaped
     * components. Each round is two hash-shuffle joins over (id, lbl)
-    * pairs — never an all-pairs product — and `localCheckpoint`
-    * truncates the iterative lineage so plans stay flat at scale.
-    * Labels only decrease, so convergence = zero lowered labels. */
+    * pairs — never an all-pairs product — run by [[Fixpoint.converge]],
+    * whose per-round checkpoint keeps plans flat at scale. Labels only
+    * decrease, so convergence = zero lowered labels. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 30, symmetric: Boolean = false): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -844,23 +845,20 @@ object Dedup {
       .repartition(par, col("dst")).persist(MEMORY_AND_DISK)
     // init: label = min(self, direct neighbors); symmetric edges mean
     // groupBy(src) enumerates every node
-    var labels = edges.groupBy(col("src").as("id"))
+    val init = edges.groupBy(col("src").as("id"))
       .agg(least(first(col("src")), min(col("dst"))).as("lbl"))
-      .localCheckpoint(eager = false) // the init lblSum materializes it
     // convergence bookkeeping: labels only ever DECREASE (every update
     // is a `least`), so Σ labels strictly decreases iff any node
     // lowered — one 1-row aggregate per round replaces the old
     // jumped⋈labels change-count join (2 exchanges + a data-sized merge
     // per round, measured the single largest per-round cost at bench
-    // scale). decimal(38,0) keeps the sum exact for any long ids.
-    def lblSum(df: DataFrame): java.math.BigDecimal = {
+    // scale). decimal(38,0) keeps the sum exact for any long ids; the
+    // sum is NULL exactly when there are no labels at all.
+    def lblSum(df: DataFrame): Option[BigDecimal] = {
       val r = df.agg(sum(col("lbl").cast("decimal(38,0)"))).head()
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
+      if (r.isNullAt(0)) None else Some(BigDecimal(r.getDecimal(0)))
     }
-    var prevSum = lblSum(labels)
-    var iter = 0
-    var converged = prevSum == java.math.BigDecimal.ZERO && labels.isEmpty
-    while (!converged && iter < maxIter) {
+    val comps = Fixpoint.converge(init, maxIter)(lblSum) { labels =>
       val nbrMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src")).agg(min(col("lbl")).as("nlbl"))
       // r17: the pointer jump resolves through the PREVIOUS round's
@@ -879,23 +877,14 @@ object Dedup {
       // SYMMETRIC edges forces per-component-constant labels = min id.
       val prop = labels.join(nbrMin, labels("id") === nbrMin("src"), "left")
         .select(labels("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-      // lazy checkpoint: the convergence aggregate below is the ONE
-      // action per round — it materializes the checkpoint as a side
-      // effect instead of paying a separate eager-checkpoint job first
-      val jumped = prop.as("x")
+      prop.as("x")
         .join(labels.select(col("id").as("__jid"), col("lbl").as("__jlbl")),
           col("x.lbl") === col("__jid"), "left")
         .select(col("x.id").as("id"),
           least(col("x.lbl"), coalesce(col("__jlbl"), col("x.lbl"))).as("lbl"))
-        .localCheckpoint(eager = false)
-      val s = lblSum(jumped)
-      labels = jumped
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      iter += 1
     }
     edges.unpersist()
-    labels.select(col("id"), col("lbl").as("component_id"))
+    comps.select(col("id"), col("lbl").as("component_id"))
   }
 
   /** Quality-aware near-dup keeper selection: every document maps to

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Fixpoint
 
 /** Distributed graph analytics over plain edge DataFrames — the
   * companion of [[Dedup.connectedComponents]] (pointer-jumping): link
@@ -17,22 +18,6 @@ import org.apache.spark.sql.functions._
   * stay 20 shuffles, not an exponentially re-derived plan.
   */
 object Graphs {
-
-  /** Iterations fused per materialization in the rank loops
-    * (pageRank / personalizedPageRank). Env-overridable for measurement
-    * (GRAFT_GRAPH_FUSE); the default is the MEASURED sweet spot.
-    *
-    * r16 TimeOne sweep on the bench purchase graph (sf0.1, 20-iter
-    * pagerank steady-state reps): depth 1 = 3.3-4.7s, depth 2 =
-    * 5.7-7.5s, depth 3 = 13-15s, depth 4 = 9.8-13s; ppr depth 1 =
-    * 3.5-4.4s vs depth 2 = 12s+. The r13 depth-2 fusion win has
-    * INVERTED: since the stats-leaf reset re-wraps each checkpoint as
-    * a plain RDD-scan leaf, re-reading the previous vector costs a
-    * memory scan — there is no recompute for fusion to save — while
-    * fusing doubles plan/codegen size and denies AQE its per-job
-    * runtime stats. One materialization per iteration wins. */
-  private[graft] val FuseDepth: Int =
-    math.max(1, sys.env.getOrElse("GRAFT_GRAPH_FUSE", "1").toInt)
 
   /** shared input collapse: raw multigraph edges fold to (src, dst, w)
     * by count; pre-collapsed input (e.g. a [[GraphStore.read]]) passes
@@ -100,21 +85,13 @@ object Graphs {
       val n = nodes.count().toDouble
       if (n == 0) nodes.withColumn("rank", lit(0.0))
       else {
-        // stats-leaf reset (the Bradley-Terry lesson): each step reads
-        // the rank frame TWICE (dangling + contribs), so checkpoint-
-        // preserved origin stats would compound geometrically across
-        // iterations; the re-wrap pins them to the materialized leaf
-        def reset(df: DataFrame): DataFrame = {
-          val ck = df.localCheckpoint()
-          spark.createDataFrame(ck.rdd, ck.schema)
-        }
         // the rank frame carries a has-out-edges flag (__ho) so the per-
         // iteration dangling mass is a map-side filter + 1-row aggregate
         // instead of an anti-join that re-exchanges the whole rank vector
         // every step (one exchange fewer per iteration; identical sum —
         // the filtered rows ARE the anti-join's rows)
         val hasOut = outW.select(col("src").as("id"), lit(true).as("__ho"))
-        var ranks = reset(init match {
+        val start = init match {
           case None => nodes.join(hasOut, Seq("id"), "left")
             .withColumn("rank", lit(1.0 / n))
           case Some(warm) =>
@@ -127,7 +104,7 @@ object Graphs {
             filled.crossJoin(broadcast(tot))
               .join(hasOut, Seq("id"), "left")
               .select(col("id"), col("__ho"), (col("rank") / col("__t")).as("rank"))
-        })
+        }
         // mass parked on dangling nodes (no out-edges) spreads
         // uniformly — computed as a broadcast 1-ROW FRAME riding the
         // iteration's own plan, never a driver-side action (per-
@@ -150,26 +127,8 @@ object Graphs {
                 lit(damping) * (coalesce(col("__in"), lit(0.0)) +
                   col("__dang") / n)).as("rank"))
         }
-        var it = 0
-        while (it < iterations) {
-          // `FuseDepth` iterations fuse per materialization (same
-          // arithmetic, 1/depth the jobs): each later step reads the
-          // previous step's frame lazily — its two reads carry
-          // identical shuffle subplans, so ReuseExchange dedupes them
-          // inside the one job (at any nesting level). Periodic
-          // materialization stays REQUIRED: without ReuseExchange an
-          // unbounded lazy chain re-executes every prior step
-          // exponentially (each level is read twice), and plan/codegen
-          // size grows with depth — the default depth is the measured
-          // sweet spot (see FuseDepth).
-          val take = math.min(FuseDepth, iterations - it)
-          var next = ranks
-          var i = 0
-          while (i < take) { next = step(next); i += 1 }
-          it += take
-          ranks = reset(next)
-        }
-        ranks.select(col("id"), col("rank"))
+        Fixpoint.rounds(start, iterations)((r, _) => step(r))
+          .select(col("id"), col("rank"))
       }
     } finally {
       ej.unpersist(false); e.unpersist(false)
@@ -187,8 +146,8 @@ object Graphs {
     *
     * Plan shape = [[pageRank]]: per iteration one src-keyed join + one
     * dst-keyed partial agg, dangling mass as an in-plan broadcast 1-row
-    * frame, one materialization per TWO iterations (fused; ReuseExchange
-    * dedupes the second step's double read) — no driver action.
+    * frame, one materialization per iteration ([[Fixpoint.rounds]]) —
+    * no other driver action.
     * Deterministic → the fixed iteration count unrolls into a FULL
     * DuckDB oracle. Returns (id, rank). */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
@@ -228,16 +187,12 @@ object Graphs {
         .join(outW.select(col("src").as("id"), lit(true).as("__ho")), Seq("id"), "left")
         .select(col("id"), coalesce(col("__p"), lit(0.0)).as("p"), col("__ho"))
         .localCheckpoint()
-      def reset(df: DataFrame): DataFrame = {
-        val ck = df.localCheckpoint()
-        spark.createDataFrame(ck.rdd, ck.schema)
-      }
       // warm start (the [[pageRank]] init posture): nodes absent from
       // the saved vector start at their personalization value, then the
       // whole vector renormalizes to sum exactly 1 so per-iteration
       // mass conservation holds; the damped iteration is a contraction,
       // so any start reaches the unique fixpoint
-      var ranks = reset(init match {
+      val start = init match {
         case None => withP.select(col("id"), col("p"), col("__ho"),
           col("p").as("rank"))
         case Some(warm) =>
@@ -249,7 +204,7 @@ object Graphs {
           filled.crossJoin(broadcast(tot))
             .select(col("id"), col("p"), col("__ho"),
               (col("rank") / col("__t")).as("rank"))
-      })
+      }
       def step(r: DataFrame): DataFrame = {
         val dangling = r.filter(col("__ho").isNull)
           .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dang"))
@@ -265,19 +220,8 @@ object Graphs {
               lit(damping) * (coalesce(col("__in"), lit(0.0)) +
                 col("__dang") * col("p"))).as("rank"))
       }
-      var it = 0
-      while (it < iterations) {
-        // FuseDepth iterations per materialization, ReuseExchange
-        // dedupes each step's double read of its predecessor — see
-        // [[pageRank]]
-        val take = math.min(FuseDepth, iterations - it)
-        var next = ranks
-        var i = 0
-        while (i < take) { next = step(next); i += 1 }
-        it += take
-        ranks = reset(next)
-      }
-      ranks.select(col("id"), col("rank"))
+      Fixpoint.rounds(start, iterations)((r, _) => step(r))
+        .select(col("id"), col("rank"))
     } finally {
       ej.unpersist(false); e.unpersist(false)
       outW.unpersist(false); nodes.unpersist(false); ()
@@ -293,8 +237,8 @@ object Graphs {
     * core (>= k by definition, spec-gated).
     *
     * Plan shape: each peel round is one degree hash-agg + two semi-joins
-    * of the edge list against the surviving-node table, localCheckpoint
-    * per round; convergence needs one count action per round (peeling
+    * of the edge list against the surviving-node table; the round's
+    * edge count is its one action ([[Fixpoint.converge]]; peeling
     * rounds are few on real graphs — bounded by the degeneracy
     * ordering's depth, not |V|). Early stop is SAFE for the unrolled
     * oracle: peeling is monotone, so extra unrolled rounds past the
@@ -309,30 +253,17 @@ object Graphs {
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    var e = und0.unionByName(und0.select(col("b").as("a"), col("a").as("b")))
+    val und = und0.unionByName(und0.select(col("b").as("a"), col("a").as("b")))
       .repartition(par, col("a"))
-      .localCheckpoint(eager = false) // the count below materializes it
-    var nEdges = e.count()
-    var it = 0
-    var converged = nEdges == 0L
-    while (!converged && it < maxIter) {
+    // stable edge count == nothing peeled; an edgeless graph runs no round
+    val core = Fixpoint.converge(und, maxIter)(e => Some(e.count()).filter(_ > 0L)) { e =>
       val alive = e.groupBy(col("a").as("id")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("id"))
-      val next = e
-        .join(alive.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
+      e.join(alive.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
         .join(alive.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-        // lazy: the convergence count below is the round's ONE action —
-        // it materializes the checkpoint as a side effect instead of
-        // paying a separate eager-checkpoint job first (r17, §1.2)
-        .localCheckpoint(eager = false)
-      val n2 = next.count()
-      converged = n2 == nEdges
-      nEdges = n2
-      e = next
-      it += 1
     }
-    e.groupBy(col("a").as("id")).agg(count(lit(1)).as("core_deg"))
+    core.groupBy(col("a").as("id")).agg(count(lit(1)).as("core_deg"))
       .filter(col("core_deg") >= k)
   }
 
@@ -403,10 +334,6 @@ object Graphs {
         r.getDouble(0) * r.getDouble(1)
       })
       val renormEvery = math.max(1, (140.0 / (2.0 * math.log10(normBound))).toInt)
-      def reset(df: DataFrame): DataFrame = {
-        val ck = df.localCheckpoint()
-        spark.createDataFrame(ck.rdd, ck.schema)
-      }
       // SPARSE iteration vectors (r17, guide §2.3/§2.4): a node with no
       // out-edges has hub EXACTLY 0 from iteration 1 on (and its initial
       // hub=1 feeds no authority — it has no out-edges), and a node with
@@ -427,7 +354,7 @@ object Graphs {
       // MEAN 1 (matching the cold all-ones scale) and nodes absent from
       // it (post-append arrivals) enter at 1; power iteration from a
       // near-fixpoint direction needs a fraction of the cold count
-      var hub = reset(init match {
+      val start = init match {
         case None => srcNodes.withColumn("hub", lit(1.0))
         case Some(warm) =>
           val w = warm.select(col("id"), col("rank").as("__w"))
@@ -437,8 +364,7 @@ object Graphs {
             .select(col("id"),
               when(col("__w").isNotNull && col("__m") > 0,
                 col("__w") / col("__m")).otherwise(lit(1.0)).as("hub"))
-      })
-      var auth: DataFrame = null
+      }
       def authStep(h: DataFrame): DataFrame =
         e.join(h.withColumnRenamed("id", "src"), "src")
           .groupBy(col("dst").as("id"))
@@ -460,30 +386,27 @@ object Graphs {
       // the agg's shuffle leaves the cached partitioning incompatible
       // with e's 32-way layout, so the exchange stays and the cache
       // build is pure overhead. Checkpoint-per-iteration stands.)
-      var it = 0
-      var lastRenorm = 0
-      while (it < iterations) {
-        auth = authStep(hub)
-        hub = reset(hubStep(auth))
-        it += 1
-        // overflow envelope enforced (r13 advice): block renorm, not
-        // per-step, so the one-job-per-iteration win stands
-        if (it - lastRenorm >= renormEvery && it < iterations) {
-          lastRenorm = it
+      var auth: DataFrame = null
+      val hub = Fixpoint.rounds(start, iterations) { (h, it) =>
+        // overflow envelope enforced (r13 advice): block renorm of the
+        // hub the previous `renormEvery` rounds grew, not per-step, so
+        // the one-job-per-iteration win stands
+        val hr = if (it == 0 || it % renormEvery != 0) h else {
           // driver-side norm (1 double): same one agg job the broadcast
           // form cost, and a zero block norm — a sub-unit-weight graph
           // that DECAYED through the envelope — becomes diagnosable
           // instead of a silent all-zero result (r14 advice)
-          val n = hub.agg(sqrt(sum(col("hub") * col("hub")))).head().getDouble(0)
+          val n = h.agg(sqrt(sum(col("hub") * col("hub")))).head().getDouble(0)
           if (n == 0.0)
             org.slf4j.LoggerFactory.getLogger(getClass).warn(
               s"HITS block norm underflowed to 0 at iteration $it " +
                 s"(renorm block $renormEvery): weights decay faster than the " +
                 "overflow envelope sizes for; hub/authority will return zeros")
-          hub = reset(
-            if (n > 0) hub.select(col("id"), (col("hub") / lit(n)).as("hub"))
-            else hub)
+          Fixpoint.leaf(
+            if (n > 0) h.select(col("id"), (col("hub") / lit(n)).as("hub")) else h)
         }
+        auth = authStep(hr)
+        hubStep(auth)
       }
       // the last auth is read twice below (its norm + the output join):
       // materialize it once — one extra propagation join total, not per
@@ -539,12 +462,6 @@ object Graphs {
     try {
       // every node in `adj` has >= 1 neighbor (isolated nodes can't come
       // from an edge list), so the vote inner-join covers all nodes
-      def reset(df: DataFrame): DataFrame = {
-        val ck = df.localCheckpoint()
-        spark.createDataFrame(ck.rdd, ck.schema)
-      }
-      var labels = reset(adj.select(col("id")).distinct()
-        .withColumn("label", col("id")))
       // majority label, ties -> smallest: max(struct(count, -label))
       // — ids are non-negative, so -label inverts the tie order
       def step(l: DataFrame): DataFrame = adj
@@ -554,17 +471,13 @@ object Graphs {
         .groupBy(col("id"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("id"), (-col("m.nl")).as("label"))
-      var it = 0
-      while (it < iterations) {
-        // the label frame is read ONCE per step, so two iterations
-        // chain lazily with no re-execution — one materialization per
-        // two rounds halves the job count at identical arithmetic
-        val next =
-          if (it + 2 <= iterations) { it += 2; step(step(labels)) }
-          else { it += 1; step(labels) }
-        labels = reset(next)
+      // the label frame is read ONCE per step, so two iterations chain
+      // lazily with no re-execution — one materialization per two
+      // iterations halves the job count at identical arithmetic
+      Fixpoint.rounds(adj.select(col("id")).distinct().withColumn("label", col("id")),
+          (iterations + 1) / 2) { (l, r) =>
+        if (2 * r + 2 <= iterations) step(step(l)) else step(l)
       }
-      labels
     } finally { adj.unpersist(false); () }
   }
 

@@ -275,26 +275,6 @@ object IndexStore {
   def lmUnigrams(spark: SparkSession, sfDir: String): DataFrame =
     TextAnalysis.readLmUnigrams(spark, lmCountsDir(spark, sfDir))
 
-  /** Maintained DSIR feature-count state over documents(text): the raw
-    * corpus and target-domain (source = src0) gram counts the
-    * importance-weighting family serves from ([[Dsir.logWeightsFromCounts]]
-    * / [[Dsir.selectFromCounts]]) — the corpus-sized gram explode runs
-    * once per dataset (plus O(delta) absorbs, [[Dsir.absorbCounts]]),
-    * scoring queries read the vocab-bounded merged tables. */
-  def dsirCountsDir(spark: SparkSession, sfDir: String): String =
-    ensure(artifactDir(sfDir, "dsir_counts")) { d =>
-      val docs = Tables(spark, sfDir, "documents")
-      Dsir.writeCounts(docs, "text", s"$d/raw")
-      Dsir.writeCounts(docs.filter(
-        org.apache.spark.sql.functions.col("source") === "src0"), "text", s"$d/target")
-    }
-
-  def dsirRawCounts(spark: SparkSession, sfDir: String): DataFrame =
-    Dsir.readCounts(spark, s"${dsirCountsDir(spark, sfDir)}/raw")
-
-  def dsirTargetCounts(spark: SparkSession, sfDir: String): DataFrame =
-    Dsir.readCounts(spark, s"${dsirCountsDir(spark, sfDir)}/target")
-
   /** inverted text index over documents(doc_id, text) */
   def inverted(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(ensure(artifactDir(sfDir, "inverted_text")) { d =>

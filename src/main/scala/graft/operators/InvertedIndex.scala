@@ -64,10 +64,6 @@ object InvertedIndex {
   def buildExact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(md5(col(textCol)).as("th"), col(idCol).as("doc_id"))
 
-  /** EQUALS(col, 'value'): doc ids via the exact index. */
-  def equalsMatch(exactIndex: DataFrame, value: String): DataFrame =
-    exactIndex.filter(col("th") === md5(lit(value))).select(col("doc_id")).distinct()
-
   /** Build a JSON path index over a JSON-string column: posting rows
     * (path, vh, doc_id) with vh = md5 of the value at `path` in
     * get_json_object's textual form (reference JsonIndex

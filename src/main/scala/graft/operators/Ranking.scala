@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.core.Fixpoint
 
 /** Pairwise-preference ranking (Bradley & Terry 1952) fitted by Hunter
   * 2004's MM iteration — the aggregation step behind LLM-eval win-rate
@@ -25,9 +26,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: comparisons collapse to the (i, j, n_ij) pair table in
   * ONE hash agg — the only data-sized stage; each iteration is one
   * join of the symmetric pair table (persisted, i-partitioned) against
-  * the current strengths + one per-item agg, localCheckpoint per round
-  * (the [[Graphs]] lineage discipline). Items are the compared
-  * population (models, annotators, suppliers) — never corpus-sized.
+  * the current strengths + one per-item agg, one stats-reset leaf per
+  * round ([[Fixpoint.rounds]]: the strengths join THEMSELVES twice per
+  * round, so checkpoint-preserved stats would compound). Items are the
+  * compared population (models, annotators, suppliers) — never
+  * corpus-sized.
   * Never-winning items converge to strength 0 (their MLE limit).
   */
 object Ranking {
@@ -57,17 +60,6 @@ object Ranking {
     val items = sym.select(col("i").as("id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // each round materializes via localCheckpoint AND re-wraps the
-      // checkpointed RDD in a fresh frame: the strengths join THEMSELVES
-      // twice per round (ci, cj), so plan-size statistics would compound
-      // DOUBLE-exponentially across rounds through checkpoint-preserved
-      // origin stats — by round ~25 the optimizer is multiplying
-      // billion-bit BigIntegers. The re-wrap resets the stats leaf;
-      // the frames are item-sized, so the extra wrap is free.
-      def reset(df: DataFrame): DataFrame = {
-        val ck = df.localCheckpoint()
-        spark.createDataFrame(ck.rdd, ck.schema)
-      }
       // the strengths vector is ITEM-sized (the compared population —
       // models/annotators/suppliers — never corpus-sized, per the
       // operator contract above), so below a hard row gate it rides the
@@ -80,22 +72,19 @@ object Ranking {
       val bcItems = items.count() <= 5000000L
       def strengths(df: DataFrame): DataFrame =
         if (bcItems) broadcast(df) else df
-      var cur = reset(items.withColumn("p", lit(1.0)))
-      var it = 0
-      while (it < iterations) {
+      val cur = Fixpoint.rounds(items.withColumn("p", lit(1.0)), iterations) { (s, _) =>
         val denom = sym
-          .join(strengths(cur.select(col("id").as("i"), col("p").as("pi"))), "i")
-          .join(strengths(cur.select(col("id").as("j"), col("p").as("pj"))), "j")
+          .join(strengths(s.select(col("id").as("i"), col("p").as("pi"))), "i")
+          .join(strengths(s.select(col("id").as("j"), col("p").as("pj"))), "j")
           .groupBy(col("i").as("id"))
           .agg(sum(col("nij") / (col("pi") + col("pj"))).as("d"))
         // denom's key set IS the item set (sym enumerates every item on
         // its i side), so the old items re-join was a no-op — the wins
         // left join alone completes the update
-        cur = reset(denom
+        denom
           .join(strengths(wins), Seq("id"), "left")
           .select(col("id"),
-            (coalesce(col("wi"), lit(0L)).cast("double") / col("d")).as("p")))
-        it += 1
+            (coalesce(col("wi"), lit(0L)).cast("double") / col("d")).as("p"))
       }
       // gauge fixed once: strengths sum to 1 after the loop
       val tot = cur.agg(sum(col("p")).as("__t"))

@@ -75,14 +75,6 @@ object Sampling {
   def maxWeight(pairs: (Column, Double)*): Column =
     greatest(pairs.map { case (c, w) => when(c, lit(w)).otherwise(lit(0.0)) }: _*)
 
-  /** SUM_WEIGHT(cond1: w1, ...) — sum of weights of matching conditions */
-  def sumWeight(pairs: (Column, Double)*): Column =
-    pairs.map { case (c, w) => when(c, lit(w)).otherwise(lit(0.0)) }.reduce(_ + _)
-
-  /** SAMPLE BY fraction (uniform) */
-  def fractionSample(df: DataFrame, fraction: Double, seed: Long = 42L): DataFrame =
-    df.sample(withReplacement = false, fraction, seed)
-
   /** Deterministic uniform in (0, 1]: a 31-ary fold of the md5 hex
     * characters of `key` mod 1000003 — expressible identically in any
     * engine with string md5 (the DuckDB oracle mirrors it with

@@ -90,8 +90,6 @@ object TextAnalysis {
     }
   }
 
-  def langIdPredict(w: Column): Column = langIdFromScores(langScores(w))
-
   // ---- quality scoring ----
   val stopwords: Seq[String] = Seq("the", "a", "of", "and", "to")
 

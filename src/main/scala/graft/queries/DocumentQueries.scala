@@ -2009,8 +2009,8 @@ object DocumentQueries extends QueryModule {
     // without a trained classifier. Exact-gram mode here (full oracle);
     // the hashed-feature mode (bounded state, broadcast count tables)
     // is spec-gated against this one in DedupSpec. Measured r15: the
-    // maintained-counts serving path (logWeightsFromCounts over a
-    // dsir_counts artifact) is ~0.7s SLOWER here than inline — the
+    // maintained-counts serving path (logWeightsFromCounts over
+    // Dsir.writeCounts tables) is ~0.7s SLOWER here than inline — the
     // inline path's persisted gram frame already feeds both counts and
     // scoring, and this corpus's target is a subset of raw, so the
     // artifact saves nothing; it wins only when the target corpus is

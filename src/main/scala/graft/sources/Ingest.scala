@@ -3,8 +3,9 @@ package graft.sources
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Ingest boundaries (SURVEY.md §2.1): from_csv / to_csv / from_parquet /
-  * from_coco (`__init__.pyi:4717-4733`, CSV sink :2500).
+/** Ingest boundaries (SURVEY.md §2.1): from_csv / to_csv / from_coco
+  * (`__init__.pyi:4717-4733`, CSV sink :2500); from_parquet is
+  * `spark.read.parquet` itself.
   *
   * Spark-native: `spark.read` handles schema inference and distributed
   * parse; COCO (one JSON object with images/annotations/categories
@@ -12,9 +13,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * flatten-to-columns shape the reference's `from_coco` produces.
   */
 object Ingest {
-
-  def fromParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   def fromCsv(spark: SparkSession, path: String, header: Boolean = true,
       inferSchema: Boolean = true): DataFrame =

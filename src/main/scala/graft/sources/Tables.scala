@@ -98,8 +98,4 @@ object Tables {
       }
     } else spark.read.options(hadoopOpts).parquet(s"$dir/$name.parquet")
   }
-
-  /** Register every table as a temp view so spark.sql can see them. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }
