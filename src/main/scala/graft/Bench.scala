@@ -35,105 +35,39 @@ import org.apache.spark.sql.SparkSession
   */
 object Headline {
   /** The queries that get multi-rep medians + an isolated echo rep —
-    * the numbers the judge regression-calls on. Retirement policy
-    * (r11 verdict): the list had grown monotonically for five rounds
-    * (18 -> 42) and its 3-rep cost starved the tail; names whose
-    * numbers were flat for 3+ rounds go back to the single-rep full
-    * pass (still measured every round, just not repped). Kept: the
-    * slowest TPC-H shapes, one representative per heavy operator
-    * family, queries with open regression history (q_winsorize), and
-    * the current round's new heavy operators.
-    *
-    * Retired to the tail in r12: q3/q6/q13/q18, q_dedup_embedding,
-    * q_dedup_ngram_jaccard, q_dedup_repeated_spans, q_dedup_chunks,
-    * q_corpus_overlap, q_vec_cosine_topk, q_vec_pca, q_vec_knn_bulk,
-    * q_vec_ann_quantized, q_vec_label_outliers, q_inverted_contains_all,
-    * q_text_langid, q_text_fix_mojibake, q_events_hourly, q_window_rank,
-    * q_funnel, q_phrase_search, q_dsir_weights, q_cdc_latest.
-    *
-    * r13 (echo coverage follows COST — r12 verdict: every query
-    * >= 3.5s gets an echo rep): headlined the measured top-8
-    * (q_graph_hits/triangles/pagerank/ppr/adamic_adar, q_robust_mad,
-    * q_vec_knn_shapley, q_vec_dbscan) — the graph five also carry this
-    * round's GraphStore-artifact change, so their drop needs the
-    * isolated rep; retired an equal count of flat sub-second holdovers
-    * (q1_pricing_summary 0.39, q_bm25_topk 0.41, q_vec_ann_topk 0.51,
-    * q_rolling_window 0.38, q_resample_fill 0.47, q_text_entropy 0.21,
-    * q_kn_perplexity 0.78 — flat since its maintained-counts fix,
-    * q_corpus_overlap_sketch 0.80).
-    */
+    * the regression-callable numbers. Policy is cost-follows-echo:
+    * queries >= 3.5 s get an echo rep; flat sub-second names retire to
+    * the tail (still measured every run, just not repped), because the
+    * list's 3-rep cost otherwise starves the tail. */
   val names: Set[String] = Set(
-    // slowest TPC-H shapes (q9/q21 are the suite-pressure bellwethers)
+    // slowest TPC-H shapes (q9/q21 are the suite-pressure bellwethers;
+    // constant per-run overhead of ~0.2 s can move their head/echo ratio
+    // by > 30%, so read it as a diagnostic only)
     "q9_product_profit", "q21_waiting_suppliers",
     // dedup family: hamming self-join, drop-everywhere boilerplate,
-    // Bloom-prefiltered decontamination (LSH band join retired r14 —
-    // flat at 0.98s)
+    // Bloom-prefiltered decontamination
     "q_dedup_simhash_hamming", "q_dedup_boilerplate",
     "q_decontaminate_bloom",
     // vector family: IVF-PQ probe + the two heavy audits
     "q_vec_ann_pq", "q_vec_knn_shapley", "q_vec_dbscan",
-    // (q_hybrid_search retired r15 — flat at 0.69s since the fused route)
     // LM scoring family: CCNet buckets (scores from maintained counts)
     "q_ccnet_buckets",
-    // graph family — the bench's top cost block, all now served from
-    // the persisted GraphStore artifact
+    // graph family — the bench's top cost block, all served from the
+    // persisted GraphStore artifact
     "q_graph_hits", "q_graph_triangles", "q_graph_pagerank", "q_graph_ppr",
     "q_graph_adamic_adar", "q_graph_walks", "q_graph_node2vec",
     // exact-quantile robust stats + the open regression history
     "q_robust_mad", "q_winsorize",
-    // r13 addition: the round's new heavy single (comparison self-join
-    // + 8 MM rounds, ~4s) tracks from day one per the cost-follows-echo
-    // policy
-    "q_rank_bradley_terry",
-    // r14 rotation (r13 verdict #5): q_theil_sen (3.74s) and
-    // q_graph_kcore (3.61s) crossed the 3.5s echo line unheadlined —
-    // in; retired the two sub-second holdovers q_dedup_minhash_lsh
-    // (0.98s) and q_tql_maxsim_routed (0.93s). q_semantic_dedup joined
-    // the heavies (4.1s) when its threshold moved to the load-bearing
-    // 0.4 for the full-oracle flip — cost-follows-echo puts it here.
-    "q_theil_sen", "q_graph_kcore", "q_semantic_dedup",
-    // r15 rotation (r14 verdict #7): q_dsir_sample (3.41s) and
-    // q_wordpiece_encode (2.30s) are the largest unechoed steady-state
-    // tails — in; retired q_hybrid_search (flat at 0.69s since its r14
-    // fused-route win).
-    //
-    // Echo-noise annotation (r15): the sub-second bellwethers (q9, q21)
-    // can show |head-echo| > 30% purely from constant per-run overhead
-    // (~0.2s of scheduler/cache-sweep noise dominates a 0.5s query) —
-    // read their RATIOS as diagnostics only; the >2s headliners are the
-    // regression-callable numbers.
-    //
-    // Cross-round comparability (r15): with the full-scale prewarm in
-    // place, head medians now price fresh-JVM STEADY STATE (TimeOne
-    // reps 2-3). A few r14 heads were flattered by favorable suite-
-    // start state and tick UP in r15 without any code change —
-    // verified: q_graph_triangles r14 head 2.77 vs TimeOne steady 3.6
-    // (r15 head 3.96, echo 4.86), q_robust_mad r14 2.01 vs r15 2.53.
-    // Their r14 echoes (4.24 / 3.73) already showed the honest number.
-    //
-    // r16 TimeOne verification of the remaining r15 head regressions
-    // (r15 verdict #1) — all are honest steady state, none is a prewarm
-    // eviction: q_winsorize head 2.80 vs TimeOne steady 1.66-2.37
-    // (echo 2.53 corroborates; the r14 1.49 was the flattered number);
-    // q_wordpiece_merges head 2.20 vs steady 2.60-3.40 (head is the
-    // FAST side); q_unigram_encode head 1.04 vs steady 0.98-1.61.
-    // q_wordpiece_encode (the r15 isolation-band outlier, delta 1.40):
-    // TimeOne steady 2.17-3.22 matches its 3.09 head — the 4.33s echo
-    // was late-suite GC/code-cache pressure on the broadcast-trie
-    // segmentation, a documented diagnostic-only exception (see
-    // iso_annotations in bench_out.json).
-    "q_dsir_sample", "q_wordpiece_encode",
-    // r16 rotation: q_text_compression_exact (new this round, 3.7s
-    // TimeOne steady after its lambda-recompute fix — the distinct
-    // 8-char-window scan is the suite's heaviest map-side text metric)
-    // crosses the 3.5s echo line — in per cost-follows-echo.
-    "q_text_compression_exact")
+    // heavy singles past the 3.5 s echo line
+    "q_rank_bradley_terry", "q_theil_sen", "q_graph_kcore", "q_semantic_dedup",
+    "q_dsir_sample", "q_wordpiece_encode", "q_text_compression_exact")
 
   /** Documented isolation-band exceptions: headliners whose echo (post-
     * suite) rep is known to carry late-suite JVM pressure their fresh
     * steady state does not — the head median is the regression-callable
     * number; the echo ratio is diagnostic-only. Keyed by query, value =
-    * the TimeOne evidence. Lands in bench_out.json as iso_annotations. */
+    * the fresh-JVM steady-state evidence. Lands in bench_out.json as
+    * iso_annotations. */
   val isoAnnotations: Map[String, String] = Map(
     "q_wordpiece_encode" -> ("fresh TimeOne steady 2.17-3.22s matches head; " +
       "echo carries late-suite GC/code-cache pressure on the broadcast-trie " +
@@ -141,24 +75,36 @@ object Headline {
 }
 
 object Bench {
-  private def median(xs: Seq[Double]): Double = {
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) 0.0
     else if (s.size % 2 == 1) s(s.size / 2)
     else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
   }
 
+  /** The one timed action: seconds for a noop-format write of query
+    * `name`, after dropping every cached and persisted frame. Bench and
+    * [[Probe]] both measure through this, so their numbers compare.
+    * Throws what the query throws. */
+  def timed(spark: SparkSession, sfDir: String, name: String): Double = {
+    // drop persisted frames from the previous query: leftover cache
+    // blocks from 100+ earlier queries otherwise evict-churn the block
+    // manager and couple one query's timing to another's footprint.
+    // clearCache only drops CATALOG-cached Datasets; operators'
+    // df.persist()/localCheckpoint leftovers live in the block manager
+    // until GC'd, so sweep those explicitly too (r13 verdict #1: the
+    // accumulated blocks ran late-suite iterative heavies at ~2x their
+    // fresh-JVM warm time)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    val t0 = System.nanoTime()
+    SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
-    graft.core.FastLocalDir.install()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     val bench0 = System.nanoTime()
@@ -278,27 +224,13 @@ object Bench {
       phase("full-scale headliner prewarm done")
     }
 
-    def run1(name: String): Option[Double] = {
-      // drop persisted frames from the previous query: leftover cache
-      // blocks from 100+ earlier queries otherwise evict-churn the block
-      // manager and couple one query's timing to another's footprint.
-      // clearCache only drops CATALOG-cached Datasets; operators'
-      // df.persist()/localCheckpoint leftovers live in the block manager
-      // until GC'd, so sweep those explicitly too (r13 verdict #1: the
-      // accumulated blocks ran late-suite iterative heavies at ~2x their
-      // fresh-JVM warm time)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
+    def run1(name: String): Option[Double] =
+      try Some(timed(spark, sfDir, name))
+      catch { case e: Throwable =>
         errors += s"query:$name"
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         None
       }
-    }
 
     // host-health sentinel: a fixed cheap scan-agg shape, median of 3 —
     // it measures the machine, not the library, so any large swing
@@ -346,12 +278,12 @@ object Bench {
     // code-cache churn) priced iterative heavies at ~2x their fresh-JVM
     // warm time (judge-measured: q_graph_hits 8.2s suite vs 3.8s warm).
     // For a query whose first rep lands at/above the warm floor the
-    // first rep is demoted to an UNTIMED JIT-warm rep (fresh-JVM TimeOne
-    // shows rep1 carrying 2-3x of one-time compile on exactly these
+    // first rep is demoted to an UNTIMED JIT-warm rep (fresh-JVM Probe
+    // runs show rep1 carrying 2-3x of one-time compile on exactly these
     // shapes), so the median prices warm steady state — the number
-    // TimeOne reports and the judge regression-calls on. Coverage stays
-    // unconditional: every headliner keeps >= 1 measured rep even with
-    // a blown budget.
+    // Probe's later reps report and regressions are called on.
+    // Coverage stays unconditional: every headliner keeps >= 1 measured
+    // rep even with a blown budget.
     val warmRepFloorSec = sys.env.getOrElse("SPARK_GRAFT_WARM_REP_FLOOR", "3.0").toDouble
     val reps = headlineNames.map(n =>
       n -> scala.collection.mutable.ArrayBuffer.empty[Double]).toMap
@@ -426,7 +358,7 @@ object Bench {
 
     // post-suite ECHO pass: one more rep per headliner AFTER the whole
     // suite has run — the block manager is quiet and nothing else is
-    // churning, so these reps approximate a BenchOne isolated re-time.
+    // churning, so these reps approximate an isolated Probe re-time.
     // Every round so far burned judge time re-adjudicating phantom
     // "regressions" that were in-suite pressure (up to 2x drift on
     // untouched code); the artifact carries the suite-median / echo

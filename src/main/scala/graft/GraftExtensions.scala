@@ -11,9 +11,9 @@ import graft.functions._
   * functions (`deeplake_cosine_similarity`, `deeplake_maxsim`, ... —
   * `cpp/deeplake_pg/index_search.cpp:248-259,736`).
   *
-  * Activate with:
+  * Activate with the session conf:
   * {{{
-  *   SparkSession.builder().config("spark.sql.extensions", "graft.GraftExtensions")
+  *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   * after which `spark.sql("SELECT cosine_similarity(a, b) ...")` plans the
   * codegen'd Catalyst expressions directly (no UDF boundary).

@@ -42,11 +42,6 @@ object EmbeddingOps {
       .setK(k).fit(prep(emb, idCol, vecCol)))
   }
 
-  /** fit + transform in one call */
-  def pcaReduce(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int): DataFrame =
-    fitPca(emb, idCol, vecCol, k).transform(emb, idCol, vecCol)
-
   /** Per-label element-wise mean vectors (class centroids — prototype
     * classifiers, per-class drift monitoring, cluster seeding).
     * MLlib's Summarizer is the aggregation: a FIXED-WIDTH d-double

@@ -516,7 +516,7 @@ object Graphs {
       // anti-join BEFORE the aggregation (r17: REVERT of the r16
       // agg-first reorder — VERDICT #2): the reorder was kept on a
       // map-side-combine theory with no local evidence, and a clean-
-      // window re-measure shows it strictly worse (ProbeOne steady
+      // window re-measure shows it strictly worse (Probe steady
       // 5.4-5.7s wall / 6.8-8.6s jobsum vs ~3.8s r15 wall — on the
       // co-purchase bench graph most wedge pairs ARE existing edges,
       // so aggregating first does strictly more aggregation work than

@@ -41,17 +41,58 @@ object MaterializedAgg {
     IncrementalAgg.readout(state(spark, dir, keys), keys)
 
   /** Ingest-time maintenance: every micro-batch folds into the view as
-    * one O(batch) state-segment append — the Structured Streaming twin
-    * of [[refresh]], same files, same readers. */
+    * one O(batch) state segment — the Structured Streaming twin of
+    * [[refresh]], same files, same readers. `foreachBatch` is
+    * at-least-once and sum/count state is not idempotent, so each
+    * segment is keyed by [[graft.streaming.Lsm.segmentKey]]: a batch
+    * replayed after a crash replaces its first delivery's
+    * `part-<key>-*` files instead of landing twice. */
   def maintain(stream: DataFrame, keys: Seq[String], valueCol: String,
       dir: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) refresh(batch, keys, valueCol, dir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) {
+          val key = graft.streaming.Lsm.segmentKey(checkpoint, batchId)
+          val stage = s"$dir.batch-$key"
+          IncrementalAgg.state(batch, keys, valueCol).write.mode("overwrite").parquet(stage)
+          swapSegment(java.nio.file.Paths.get(dir), java.nio.file.Paths.get(stage), key)
+        }
       }
       .start()
+
+  /** Replace segment `key` with the staged files: drop every
+    * `part-<key>-*` file, move the staged `part-*` files in under that
+    * prefix, drop the staging dir. A crash anywhere leaves the batch
+    * uncommitted, and its replay redoes the whole swap. Same monitor as
+    * [[compact]], so a compaction never snapshots a half-swapped key. */
+  private def swapSegment(root: java.nio.file.Path, stage: java.nio.file.Path,
+      key: String): Unit = synchronized {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    def files(d: java.nio.file.Path, prefix: String) = {
+      val l = Files.list(d)
+      try l.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toList
+      finally l.close()
+    }
+    val prefix = s"part-$key-"
+    Files.createDirectories(root)
+    files(root, prefix).foreach(Files.deleteIfExists(_))
+    files(stage, "part-").foreach(p =>
+      Files.move(p, root.resolve(prefix + p.getFileName.toString.stripPrefix("part-"))))
+    deleteTree(stage)
+  }
+
+  /** delete a directory and everything under it, if it exists */
+  private def deleteTree(d: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.isDirectory(d)) {
+      import scala.jdk.CollectionConverters._
+      val w = java.nio.file.Files.walk(d)
+      try w.iterator().asScala.toSeq.sortBy(-_.getNameCount)
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+      finally w.close()
+    }
 
   /** Fold the accumulated segments back to one (bounds read cost).
     * Concurrent-append-safe: the segment FILES are snapshotted first
@@ -131,13 +172,7 @@ object MaterializedAgg {
       tmps.foreach { t =>
         val first = new String(java.nio.file.Files.readAllBytes(t), "UTF-8")
           .split("\n").headOption.getOrElse("")
-        val stage = java.nio.file.Paths.get(first)
-        if (first.nonEmpty && java.nio.file.Files.isDirectory(stage)) {
-          val sw = java.nio.file.Files.walk(stage)
-          try sw.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-          finally sw.close()
-        }
+        if (first.nonEmpty) deleteTree(java.nio.file.Paths.get(first))
         java.nio.file.Files.deleteIfExists(t)
       }
     }
@@ -164,12 +199,7 @@ object MaterializedAgg {
       }
     }
     lines.tail.foreach(f => Files.deleteIfExists(Paths.get(f)))
-    if (Files.isDirectory(tmp)) {
-      val tw = Files.walk(tmp)
-      try tw.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-        .foreach(Files.deleteIfExists(_))
-      finally tw.close()
-    }
+    deleteTree(tmp)
     Files.deleteIfExists(journal)
   }
 }

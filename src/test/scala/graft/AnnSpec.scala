@@ -9,11 +9,7 @@ import graft.operators.AnnIndex
   * (postgres/tests/py_tests/test_embedding_quality.py: KNN on seeded
   * random vectors must beat a minimum pass count vs exact results). */
 class AnnSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   private def emb = graft.sources.Tables(spark, "/root/testdata/sf0.001", "embeddings")
 

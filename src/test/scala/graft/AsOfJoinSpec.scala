@@ -10,14 +10,7 @@ import graft.operators.AsOfJoin
   * unmatched lefts drop (inner) or carry null (outer). */
 class AsOfJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = {
-    graft.core.FastLocalDir.install()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  private lazy val spark: SparkSession = graft.core.Session.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -9,11 +9,7 @@ import graft.operators.{Integrity, InfoTheory, Profiling}
   * source divergence) on hand-built frames where the right answer is
   * computable by inspection. */
 class AuditSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
   import spark.implicits._
 
   test("keyProfile: uniform keys report uniformity ~1 and exact top shares") {

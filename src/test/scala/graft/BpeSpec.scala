@@ -9,11 +9,7 @@ import graft.operators.Bpe
   * algorithm (word-frequency BPE, leftmost-first merging, argmax
   * tie-break (count desc, left asc, right asc)). */
 class BpeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   /** single-node reference: plain Scala collections, no Spark */
   private def referenceBpe(corpus: Seq[String], numMerges: Int): Seq[(String, String, Long)] = {

@@ -14,11 +14,7 @@ import graft.plans.StatsCatalog
   * its true MCV frequency (no hint — a 1/ndv guess would have wrongly
   * broadcast 90% of the table). */
 class CboSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   private lazy val tmp = {
     GraftExtensions.register(spark)

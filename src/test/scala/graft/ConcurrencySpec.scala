@@ -16,13 +16,7 @@ import org.scalatest.BeforeAndAfterAll
 class ConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("concurrency-spec")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.core.Session.local(8)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -34,11 +34,7 @@ import graft.operators.EmbeddingOps
   *   GRAFT_DBSCAN_SCALE=1 sbt "testOnly graft.DbscanScaleSpec"
   */
 class DbscanScaleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(32)
 
   private def scaleTest(name: String)(body: => Unit): Unit =
     if (sys.env.contains("GRAFT_DBSCAN_SCALE")) test(name)(body)

@@ -9,11 +9,7 @@ import graft.operators.EventAnalytics
   * oracles can't explain — strict ordering, offset-0 cohort identity,
   * predecessor-distance suppression — pinned on hand-built sequences. */
 class EventAnalyticsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   private def ts(min: Int): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")

@@ -14,11 +14,7 @@ import graft.operators.{Dedup, Graphs, Ranking}
   * checkpoint, a convergence probe, a lost lazy leaf) shows up here as a
   * changed difference between k and k+1 rounds. */
 class FixpointSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   /** id of a fresh one-task job. Job ids are handed out in submission
     * order, so the jobs between two markers are exactly the jobs the

@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Graphs
 
 class GraphsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   /** independent driver-side dense power iteration with the same
     * semantics (weighted parallel edges, uniform dangling spread) */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.operators.IncrementalAgg
+import graft.operators.{IncrementalAgg, MaterializedAgg}
 import graft.sources.Tables
 
 /** The maintained-aggregate contract: merging any batching of deltas
@@ -13,14 +13,7 @@ import graft.sources.Tables
   * to float tolerance). */
 class IncrementalAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = {
-    graft.core.FastLocalDir.install()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  private lazy val spark: SparkSession = graft.core.Session.local(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -48,7 +41,6 @@ class IncrementalAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("materialized view: O(delta) refreshes equal a full recompute; compaction folds") {
-    import graft.operators.MaterializedAgg
     val spark2 = spark
     import spark2.implicits._
     val dir = java.nio.file.Files.createTempDirectory("matview").toString + "/v"
@@ -99,7 +91,6 @@ class IncrementalAggSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("materialized view: interrupted compaction is replayed, never double-counted") {
-    import graft.operators.MaterializedAgg
     val spark2 = spark
     import spark2.implicits._
     val dir = java.nio.file.Files.createTempDirectory("matcrash").toString + "/v"
@@ -139,26 +130,50 @@ class IncrementalAggSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(readout() === truth)
   }
 
-  test("streaming view maintenance: micro-batches fold into the same state files") {
-    import graft.operators.MaterializedAgg
+  /** three 100-row input files under `tmp/in`, streamed one per
+    * micro-batch into the view at `tmp/view` */
+  private def streamInput(): String = {
     val spark2 = spark
     import spark2.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("matstream").toString
-    val keys = Seq("g")
-    // three input files -> micro-batches
     (0 until 3).foreach { b =>
       (b * 100 until (b + 1) * 100).map(i => (s"g${i % 4}", i.toDouble))
         .toDF("g", "x").write.mode("append").parquet(s"$tmp/in")
     }
+    tmp
+  }
+
+  private def runStream(tmp: String): Unit = {
     val q = MaterializedAgg.maintain(
       spark.readStream.schema("g STRING, x DOUBLE")
         .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in"),
-      keys, "x", s"$tmp/view", s"$tmp/ck")
+      Seq("g"), "x", s"$tmp/view", s"$tmp/ck")
     q.processAllAvailable(); q.stop()
-    val got = MaterializedAgg.read(spark, s"$tmp/view", keys)
+  }
+
+  private def streamCounts(tmp: String): Map[String, Long] =
+    MaterializedAgg.read(spark, s"$tmp/view", Seq("g"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val want = (0 until 300).groupBy(i => s"g${i % 4}")
-      .map { case (k, v) => k -> v.size.toLong }
-    assert(got === want, "streamed view must equal the batch truth")
+
+  private val streamTruth = (0 until 300).groupBy(i => s"g${i % 4}")
+    .map { case (k, v) => k -> v.size.toLong }
+
+  test("streaming view maintenance: micro-batches fold into the same state files") {
+    val tmp = streamInput()
+    runStream(tmp)
+    assert(streamCounts(tmp) === streamTruth, "streamed view must equal the batch truth")
+  }
+
+  test("streaming view maintenance: a replayed micro-batch is not double-counted") {
+    val tmp = streamInput()
+    runStream(tmp)
+    // forget the last batch's commit, as a crash between the sink write
+    // and the commit does: the restarted query replays that batch
+    val commits = new java.io.File(s"$tmp/ck/commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    Seq(s"$last", s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+    runStream(tmp)
+    assert(new java.io.File(commits, s"$last").exists, "the batch was replayed and committed")
+    assert(streamCounts(tmp) === streamTruth, "a replayed batch must not land twice")
   }
 }

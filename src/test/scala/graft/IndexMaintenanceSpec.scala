@@ -10,11 +10,7 @@ import graft.operators.{AnnIndex, Bm25, InvertedIndex}
   * rebuild. Mirrors the reference's WAL-sync index maintenance
   * (`cpp/deeplake_pg/sync_worker.cpp`). */
 class IndexMaintenanceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   private val dir = "/root/testdata/sf0.001"
   private def docs = graft.sources.Tables(spark, dir, "documents")

@@ -16,12 +16,7 @@ import graft.plans.IndexCatalog
 class IndexRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val docsPath = "/root/testdata/sf0.001/documents.parquet"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("index-rewrite-spec")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.core.Session.local(4)
 
   override def afterAll(): Unit = { IndexCatalog.clear(); spark.stop() }
 

@@ -14,12 +14,7 @@ import graft.sources.Ingest
   * explode into relational tables. */
 class IngestSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("ingest-spec")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.core.Session.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

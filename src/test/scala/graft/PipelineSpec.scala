@@ -12,11 +12,7 @@ import graft.operators.{Dedup, TextAnalysis => TA}
   * the actual pipeline a pretraining run executes, asserting the
   * invariants each stage must preserve for the next. */
 class PipelineSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   private val dir = "/root/testdata/sf0.001"
 

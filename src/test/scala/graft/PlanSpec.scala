@@ -12,12 +12,7 @@ import org.scalatest.BeforeAndAfterAll
 class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("plan-spec")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.core.Session.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

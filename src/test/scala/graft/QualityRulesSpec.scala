@@ -9,11 +9,7 @@ import graft.operators.{TextAnalysis => TA}
   * document crafted to violate exactly that rule, and a clean document
   * must pass all of them. */
 class QualityRulesSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   private val clean =
     "the quick brown fox jumps over a lazy dog and then runs far away " +

@@ -22,11 +22,7 @@ import graft.operators.Bm25
   *   GRAFT_SEARCH_SCALE=1 sbt "testOnly graft.SearchScaleSpec"
   */
 class SearchScaleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(32)
 
   private def scaleTest(name: String)(body: => Unit): Unit =
     if (sys.env.contains("GRAFT_SEARCH_SCALE")) test(name)(body)

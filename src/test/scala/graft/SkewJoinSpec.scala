@@ -12,14 +12,7 @@ import graft.sources.Tables
   * forms — salt only changes the partitioning of the work. */
 class SkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = {
-    graft.core.FastLocalDir.install()
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  private lazy val spark: SparkSession = graft.core.Session.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

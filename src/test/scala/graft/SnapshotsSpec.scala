@@ -13,12 +13,7 @@ import graft.sources.Snapshots
 /** Dataset lifecycle: append/commit, time-travel, delete, update, DDL. */
 class SnapshotsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("snapshots-spec")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.core.Session.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -25,12 +25,7 @@ import graft.operators.Resampling
   * Measured numbers print to stderr for the round notes.
   */
 class StatsScaleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(32)
 
   private def scaleTest(name: String)(body: => Unit): Unit =
     if (sys.env.contains("GRAFT_STATS_SCALE")) test(name)(body)

@@ -7,11 +7,7 @@ import graft.sources.Multimodal
 import graft.streaming.EventStream
 
 class StreamingAndMultimodalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -18,13 +18,7 @@ import graft.sources.Tables
   */
 class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("tables-spec")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.core.Session.local(4)
 
   override def afterAll(): Unit = spark.stop()
 

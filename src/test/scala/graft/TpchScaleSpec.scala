@@ -30,12 +30,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Measured numbers print to stderr for the round notes.
   */
 class TpchScaleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(32)
 
   private val dir = "/root/testdata/sf0.1"
 

@@ -13,12 +13,7 @@ import graft.core.Types
   * parquet round-trip survival. */
 class TypesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .appName("types-spec")
-    .getOrCreate()
+  private lazy val spark: SparkSession = graft.core.Session.local(2)
 
   override def afterAll(): Unit = spark.stop()
 

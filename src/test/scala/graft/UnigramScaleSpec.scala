@@ -30,11 +30,7 @@ import graft.operators.Unigram
   * Measured numbers print to stderr for the round notes.
   */
 class UnigramScaleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(32)
 
   private def scaleTest(name: String)(body: => Unit): Unit =
     if (sys.env.contains("GRAFT_UNIGRAM_SCALE")) test(name)(body)

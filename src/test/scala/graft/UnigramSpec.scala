@@ -9,11 +9,7 @@ import graft.operators.Unigram
   * cover every word, and be run-to-run stable at the published
   * precision. */
 class UnigramSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   /** corpus whose words are concatenations of a small morpheme set —
     * the structure a subword model exists to discover */

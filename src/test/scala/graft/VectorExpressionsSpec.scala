@@ -6,11 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.gf
 
 class VectorExpressionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   private def df2(a: Array[Float], b: Array[Float]) = {
     import spark.implicits._

@@ -8,11 +8,7 @@ import graft.operators.Sampling
 /** Deterministic weighted per-group sampling: reservoir-equivalent
   * distribution from hash-derived uniforms. */
 class WeightedSampleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
 
   test("per-group sizes, determinism across partitionings, zero-weight exclusion") {
     import spark.implicits._

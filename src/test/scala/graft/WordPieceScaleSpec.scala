@@ -24,11 +24,7 @@ import graft.operators.WordPiece
   *   GRAFT_WORDPIECE_SCALE=1 sbt "testOnly graft.WordPieceScaleSpec"
   */
 class WordPieceScaleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(32)
 
   private def scaleTest(name: String)(body: => Unit): Unit =
     if (sys.env.contains("GRAFT_WORDPIECE_SCALE")) test(name)(body)

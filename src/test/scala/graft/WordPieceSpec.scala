@@ -9,11 +9,7 @@ import graft.operators.WordPiece
   * likelihood-vs-count scoring law that separates WordPiece from BPE,
   * and the greedy-encode laws (longest match, losslessness, [UNK]). */
 class WordPieceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.core.Session.local(4)
   import spark.implicits._
 
   /** single-node reference: same score, same tie-break, plain maps */
