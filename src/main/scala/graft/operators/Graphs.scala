@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 import graft.core.Fixpoint
 
 /** Distributed graph analytics over plain edge DataFrames — the
@@ -35,11 +36,23 @@ object Graphs {
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).cast("double").as("w"))
   }
 
+  /** The simple undirected graph of `edges`: each unordered pair once
+    * as (a, b) with a < b — direction, parallel edges and self-loops
+    * dropped. The edge prep of [[kCore]], [[labelPropagation]],
+    * [[adamicAdar]] and [[triangles]]. */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
+        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
   /** Damped PageRank by power iteration: rank = (1−d)/n + d·(Σ
     * incoming rank·w/outW + danglingMass/n), with parallel edges
     * collapsed to weights and dangling nodes (no out-edges)
     * redistributing their rank uniformly — the standard formulation,
-    * so ranks sum to exactly 1 every iteration. Returns (id, rank).
+    * so ranks sum to exactly 1 every iteration. Returns (id, rank);
+    * an empty edge list returns zero rows.
     *
     * Deterministic: no randomness anywhere; the spec gates the result
     * against an independent driver-side dense power iteration.
@@ -62,53 +75,107 @@ object Graphs {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 20, damping: Double = 0.85,
       weightCol: Option[String] = None,
+      init: Option[DataFrame] = None): DataFrame =
+    dampedRank(edges, srcCol, dstCol, weightCol, None, iterations, damping, init) { nodes =>
+      val n = nodes.count().toDouble
+      if (n == 0) None else Some((nodes, lit(1.0 / n)))
+    }
+
+  /** Personalized PageRank (the random walker teleports to the SEED set
+    * instead of uniformly — Page et al. 1999 §6; the standard relevance
+    * propagation for "expand this curated set" data selection and
+    * recommendation): rank = (1−d)·p + d·(Σ incoming share·rank +
+    * danglingMass·p), p = uniform over `seeds`, start = p. Mass
+    * conserves exactly (ranks sum to 1 every iteration, spec-gated) and
+    * on a disconnected graph stays entirely in the seeds' components.
+    * An empty seed set is rejected.
+    *
+    * Plan shape = [[pageRank]] (the same kernel with p as the teleport):
+    * per iteration one src-keyed join + one dst-keyed partial agg,
+    * dangling mass as an in-plan broadcast 1-row frame, one
+    * materialization per iteration ([[Fixpoint.rounds]]) — no other
+    * driver action. `init` warm-starts as in [[pageRank]], absent nodes
+    * entering at their personalization value.
+    * Deterministic → the fixed iteration count unrolls into a FULL
+    * DuckDB oracle. Returns (id, rank). */
+  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
+      seeds: DataFrame, seedCol: String, iterations: Int = 6,
+      damping: Double = 0.85, weightCol: Option[String] = None,
       init: Option[DataFrame] = None): DataFrame = {
+    val seedIds = seeds.select(col(seedCol).cast("long").as("id")).distinct()
+    dampedRank(edges, srcCol, dstCol, weightCol, Some(seedIds), iterations, damping, init) {
+      nodes =>
+        val nSeeds = seedIds.count().toDouble
+        require(nSeeds > 0, "seed set is empty")
+        // the personalization vector: 1/|S| on seeds, 0 elsewhere — a
+        // node-keyed column, not a broadcast (seeds can be large)
+        val p = nodes
+          .join(seedIds.withColumn("__p", lit(1.0 / nSeeds)), Seq("id"), "left")
+          .select(col("id"), coalesce(col("__p"), lit(0.0)).as("p"))
+        Some((p, col("p")))
+    }
+  }
+
+  /** The damped rank propagation behind [[pageRank]] and
+    * [[personalizedPageRank]] — one sparse matrix × vector product plus
+    * a teleport term per iteration: rank = (1−d)·t + d·(Σ incoming
+    * share·rank + danglingMass·t), t the caller's teleport.
+    *
+    * The collapsed edges, their per-source out-weights, the node set
+    * (edge endpoints plus `extraIds`, id-partitioned) and the
+    * share-annotated edges (src-partitioned) persist once and are
+    * released on exit. `teleport` gets the persisted node set and answers the frame
+    * the iteration runs over (`id` plus whatever columns t reads) and
+    * t itself, or None for an empty graph, which returns zero rows.
+    * The rank frame carries those columns, a has-out-edges flag `__ho`
+    * and `rank`; the start is t, or the warm `init` with absent nodes
+    * at t, renormalized to sum 1. */
+  private def dampedRank(edges: DataFrame, srcCol: String, dstCol: String,
+      weightCol: Option[String], extraIds: Option[DataFrame], iterations: Int,
+      damping: Double, init: Option[DataFrame])(
+      teleport: DataFrame => Option[(DataFrame, Column)]): DataFrame = {
     require(iterations >= 1, "need at least one iteration")
     require(damping >= 0 && damping <= 1, s"damping must be in [0,1]: $damping")
-    val spark = edges.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val e = collapseWeighted(edges, srcCol, dstCol, weightCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
+    val par = edges.sparkSession.sparkContext.defaultParallelism
+    val e = collapseWeighted(edges, srcCol, dstCol, weightCol).persist(MEMORY_AND_DISK)
+    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow")).persist(MEMORY_AND_DISK)
+    val ids = e.select(col("src").as("id")).unionByName(e.select(col("dst").as("id")))
+    val nodes = extraIds.fold(ids)(ids.unionByName(_))
       .distinct()
       .repartition(par, col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // edges annotated once with the sender's out-weight share
     val ej = e.join(outW, "src")
       .select(col("src"), col("dst"), (col("w") / col("ow")).as("share"))
       .repartition(par, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = nodes.count().toDouble
-      if (n == 0) nodes.withColumn("rank", lit(0.0))
-      else {
+      .persist(MEMORY_AND_DISK)
+    try teleport(nodes) match {
+      case None => nodes.withColumn("rank", lit(0.0))
+      case Some((base, t)) =>
         // the rank frame carries a has-out-edges flag (__ho) so the per-
         // iteration dangling mass is a map-side filter + 1-row aggregate
         // instead of an anti-join that re-exchanges the whole rank vector
         // every step (one exchange fewer per iteration; identical sum —
         // the filtered rows ARE the anti-join's rows)
-        val hasOut = outW.select(col("src").as("id"), lit(true).as("__ho"))
+        val flagged = base.join(outW.select(col("src").as("id"), lit(true).as("__ho")),
+          Seq("id"), "left")
+        val carried = flagged.columns.toSeq.map(col)
         val start = init match {
-          case None => nodes.join(hasOut, Seq("id"), "left")
-            .withColumn("rank", lit(1.0 / n))
+          case None => flagged.withColumn("rank", t)
           case Some(warm) =>
-            // absent ids (new nodes since the ranks were saved) start
-            // uniform; renormalize so the vector sums to exactly 1
-            val filled = nodes
+            // absent ids (new nodes since the ranks were saved) start at
+            // t; renormalize so the vector sums to exactly 1
+            val filled = flagged
               .join(warm.select(col("id"), col("rank").as("__w")), Seq("id"), "left")
-              .select(col("id"), coalesce(col("__w"), lit(1.0 / n)).as("rank"))
+              .select(carried :+ coalesce(col("__w"), t).as("rank"): _*)
             val tot = filled.agg(sum(col("rank")).as("__t"))
             filled.crossJoin(broadcast(tot))
-              .join(hasOut, Seq("id"), "left")
-              .select(col("id"), col("__ho"), (col("rank") / col("__t")).as("rank"))
+              .select(carried :+ (col("rank") / col("__t")).as("rank"): _*)
         }
-        // mass parked on dangling nodes (no out-edges) spreads
-        // uniformly — computed as a broadcast 1-ROW FRAME riding the
-        // iteration's own plan, never a driver-side action (per-
-        // iteration collects double the job count)
+        // mass parked on dangling nodes (no out-edges) spreads by t —
+        // computed as a broadcast 1-ROW FRAME riding the iteration's own
+        // plan, never a driver-side action (per-iteration collects
+        // double the job count)
         def step(r: DataFrame): DataFrame = {
           val dangling = r.filter(col("__ho").isNull)
             .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dang"))
@@ -120,108 +187,14 @@ object Graphs {
               r.select(col("id").as("src"), col("rank")), "src")
             .groupBy(col("dst").as("id"))
             .agg(sum(col("share") * col("rank")).as("__in"))
-          r.select(col("id"), col("__ho")).join(contribs, Seq("id"), "left")
+          r.select(carried: _*).join(contribs, Seq("id"), "left")
             .crossJoin(broadcast(dangling))
-            .select(col("id"), col("__ho"),
-              (lit((1.0 - damping) / n) +
-                lit(damping) * (coalesce(col("__in"), lit(0.0)) +
-                  col("__dang") / n)).as("rank"))
+            .select(carried :+ (lit(1.0 - damping) * t +
+              lit(damping) * (coalesce(col("__in"), lit(0.0)) +
+                col("__dang") * t)).as("rank"): _*)
         }
         Fixpoint.rounds(start, iterations)((r, _) => step(r))
           .select(col("id"), col("rank"))
-      }
-    } finally {
-      ej.unpersist(false); e.unpersist(false)
-      outW.unpersist(false); nodes.unpersist(false); ()
-    }
-  }
-
-  /** Personalized PageRank (the random walker teleports to the SEED set
-    * instead of uniformly — Page et al. 1999 §6; the standard relevance
-    * propagation for "expand this curated set" data selection and
-    * recommendation): rank = (1−d)·p + d·(Σ incoming share·rank +
-    * danglingMass·p), p = uniform over `seeds`, start = p. Mass
-    * conserves exactly (ranks sum to 1 every iteration, spec-gated) and
-    * on a disconnected graph stays entirely in the seeds' components.
-    *
-    * Plan shape = [[pageRank]]: per iteration one src-keyed join + one
-    * dst-keyed partial agg, dangling mass as an in-plan broadcast 1-row
-    * frame, one materialization per iteration ([[Fixpoint.rounds]]) —
-    * no other driver action.
-    * Deterministic → the fixed iteration count unrolls into a FULL
-    * DuckDB oracle. Returns (id, rank). */
-  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, iterations: Int = 6,
-      damping: Double = 0.85, weightCol: Option[String] = None,
-      init: Option[DataFrame] = None): DataFrame = {
-    require(iterations >= 1, "need at least one iteration")
-    require(damping >= 0 && damping <= 1, s"damping must be in [0,1]: $damping")
-    val spark = edges.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val e = collapseWeighted(edges, srcCol, dstCol, weightCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val outW = e.groupBy(col("src")).agg(sum(col("w")).as("ow"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seedIds = seeds.select(col(seedCol).cast("long").as("id")).distinct()
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .unionByName(seedIds)
-      .distinct()
-      .repartition(par, col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ej = e.join(outW, "src")
-      .select(col("src"), col("dst"), (col("w") / col("ow")).as("share"))
-      .repartition(par, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nSeeds = seedIds.count().toDouble
-      require(nSeeds > 0, "seed set is empty")
-      // the personalization vector: 1/|S| on seeds, 0 elsewhere — a
-      // node-keyed column, not a broadcast (seeds can be large). The
-      // has-out-edges flag rides along so the per-iteration dangling
-      // mass is a map-side filter + 1-row aggregate instead of an
-      // anti-join re-exchanging the rank vector every step (the
-      // [[pageRank]] restructure; identical sum over identical rows).
-      val withP = nodes
-        .join(seedIds.withColumn("__p", lit(1.0 / nSeeds)), Seq("id"), "left")
-        .join(outW.select(col("src").as("id"), lit(true).as("__ho")), Seq("id"), "left")
-        .select(col("id"), coalesce(col("__p"), lit(0.0)).as("p"), col("__ho"))
-        .localCheckpoint()
-      // warm start (the [[pageRank]] init posture): nodes absent from
-      // the saved vector start at their personalization value, then the
-      // whole vector renormalizes to sum exactly 1 so per-iteration
-      // mass conservation holds; the damped iteration is a contraction,
-      // so any start reaches the unique fixpoint
-      val start = init match {
-        case None => withP.select(col("id"), col("p"), col("__ho"),
-          col("p").as("rank"))
-        case Some(warm) =>
-          val filled = withP
-            .join(warm.select(col("id"), col("rank").as("__w")), Seq("id"), "left")
-            .select(col("id"), col("p"), col("__ho"),
-              coalesce(col("__w"), col("p")).as("rank"))
-          val tot = filled.agg(sum(col("rank")).as("__t"))
-          filled.crossJoin(broadcast(tot))
-            .select(col("id"), col("p"), col("__ho"),
-              (col("rank") / col("__t")).as("rank"))
-      }
-      def step(r: DataFrame): DataFrame = {
-        val dangling = r.filter(col("__ho").isNull)
-          .agg(coalesce(sum(col("rank")), lit(0.0)).as("__dang"))
-        val contribs = ej.join(
-            r.select(col("id").as("src"), col("rank")), "src")
-          .groupBy(col("dst").as("id"))
-          .agg(sum(col("share") * col("rank")).as("__in"))
-        r.select(col("id"), col("p"), col("__ho"))
-          .join(contribs, Seq("id"), "left")
-          .crossJoin(broadcast(dangling))
-          .select(col("id"), col("p"), col("__ho"),
-            (lit(1.0 - damping) * col("p") +
-              lit(damping) * (coalesce(col("__in"), lit(0.0)) +
-                col("__dang") * col("p"))).as("rank"))
-      }
-      Fixpoint.rounds(start, iterations)((r, _) => step(r))
-        .select(col("id"), col("rank"))
     } finally {
       ej.unpersist(false); e.unpersist(false)
       outW.unpersist(false); nodes.unpersist(false); ()
@@ -248,11 +221,7 @@ object Graphs {
     require(k >= 1, "k must be >= 1")
     val spark = edges.sparkSession
     val par = spark.sparkContext.defaultParallelism
-    val und0 = edges
-      .select(least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
-        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und0 = undirected(edges, srcCol, dstCol)
     val und = und0.unionByName(und0.select(col("b").as("a"), col("a").as("b")))
       .repartition(par, col("a"))
     // stable edge count == nothing peeled; an edgeless graph runs no round
@@ -302,16 +271,16 @@ object Graphs {
     val par = spark.sparkContext.defaultParallelism
     val e = collapseWeighted(edges, srcCol, dstCol, weightCol)
       .repartition(par, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // the hub half-step joins on dst — a dst-partitioned cached copy
     // saves one full edge re-shuffle PER ITERATION
     val eDst = e.repartition(par, col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id")))
       .distinct()
       .repartition(par, col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     try {
       if (nodes.isEmpty) return nodes
         .withColumn("hub", lit(0.0)).withColumn("authority", lit(0.0))
@@ -450,15 +419,11 @@ object Graphs {
     require(iterations >= 1, "need at least one iteration")
     val spark = edges.sparkSession
     val par = spark.sparkContext.defaultParallelism
-    val und = edges
-      .select(least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
-        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges, srcCol, dstCol)
     val adj = und.select(col("a").as("id"), col("b").as("nb"))
       .unionByName(und.select(col("b").as("id"), col("a").as("nb")))
       .repartition(par, col("nb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     try {
       // every node in `adj` has >= 1 neighbor (isolated nodes can't come
       // from an edge list), so the vote inner-join covers all nodes
@@ -498,12 +463,7 @@ object Graphs {
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
       maxDegree: Int = 10000): DataFrame = {
     require(maxDegree >= 2, "maxDegree must be >= 2")
-    val und = edges
-      .select(least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
-        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = undirected(edges, srcCol, dstCol).persist(MEMORY_AND_DISK)
     val adj = und.select(col("a").as("id"), col("b").as("nb"))
       .unionByName(und.select(col("b").as("id"), col("a").as("nb")))
     val deg = adj.groupBy(col("id")).agg(count(lit(1)).as("d"))
@@ -556,17 +516,12 @@ object Graphs {
     * all hash joins on node ids. Returns (id, n_triangles) for nodes
     * in at least one triangle. */
   def triangles(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges
-      .select(least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
-        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val und = undirected(edges, srcCol, dstCol).persist(MEMORY_AND_DISK)
     // persisted: deg feeds TWO joins into e's plan (the a-side and the
     // b-side annotation) — unpersisted, the explode+agg would run twice
     val deg = und.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("d"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // orient by (degree, id); carry the head's rank key for the wedge order
     val lowFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
@@ -577,7 +532,7 @@ object Graphs {
         when(lowFirst, col("a")).otherwise(col("b")).as("x"),
         when(lowFirst, col("b")).otherwise(col("a")).as("y"),
         when(lowFirst, col("db")).otherwise(col("da")).as("dy"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     try {
       // (r17 note: widening the wedge join's key space with an explicit
       // 4×par repartition on x was tried — the dominant wedge task-set
@@ -612,60 +567,30 @@ object Graphs {
     * in any engine with string md5 (the DuckDB oracle unrolls the
     * steps). Walks terminate early at nodes with no neighbors.
     *
-    * Plan shape: the deduped symmetric edge list is partitioned by src
-    * once and persisted; every step is one src-keyed equi-join plus a
-    * per-walk argmin window on walk_id (bounded keys — one row per
-    * walk survives). Per-step localCheckpoint keeps each step ONE job
-    * instead of an O(steps²) re-derived chain. Lifecycle note: the
-    * returned union READS the per-step checkpoint blocks, so they live
-    * as long as the result frame — caller-owned; dropping the last
-    * reference lets the ContextCleaner free them (steps+1 block sets,
-    * each bounded by walk count — never corpus-sized). Returns
-    * (walk_id, step, node) with step 0 = the start node. */
+    * Plan shape (the `walk` driver): every step is one src-keyed equi-join
+    * against the persisted edge list plus a per-walk argmin AGGREGATE,
+    * `min(struct(key, dst))` grouped by walk_id — one row per walk
+    * survives the map-side partial aggregation. Returns
+    * (walk_id, node, step) with step 0 = the start node. */
   def randomWalks(edges: DataFrame, srcCol: String, dstCol: String,
       starts: DataFrame, startCol: String, steps: Int = 4,
-      seed: String = "rw42"): DataFrame = {
-    require(steps >= 1, "need at least one step")
-    val spark = edges.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val dir = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-    val e = dir
-      .unionByName(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .repartition(par, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var cur = starts
-        .select(col(startCol).cast("long").as("walk_id")).distinct()
-        .select(col("walk_id"), col("walk_id").as("node"), lit(0).as("step"))
-        .localCheckpoint()
-      val frames = scala.collection.mutable.ArrayBuffer(cur)
-      var t = 1
-      while (t <= steps) {
-        val key = Sampling.hashUniform(concat_ws(":",
-          lit(seed), col("walk_id"), lit(t), col("dst")))
-        // per-walk argmin as an AGGREGATE, not a window (r17, guide
-        // §2.3): min(struct(key, dst)) orders exactly like the former
-        // row_number() over (ORDER BY key, dst), but the partial
-        // aggregation collapses each walk's |frontier|·deg candidate
-        // rows to one per walk BEFORE the exchange — the shuffle moves
-        // |walks| rows instead of the whole candidate fan-out, and the
-        // per-partition sort the window needed is gone.
-        cur = cur.join(e, cur("node") === e("src"))
-          .select(col("walk_id"), col("dst"))
-          .groupBy(col("walk_id"))
-          .agg(min(struct(key.as("__k"), col("dst").as("dst"))).as("__m"))
-          .select(col("walk_id"), col("__m.dst").as("node"), lit(t).as("step"))
-          .localCheckpoint()
-        frames += cur
-        t += 1
-      }
-      frames.reduce(_ unionByName _)
-    } finally {
-      e.unpersist(false); ()
+      seed: String = "rw42"): DataFrame =
+    walk(edges, srcCol, dstCol, starts, startCol, steps, Nil) { (e, cur, t) =>
+      val key = Sampling.hashUniform(concat_ws(":",
+        lit(seed), col("walk_id"), lit(t), col("dst")))
+      // per-walk argmin as an AGGREGATE, not a window (r17, guide
+      // §2.3): min(struct(key, dst)) orders exactly like the former
+      // row_number() over (ORDER BY key, dst), but the partial
+      // aggregation collapses each walk's |frontier|·deg candidate
+      // rows to one per walk BEFORE the exchange — the shuffle moves
+      // |walks| rows instead of the whole candidate fan-out, and the
+      // per-partition sort the window needed is gone.
+      cur.join(e, cur("node") === e("src"))
+        .select(col("walk_id"), col("dst"))
+        .groupBy(col("walk_id"))
+        .agg(min(struct(key.as("__k"), col("dst").as("dst"))).as("__m"))
+        .select(col("walk_id"), col("__m.dst").as("node"), lit(t).as("step"))
     }
-  }
 
   /** node2vec-biased seeded walks (Grover & Leskovec, KDD 2016) — the
     * (p, q) upgrade of [[randomWalks]]: at node u having arrived from
@@ -689,60 +614,72 @@ object Graphs {
     * Plan shape = [[randomWalks]] plus one LEFT join per step against
     * the same src-partitioned persisted edge list to mark
     * distance-1(prev) candidates: per-step cost is |frontier|·deg
-    * candidate rows through two keyed joins and a bounded-key argmin
-    * window; localCheckpoint keeps each step one job. Returns
+    * candidate rows through two keyed joins and a per-walk argmin
+    * aggregate (`min(struct(key, dst, u))`). Returns
     * (walk_id, step, node), step 0 = start. */
   def node2vecWalks(edges: DataFrame, srcCol: String, dstCol: String,
       starts: DataFrame, startCol: String, steps: Int = 4,
       p: Double = 4.0, q: Double = 0.25,
       seed: String = "n2v42"): DataFrame = {
-    require(steps >= 1, "need at least one step")
     require(p > 0 && q > 0, "p and q must be positive")
-    val spark = edges.sparkSession
-    val par = spark.sparkContext.defaultParallelism
+    walk(edges, srcCol, dstCol, starts, startCol, steps,
+        Seq(lit(null).cast("long").as("prev"))) { (e, cur, t) =>
+      val pn = e.select(col("src").as("__ps"), col("dst").as("__pd"),
+        lit(true).as("__pn"))
+      val cand = cur.join(e, cur("node") === e("src"))
+        .select(col("walk_id"), cur("node").as("u"), col("prev"), col("dst"))
+      val u = Sampling.hashUniformOpen(concat_ws(":",
+        lit(seed), col("walk_id"), lit(t), col("dst")))
+      val alpha = when(col("dst") === col("prev"), lit(1.0 / p))
+        .when(col("__pn"), lit(1.0))
+        .otherwise(lit(1.0 / q))
+      // per-walk argmin as an aggregate instead of a window — same
+      // (key, dst) order, one surviving row per walk leaves the map
+      // side (see [[randomWalks]]); `u` is constant within a walk's
+      // candidate group (one frontier row per walk), so carrying it
+      // through the struct changes no comparison
+      cand.join(pn,
+          cand("prev") === col("__ps") && cand("dst") === col("__pd"), "left")
+        .withColumn("__key", round(-log(u) / alpha, 6))
+        .groupBy(col("walk_id"))
+        .agg(min(struct(col("__key").as("__k"), col("dst").as("dst"),
+          col("u").as("u"))).as("__m"))
+        .select(col("walk_id"), col("__m.dst").as("node"),
+          col("__m.u").as("prev"), lit(t).as("step"))
+    }.select("walk_id", "step", "node")
+  }
+
+  /** The walk driver behind [[randomWalks]] and [[node2vecWalks]]. The
+    * deduped symmetric edge list (self-loops kept) is partitioned by src
+    * once and persisted; the start frame is (walk_id, node, `carry`…,
+    * step 0) per distinct start id. `next(e, frontier, t)` picks step
+    * t's node for every live walk from the edge list `e`; each step's
+    * frame is a localCheckpoint, so a step is ONE job instead of an
+    * O(steps²) re-derived chain. Returns the union of the step frames.
+    * Lifecycle note: that union READS the per-step checkpoint blocks,
+    * so they live as long as the result frame — caller-owned; dropping
+    * the last reference lets the ContextCleaner free them (steps+1
+    * block sets, each bounded by walk count — never corpus-sized). */
+  private def walk(edges: DataFrame, srcCol: String, dstCol: String,
+      starts: DataFrame, startCol: String, steps: Int, carry: Seq[Column])(
+      next: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    require(steps >= 1, "need at least one step")
+    val par = edges.sparkSession.sparkContext.defaultParallelism
     val dir = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     val e = dir
       .unionByName(dir.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .repartition(par, col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     try {
-      var cur = starts
+      val start = starts
         .select(col(startCol).cast("long").as("walk_id")).distinct()
-        .select(col("walk_id"), col("walk_id").as("node"),
-          lit(null).cast("long").as("prev"), lit(0).as("step"))
+        .select((col("walk_id") +: col("walk_id").as("node") +: carry) :+
+          lit(0).as("step"): _*)
         .localCheckpoint()
-      val frames = scala.collection.mutable.ArrayBuffer(cur)
-      val pn = e.select(col("src").as("__ps"), col("dst").as("__pd"),
-        lit(true).as("__pn"))
-      var t = 1
-      while (t <= steps) {
-        val cand = cur.join(e, cur("node") === e("src"))
-          .select(col("walk_id"), cur("node").as("u"), col("prev"), col("dst"))
-        val u = Sampling.hashUniformOpen(concat_ws(":",
-          lit(seed), col("walk_id"), lit(t), col("dst")))
-        val alpha = when(col("dst") === col("prev"), lit(1.0 / p))
-          .when(col("__pn"), lit(1.0))
-          .otherwise(lit(1.0 / q))
-        // per-walk argmin as an aggregate instead of a window — same
-        // (key, dst) order, one surviving row per walk leaves the map
-        // side (see [[randomWalks]]); `u` is constant within a walk's
-        // candidate group (one frontier row per walk), so carrying it
-        // through the struct changes no comparison
-        cur = cand.join(pn,
-            cand("prev") === col("__ps") && cand("dst") === col("__pd"), "left")
-          .withColumn("__key", round(-log(u) / alpha, 6))
-          .groupBy(col("walk_id"))
-          .agg(min(struct(col("__key").as("__k"), col("dst").as("dst"),
-            col("u").as("u"))).as("__m"))
-          .select(col("walk_id"), col("__m.dst").as("node"),
-            col("__m.u").as("prev"), lit(t).as("step"))
-          .localCheckpoint()
-        frames += cur
-        t += 1
-      }
-      frames.reduce(_ unionByName _).select("walk_id", "step", "node")
+      (1 to steps).scanLeft(start)((cur, t) => next(e, cur, t).localCheckpoint())
+        .reduce(_ unionByName _)
     } finally {
       e.unpersist(false); ()
     }

@@ -1247,11 +1247,6 @@ object Relational extends QueryModule {
       .stripMargin.replace('\n', ' ')
   }
 
-  /** DuckDB oracle for `q_graph_pagerank`: the purchase-graph edges,
-    * then the damped power iteration UNROLLED into one CTE per step —
-    * dangling mass as a scalar subquery, contributions as a grouped
-    * join — replaying [[graft.operators.Graphs.pageRank]]'s exact math
-    * (deterministic, so hash-comparable after 6dp rounding). */
   /** DuckDB oracle for `q_rank_bradley_terry`: the within-order quantity
     * comparisons collapse to win counts + a symmetric pair table, then
     * the fixed MM rounds unroll — per round one (i, j) strength join +
@@ -1287,6 +1282,11 @@ object Relational extends QueryModule {
       "ORDER BY strength DESC, 1 LIMIT 50"
   }
 
+  /** DuckDB oracle for `q_graph_pagerank`: the purchase-graph edges,
+    * then the damped power iteration UNROLLED into one CTE per step —
+    * dangling mass as a scalar subquery, contributions as a grouped
+    * join — replaying [[graft.operators.Graphs.pageRank]]'s exact math
+    * (deterministic, so hash-comparable after 6dp rounding). */
   private def pageRankOracle(iterations: Int, damping: Double): String = {
     val steps = (1 to iterations).map { k =>
       s"""r$k AS MATERIALIZED (SELECT n.id,

@@ -295,6 +295,28 @@ class GraphsSpec extends AnyFunSuite {
     assert(got(10L) === 0.0 && got(11L) === 0.0, s"leaked: ${got(10L)}, ${got(11L)}")
   }
 
+  test("rank kernel edges: empty graph, empty seed set, every node seeded") {
+    import spark.implicits._
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(Graphs.pageRank(none, "src", "dst").collect().isEmpty)
+    val edges = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L),
+      (2L, 4L), (5L, 1L), (5L, 4L)).toDF("src", "dst")
+    val err = intercept[IllegalArgumentException] {
+      Graphs.personalizedPageRank(edges, "src", "dst",
+        Seq.empty[Long].toDF("n"), "n").collect()
+    }
+    assert(err.getMessage.contains("seed set is empty"))
+    // a uniform teleport over every node IS PageRank
+    val pr = Graphs.pageRank(edges, "src", "dst", iterations = 15)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val ppr = Graphs.personalizedPageRank(edges, "src", "dst",
+        (1L to 5L).toDF("n"), "n", iterations = 15)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(ppr.keySet === pr.keySet)
+    pr.foreach { case (id, r) =>
+      assert(math.abs(r - ppr(id)) < 1e-12, s"node $id: $r vs ${ppr(id)}") }
+  }
+
   test("kCore: clique core survives peeling, tails peel away, core degrees >= k") {
     import spark.implicits._
     // K6 clique (ids 1-6) + a path tail 6-7-8-9 + an isolated edge
