@@ -587,16 +587,19 @@ object Tql {
     // ORDER BY COSINE_SIMILARITY(col, const) DESC LIMIT k over a table
     // with a registered embedding index → restrict the scan to the
     // index's top-k candidates first (reference `cpp/tql/tql.hpp:171`
-    // check_for_top_k_binary_function_search): a broadcast semi-join with
-    // k ids replaces ranking the whole corpus; the ORDER/LIMIT below then
-    // orders only the candidates, so schema and tiebreak semantics are
-    // unchanged (result is approximate exactly like the reference's
-    // index route). A WHERE clause composes into the search as a
-    // candidate pre-filter (the reference runs index queries against a
-    // filter bitmap — `cpp/query_core/index_holder.hpp:33`): ids
-    // surviving the filter gate the assignment scan, and the search
+    // check_for_top_k_binary_function_search): the driver ranks the
+    // index's centroids, one job collects the k candidate ids from the
+    // probed clusters, and the scan keeps only `idCol IN (ids)`; the
+    // ORDER/LIMIT below then orders only the candidates, so schema and
+    // tiebreak semantics are unchanged (result is approximate exactly
+    // like the reference's index route). A WHERE clause composes into
+    // the search as a candidate pre-filter (the reference runs index
+    // queries against a filter bitmap — `cpp/query_core/index_holder.hpp:33`):
+    // ids surviving the filter gate the assignment scan, and the search
     // adaptively widens its cluster probe when the filter starves the
-    // candidate pool. Joins/grouping still disable the route.
+    // candidate pool. The quantized index's int8 cosine gate and the PQ
+    // index keep the frame search behind a broadcast semi-join.
+    // Joins/grouping still disable the route.
     if (indexRoutingEnabled.get()) annTopKRoute(sel, params).foreach { case (vecCol, qVec, k, metric) =>
       routeTable(sel.from) match {
         case Some(tname) =>
@@ -609,22 +612,28 @@ object Tql {
           val pq = if (plain.isEmpty && metric == "cosine")
             A.Catalog.lookupPq(tname, vecCol) else None
           plain.map(_.idCol).orElse(pq.map(_.idCol)).foreach { idCol =>
-            import spark.implicits._
-            val qdf = Seq((0, qVec)).toDF("qid", "q_vec")
             val filterIds = sel.where.map { w =>
               env.df.filter(expr(env, w, params)).select(col(idCol).as("id"))
             }
-            val cand = plain match {
-              case Some(entry) => A.search(entry.index, qdf, "qid", "q_vec", k,
-                entry.config, idFilter = filterIds, metric = metric)
-              case None =>
-                val pe = pq.get
-                A.searchPq(pe.index, qdf, "qid", "q_vec", k, pe.config,
-                  idFilter = filterIds)
+            val restricted = plain match {
+              case Some(entry) if !entry.index.quantized || metric != "cosine" =>
+                env.df.filter(env.df(idCol).isin(A.topIds(entry.index, qVec, k,
+                  entry.config, idFilter = filterIds, metric = metric): _*))
+              case _ =>
+                import spark.implicits._
+                val qdf = Seq((0, qVec)).toDF("qid", "q_vec")
+                val cand = plain match {
+                  case Some(entry) => A.search(entry.index, qdf, "qid", "q_vec", k,
+                    entry.config, idFilter = filterIds, metric = metric)
+                  case None =>
+                    val pe = pq.get
+                    A.searchPq(pe.index, qdf, "qid", "q_vec", k, pe.config,
+                      idFilter = filterIds)
+                }
+                env.df.join(broadcast(cand.select(col("id").as("__ann_cand_id"))),
+                  env.df(idCol) === col("__ann_cand_id"), "left_semi")
             }
-            env = env.copy(df = env.df.join(
-              broadcast(cand.select(col("id").as("__ann_cand_id"))),
-              env.df(idCol) === col("__ann_cand_id"), "left_semi"))
+            env = env.copy(df = restricted)
           }
         case _ => ()
       }

@@ -4,8 +4,12 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import graft.functions.gf
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+import graft.functions.{CosineSimilarity, DotProduct, VectorDistance, gf}
 
 /** Clustered ANN index (SURVEY.md §2.9) — the Spark analog of the
   * reference's `Clustered` / `ClusteredQuantized` embedding indexes
@@ -40,7 +44,7 @@ object AnnIndex {
     * (reference `cpp/tql/tql.hpp:171`
     * check_for_top_k_binary_function_search → `top_k_search_info.hpp`).
     * Keyed by (table, vector column); `idCol` names the table's id
-    * column the candidate semi-join keys on. */
+    * column the candidate restriction keys on. */
   object Catalog {
     final case class Entry(index: Index, idCol: String, config: SearchConfig)
     final case class PqEntry(index: PqIndex, idCol: String, config: SearchConfig)
@@ -87,8 +91,22 @@ object AnnIndex {
     }
   }
 
+  /** `centers` is the centroid table held on the driver, (cluster_id,
+    * centroid) sorted by cluster_id: [[topIds]] ranks it without a job. */
   final case class Index(centroids: DataFrame, assignments: DataFrame,
-      nClusters: Int, quantized: Boolean)
+      quantized: Boolean, centers: Seq[(Int, Array[Float])]) {
+    def nClusters: Int = centers.length
+    /** max(1, assignment rows): the denominator of a filtered search's
+      * selectivity, counted once per index */
+    lazy val assignmentRows: Long = math.max(1L, assignments.count())
+  }
+
+  /** An index over saved or hand-made frames: collects the (tiny)
+    * centroid table to the driver. */
+  def of(centroids: DataFrame, assignments: DataFrame): Index =
+    Index(centroids, assignments, assignments.columns.contains("vec_q"),
+      centroids.select(col("cluster_id"), col("centroid")).collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1).toSeq)
 
   /** Symmetric per-vector int8 quantization: q_i = round(127 * v_i /
     * max|v|). Cosine is scale-invariant, so the per-vector scale cancels
@@ -123,10 +141,9 @@ object AnnIndex {
       else base
     val spark = emb.sparkSession
     import spark.implicits._
-    val centroids = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
-      .toSeq.toDF("cluster_id", "centroid")
-    Index(centroids, assignments, nClusters, quantized)
+    val centers = model.clusterCenters.zipWithIndex
+      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }.toSeq
+    Index(centers.toDF("cluster_id", "centroid"), assignments, quantized, centers)
   }
 
   /** Persist the index as two parquet tables under `dir` — build once,
@@ -146,13 +163,10 @@ object AnnIndex {
     index.assignments.write.mode("overwrite").parquet(s"$dir/assignments/batch=base")
   }
 
-  def load(spark: SparkSession, dir: String): Index = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
+  def load(spark: SparkSession, dir: String): Index =
     // drop is a no-op on a pre-segment flat layout (old saved indexes)
-    val assignments = spark.read.parquet(s"$dir/assignments").drop("batch")
-    Index(centroids, assignments, centroids.count().toInt,
-      quantized = assignments.columns.contains("vec_q"))
-  }
+    of(spark.read.parquet(s"$dir/centroids"),
+      spark.read.parquet(s"$dir/assignments").drop("batch"))
 
   /** Absorb appended vectors WITHOUT a KMeans refit: each new vector is
     * assigned to its nearest existing centroid via a map-side projection
@@ -168,9 +182,8 @@ object AnnIndex {
     * appends it to the persisted assignments instead. */
   def assignDelta(index: Index, newEmb: DataFrame, idCol: String,
       vecCol: String): DataFrame = {
-    val cents = index.centroids.select(col("cluster_id"), col("centroid")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1))).sortBy(_._1)
-    require(cents.map(_._1).toSeq == cents.indices, "cluster ids must be 0..k-1")
+    val cents = index.centers
+    require(cents.map(_._1) == cents.indices, "cluster ids must be 0..k-1")
     val centVecs = array(cents.map { case (_, cv) =>
       array(cv.map(x => lit(x)): _*)
     }: _*)
@@ -249,28 +262,15 @@ object AnnIndex {
     * (high-|x| directions q favors rank first). The int8 candidate
     * gate is cosine-only (per-vector quantization scale cancels under
     * cosine but not under L2/dot), so l2/dot searches score the probed
-    * candidates exactly. */
+    * candidates exactly. A single query vector is cheaper through
+    * [[topIds]], which returns the same ids without the query frame. */
   def search(index: Index, queries: DataFrame, qIdCol: String, qVecCol: String,
       k: Int, config: SearchConfig = SearchConfig(),
       idFilter: Option[DataFrame] = None, metric: String = "cosine"): DataFrame = {
-    require(metric == "cosine" || metric == "l2" || metric == "dot",
-      s"unknown metric $metric")
-    val cosine = metric == "cosine"
-    def score(a: Column, b: Column): Column = metric match {
-      case "cosine" => gf.cosine_similarity(a, b)
-      case "dot" => gf.dot(a, b)
-      case _ => gf.l2_norm(a, b)
-    }
-    def ord(c: Column): Column = if (metric == "l2") c.asc else c.desc
+    val score = scoreFn(metric)
+    val ord = ordFn(metric)
     val q = queries.select(col(qIdCol).as("qid"), col(qVecCol).as("q_vec"))
-    val assignBase = idFilter match {
-      case Some(ids) =>
-        val f = ids.select(col(ids.columns.head).as("id")).distinct()
-        index.assignments.join(f, Seq("id"), "left_semi")
-      case None => index.assignments
-    }
-    val nProbe0 = math.max(1, math.min(index.nClusters,
-      math.ceil(math.sqrt(index.nClusters.toDouble) * config.clusterSearchFactor).toInt))
+    val assignBase = filteredView(index.assignments, idFilter)
 
     def once(nProbe: Int): DataFrame = {
       // rank clusters per query over the broadcast centroid table
@@ -281,7 +281,7 @@ object AnnIndex {
               col("cluster_id"))))
         .filter(col("c_rank") <= nProbe)
         .select(col("qid"), col("q_vec"), col("cluster_id"))
-      if (!index.quantized || !cosine) {
+      if (!index.quantized || metric != "cosine") {
         // plain Clustered (or L2 on any index): every candidate in a
         // probed cluster is scored exactly — accuracyFactor has nothing
         // left to widen here
@@ -312,52 +312,146 @@ object AnnIndex {
       }
     }
 
-    adaptiveSearch(index.assignments, assignBase, index.nClusters, nProbe0,
-      k, q.count(), idFilter.isDefined, once)
+    adaptiveSearch(assignBase, index.assignmentRows, index.nClusters,
+      firstProbe(index.nClusters, config), k, q.count(), idFilter.isDefined, once)
   }
 
-  /** The filtered-search driver loop shared by [[search]] and
-    * [[searchPq]]: scale the initial probe by 1/selectivity (same
-    * expected candidate count as an unfiltered search), then double
-    * `nProbe` until every query has min(k, survivors) results or all
-    * clusters are probed. Unfiltered searches stay fully lazy
-    * (`nQueries` is never forced). */
-  private def adaptiveSearch(allAssignments: DataFrame, assignBase: DataFrame,
+  /** Top-k ids for ONE query vector, best first, planned on the driver:
+    * the same ids in the same order as [[search]] over a one-row query
+    * frame, from one candidate job instead of a windowed query. The
+    * reference likewise probes an in-memory index for candidate ids and
+    * fetches only those rows (`cpp/deeplake_pg/index_search.cpp:114-133`).
+    * The driver-held centroids are scored with the codegen kernels'
+    * own expressions evaluated over literals, so the cluster order is
+    * bit-identical to [[search]]'s (ties on cluster_id); one
+    * `orderBy(score, id).limit(k)` collect then ranks the probed
+    * clusters' candidates. With `idFilter` the driver replays
+    * [[search]]'s widening, reading each attempt's shortfall from the
+    * collected row count, so nothing is persisted. The quantized index
+    * gates cosine candidates on int8 scores: that search stays on
+    * [[search]]. */
+  def topIds(index: Index, q: Seq[Double], k: Int, config: SearchConfig = SearchConfig(),
+      idFilter: Option[DataFrame] = None, metric: String = "cosine"): Seq[Any] = {
+    require(!index.quantized || metric != "cosine",
+      "a quantized cosine search gates on int8 scores: use search")
+    val score = scoreFn(metric)
+    val qExpr = Literal.create(q, ArrayType(DoubleType, containsNull = false))
+    val sign = if (metric == "l2") 1 else -1
+    val clusters = index.centers
+      .map { case (cid, c) =>
+        val cExpr = Literal.create(c.toSeq, ArrayType(FloatType, containsNull = false))
+        (kernel(metric)(qExpr, cExpr).eval().asInstanceOf[Double], cid)
+      }
+      .sortWith { case ((a, ca), (b, cb)) =>
+        val c = sign * SQLOrderingUtil.compareDoubles(a, b)
+        c < 0 || (c == 0 && ca < cb)
+      }
+      .map(_._2)
+    val assignBase = filteredView(index.assignments, idFilter)
+    val sc = index.assignments.sparkSession.sparkContext
+    def attempt(nProbe: Int): Seq[Any] = described(sc, "ann:candidates") {
+      assignBase.filter(col("cluster_id").isin(clusters.take(nProbe): _*))
+        .select(col("id"), score(col("vec"), Bridge.column(qExpr)).as("score"))
+        .orderBy(ordFn(metric)(col("score")), col("id")).limit(k)
+        .collect().map(_.get(0)).toSeq
+    }
+    val nProbe0 = firstProbe(index.nClusters, config)
+    if (idFilter.isEmpty) attempt(nProbe0)
+    else widening(index.nClusters, nProbe0, k, index.assignmentRows,
+      described(sc, "ann:survivors")(assignBase.count()))(attempt)(_.length < _)
+  }
+
+  /** Run `body`'s jobs under `what` as their Spark job description, then
+    * restore the caller's. */
+  private def described[T](sc: org.apache.spark.SparkContext, what: String)(body: => T): T = {
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setJobDescription(prev)
+  }
+
+  /** the metric's codegen kernel, shared by frame scoring and the
+    * driver's centroid ranking */
+  private def kernel(metric: String): (Expression, Expression) => Expression = metric match {
+    case "cosine" => CosineSimilarity
+    case "dot" => DotProduct
+    case "l2" => VectorDistance(_, _, 2)
+    case _ => throw new IllegalArgumentException(s"unknown metric $metric")
+  }
+
+  private def scoreFn(metric: String): (Column, Column) => Column = {
+    val f = kernel(metric)
+    (a, b) => Bridge.column(f(Bridge.expression(a), Bridge.expression(b)))
+  }
+
+  private def ordFn(metric: String): Column => Column =
+    if (metric == "l2") _.asc else _.desc
+
+  /** the assignments whose id appears in `idFilter`'s first column (a
+    * semi-join keeps each assignment once, so duplicate ids need no
+    * distinct and its shuffle) */
+  private def filteredView(assignments: DataFrame, idFilter: Option[DataFrame]): DataFrame =
+    idFilter match {
+      case Some(ids) =>
+        assignments.join(ids.select(col(ids.columns.head).as("id")), Seq("id"), "left_semi")
+      case None => assignments
+    }
+
+  /** clusters an unfiltered search probes: ceil(sqrt(n) * factor) in [1, n] */
+  private def firstProbe(nClusters: Int, config: SearchConfig): Int =
+    math.max(1, math.min(nClusters,
+      math.ceil(math.sqrt(nClusters.toDouble) * config.clusterSearchFactor).toInt))
+
+  /** The filtered probe schedule of every search: scale the first probe
+    * by 1/selectivity (same expected candidate count as an unfiltered
+    * search), then double `nProbe` while clusters remain and
+    * `short(result, want)` says some query has fewer than
+    * want = min(k, survivors) hits. Returns the last attempt. */
+  private def widening[R](nClusters: Int, nProbe0: Int, k: Int, total: Long,
+      survivors: Long)(attempt: Int => R)(short: (R, Long) => Boolean): R = {
+    val selectivity = math.max(survivors.toDouble / total, 1.0 / nClusters)
+    var nProbe = math.min(nClusters, math.ceil(nProbe0 / selectivity).toInt)
+    val want = math.min(k.toLong, survivors)
+    var res = attempt(nProbe)
+    while (want > 0 && nProbe < nClusters && short(res, want)) {
+      nProbe = math.min(nClusters, nProbe * 2)
+      res = attempt(nProbe)
+    }
+    res
+  }
+
+  /** [[widening]] over frames, shared by [[search]] and [[searchPq]].
+    * Unfiltered, the frame search is `once(nProbe0)` and stays lazy
+    * (`nQueries` is never forced); filtered, it runs the count jobs and
+    * one shortfall job per attempt, and returns a persisted result
+    * that the caller owns. The TQL route's single-query search
+    * ([[topIds]]) runs neither: it collects its candidates eagerly and
+    * persists nothing. */
+  private def adaptiveSearch(assignBase: DataFrame, total: => Long,
       nClusters: Int, nProbe0: Int, k: Int, nQueries: => Long,
       filtered: Boolean, once: Int => DataFrame): DataFrame =
     if (!filtered) once(nProbe0)
     else {
       // the filtered assignment view is read by the selectivity count and
       // EVERY probe attempt (each a separate job — exchange reuse never
-      // spans them); persist once so a deficiency retry re-probes the
-      // cached semi-join instead of re-scanning the assignment table
+      // spans them); persist it for the loop so a deficiency retry
+      // re-probes the cached semi-join instead of re-scanning the
+      // assignment table, and release it when the loop ends
       assignBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val total = math.max(1L, allAssignments.count())
-      val avail = assignBase.count()
-      val selectivity = math.max(avail.toDouble / total, 1.0 / nClusters)
-      var nProbe = math.min(nClusters, math.ceil(nProbe0 / selectivity).toInt)
-      val want = math.min(k.toLong, avail)
-      val nQ = nQueries
-      // each attempt's RESULT is persisted before the deficiency count:
-      // it is at most nQueries*k rows, and without the cache the count
-      // action and the caller's real action would each run the whole
-      // probe/score plan end to end — twice the candidate scan per query
-      def attempt(p: Int): DataFrame =
-        once(p).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      var res = attempt(nProbe)
-      var done = nProbe >= nClusters || want == 0
-      while (!done) {
-        val counts = res.groupBy("qid").count().collect()
-        val deficient = counts.length < nQ ||
-          counts.exists(_.getLong(1) < want)
-        if (!deficient || nProbe >= nClusters) done = true
-        else {
-          nProbe = math.min(nClusters, nProbe * 2)
-          res.unpersist()
-          res = attempt(nProbe)
+      try {
+        val nQ = nQueries
+        // each attempt's RESULT is persisted before the deficiency count:
+        // it is at most nQueries*k rows, and without the cache the count
+        // action and the caller's real action would each run the whole
+        // probe/score plan end to end — twice the candidate scan per query
+        widening(nClusters, nProbe0, k, total, assignBase.count())(
+          once(_).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) {
+          (res, want) =>
+            val counts = res.groupBy("qid").count().collect()
+            val short = counts.length < nQ || counts.exists(_.getLong(1) < want)
+            if (short) res.unpersist()
+            short
         }
-      }
-      res
+      } finally assignBase.unpersist()
     }
 
   /** exact-vs-ann recall@k (quality gate analog of the reference's
@@ -510,14 +604,7 @@ object AnnIndex {
         transform(bookLit(cb, j),
           c => gf.dot(slice(col("__qn"), j * cb.dsub + 1, cb.dsub), c))
       }: _*))
-    val assignBase = idFilter match {
-      case Some(ids) =>
-        val f = ids.select(col(ids.columns.head).as("id")).distinct()
-        index.assignments.join(f, Seq("id"), "left_semi")
-      case None => index.assignments
-    }
-    val nProbe0 = math.max(1, math.min(index.nClusters,
-      math.ceil(math.sqrt(index.nClusters.toDouble) * config.clusterSearchFactor).toInt))
+    val assignBase = filteredView(index.assignments, idFilter)
 
     def once(nProbe: Int): DataFrame = {
       val probed = q.crossJoin(broadcast(index.centroids))
@@ -548,8 +635,9 @@ object AnnIndex {
         .filter(col("rank") <= k)
     }
 
-    adaptiveSearch(index.assignments, assignBase, index.nClusters, nProbe0,
-      k, q.count(), idFilter.isDefined, once)
+    adaptiveSearch(assignBase, math.max(1L, index.assignments.count()),
+      index.nClusters, firstProbe(index.nClusters, config), k, q.count(),
+      idFilter.isDefined, once)
   }
 
   /** exact-vs-PQ recall@k */

@@ -206,7 +206,7 @@ object AnnQueries extends QueryModule {
              |FROM embeddings ORDER BY score DESC, vec_id LIMIT 10""".stripMargin)
       },
       Some(tqlAnnRouteOracle("list_cosine_similarity", "DESC", "score")),
-      doc = "dialect-routed indexed top-k: broadcast candidate semi-join, no full-corpus ranking (oracle replays the route)"),
+      doc = "dialect-routed indexed top-k: driver-ranked centroids, one candidate-id job, an IN filter on the scan, no full-corpus ranking (oracle replays the route)"),
 
     // L2 ascending top-k routes to the SAME index (reference
     // `ORDER BY L2_NORM(emb - ARRAY[...]) ASC`, order_type::ascending)
@@ -254,8 +254,9 @@ object AnnQueries extends QueryModule {
         // full-probe fixpoint, which holds only while the engine's
         // initial widened probe ceil(nProbe0/selectivity) covers every
         // cluster. Recompute that arithmetic (nClusters=16, nProbe0=
-        // ceil(sqrt(16))=4 — AnnIndex.search:256) and fail LOUDLY on a
-        // corpus that breaks it instead of silently diverging.
+        // ceil(sqrt(16))=4 — AnnIndex.firstProbe, scaled by
+        // AnnIndex.widening) and fail LOUDLY on a corpus that breaks it
+        // instead of silently diverging.
         // static per corpus -> memoized: the two count jobs must not
         // ride inside the TIMED query body (bench reps would price gate
         // arithmetic, not query work)

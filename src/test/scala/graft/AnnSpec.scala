@@ -237,4 +237,17 @@ class AnnSpec extends AnyFunSuite {
       "probing every cluster must recover the exact MIPS answer")
     assert(recall(AnnIndex.SearchConfig()) >= 0.6)
   }
+
+  test("a filtered search releases its filtered assignment view: only the result stays persisted") {
+    val idx = AnnIndex.buildPq(emb, "vec_id", "embedding", nClusters = 16)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val res = AnnIndex.searchPq(idx, emb.filter(col("vec_id") < 3), "vec_id", "embedding",
+      10, idFilter = Some(emb.filter(col("vec_id") % 2 === 0).select(col("vec_id"))))
+    assert(res.collect().length === 30)
+    // the returned, persisted result is the caller's to release
+    assert(sc.getPersistentRDDs.size === before + 1)
+    res.unpersist(blocking = true)
+    assert(sc.getPersistentRDDs.size === before)
+  }
 }

@@ -46,6 +46,23 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def tbl(name: String) = graft.sources.Tables(spark, dir, name)
 
+  /** The ids of the `In`/`InSet` filters on `idCol` in the optimized
+    * plan — the ANN route's candidate restriction (empty: none). */
+  private def inIds(df: org.apache.spark.sql.DataFrame, idCol: String): Seq[Set[Any]] = {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, In, InSet}
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case In(a: Attribute, list) if a.name == idCol && list.forall(_.foldable) =>
+        list.map(_.eval()).toSet
+      case InSet(a: Attribute, set) if a.name == idCol => set
+    }))
+  }
+
+  /** the plan restricts `idCol` to exactly the ids the query returns */
+  private def assertRoutedTo(df: org.apache.spark.sql.DataFrame, idCol: String): Unit = {
+    val got = df.collect().map(_.get(0)).toSet
+    assert(inIds(df, idCol) === Seq(got), df.queryExecution.optimizedPlan.toString)
+  }
+
   test("ANALYZE populates the stats catalog with exact MCV frequencies") {
     graft.plans.StatsCatalog.clear()
     val row = Tql.query(spark, dir, "ANALYZE documents (lang)").collect()(0)
@@ -436,8 +453,7 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       val routed = ds.query(
         s"""SELECT vec_id, ROUND(COSINE_SIMILARITY(embedding, $arr), 6) AS score
            |ORDER BY score DESC LIMIT 5""".stripMargin)
-      assert(routed.queryExecution.executedPlan.toString.contains("LeftSemi"),
-        routed.queryExecution.executedPlan.toString)
+      assertRoutedTo(routed, "vec_id")
       val spark2 = spark
       import spark2.implicits._
       val direct = AnnIndex.search(idx,
@@ -448,7 +464,7 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       val anon = Tql.queryDataset(emb,
         s"""SELECT vec_id, ROUND(COSINE_SIMILARITY(embedding, $arr), 6) AS score
            |ORDER BY score DESC LIMIT 5""".stripMargin)
-      assert(!anon.queryExecution.executedPlan.toString.contains("LeftSemi"))
+      assert(inIds(anon, "vec_id").isEmpty)
       // dataset-scoped functions resolve through the handle's dir
       Tql.DatasetFunctions.register(dir, "VEC_HEAD", args => args(0).getItem(0))
       val fn = ds.query("SELECT vec_id, VEC_HEAD(embedding) AS h ORDER BY vec_id LIMIT 3")
@@ -687,9 +703,8 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
                    |FROM embeddings WHERE vec_id % 5 == 0
                    |ORDER BY score DESC LIMIT 5""".stripMargin
       val routed = Tql.query(spark, dir, sql)
-      // the route fired even with WHERE present: candidate semi-join in plan
-      assert(routed.queryExecution.executedPlan.toString.contains("LeftSemi"),
-        routed.queryExecution.executedPlan.toString)
+      // the route fired even with WHERE present: candidate ids in plan
+      assertRoutedTo(routed, "vec_id")
       val rows = routed.collect()
       assert(rows.length === 5)
       // every result satisfies the predicate (filter gated the probe AND
@@ -825,9 +840,8 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       val sql = s"""SELECT vec_id, ROUND(COSINE_SIMILARITY(embedding, $arr), 6) AS score
                    |FROM embeddings ORDER BY score DESC LIMIT 5""".stripMargin
       val routed = Tql.query(spark, dir, sql)
-      // the scan is restricted by the candidate semi-join
-      assert(routed.queryExecution.executedPlan.toString.contains("LeftSemi"),
-        routed.queryExecution.executedPlan.toString)
+      // the scan is restricted to the candidate ids
+      assertRoutedTo(routed, "vec_id")
       val spark2 = spark
       import spark2.implicits._
       val direct = AnnIndex.search(idx,
@@ -837,7 +851,7 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       // without a registered index the same text takes the exact path
       AnnIndex.Catalog.clear()
       val exact = Tql.query(spark, dir, sql)
-      assert(!exact.queryExecution.executedPlan.toString.contains("LeftSemi"))
+      assert(inIds(exact, "vec_id").isEmpty)
       assert(exact.count() === 5)
     } finally AnnIndex.Catalog.clear()
   }
@@ -870,9 +884,9 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
                    |ORDER BY COSINE_SIMILARITY(embedding, ${qv.mkString("ARRAY[", ",", "]")}) DESC
                    |LIMIT 5""".stripMargin
       val linear = Tql.queryWithOptions(spark, dir, sql, Tql.Options.linearOnly).get
-      assert(!linear.queryExecution.executedPlan.toString.contains("LeftSemi"))
+      assert(inIds(linear, "vec_id").isEmpty)
       val routed = Tql.queryWithOptions(spark, dir, sql, Tql.Options.allowEverything).get
-      assert(routed.queryExecution.executedPlan.toString.contains("LeftSemi"))
+      assertRoutedTo(routed, "vec_id")
     } finally AnnIndex.Catalog.clear()
   }
 
@@ -937,8 +951,7 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       val routed = Tql.query(spark, dir,
         s"""SELECT vec_id, ROUND(L2_NORM(embedding - $arr), 6) AS dist
            |FROM embeddings ORDER BY dist ASC, vec_id LIMIT 5""".stripMargin)
-      assert(routed.queryExecution.executedPlan.toString.contains("LeftSemi"),
-        routed.queryExecution.executedPlan.toString)
+      assertRoutedTo(routed, "vec_id")
       val spark2 = spark
       import spark2.implicits._
       val direct = AnnIndex.search(idx,
@@ -949,7 +962,7 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       val backwards = Tql.query(spark, dir,
         s"""SELECT vec_id FROM embeddings
            |ORDER BY COSINE_SIMILARITY(embedding, $arr) ASC LIMIT 5""".stripMargin)
-      assert(!backwards.queryExecution.executedPlan.toString.contains("LeftSemi"))
+      assert(inIds(backwards, "vec_id").isEmpty)
     } finally AnnIndex.Catalog.clear()
   }
 
@@ -965,8 +978,7 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       val routed = Tql.query(spark, dir,
         s"""SELECT vec_id, ROUND(DOT(embedding, $arr), 6) AS ip
            |FROM embeddings ORDER BY ip DESC, vec_id LIMIT 5""".stripMargin)
-      assert(routed.queryExecution.executedPlan.toString.contains("LeftSemi"),
-        routed.queryExecution.executedPlan.toString)
+      assertRoutedTo(routed, "vec_id")
       val spark2 = spark
       import spark2.implicits._
       val direct = AnnIndex.search(idx,
@@ -977,7 +989,151 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       val backwards = Tql.query(spark, dir,
         s"""SELECT vec_id FROM embeddings
            |ORDER BY DOT(embedding, $arr) ASC LIMIT 5""".stripMargin)
-      assert(!backwards.queryExecution.executedPlan.toString.contains("LeftSemi"))
+      assert(inIds(backwards, "vec_id").isEmpty)
+    } finally AnnIndex.Catalog.clear()
+  }
+
+  /** 2-d unit vectors at `deg` degrees plus seeded jitter in two more
+    * dims (float, as an embedding column stores them) */
+  private def at(deg: Double, rnd: scala.util.Random, jitter: Double): Seq[Float] = {
+    val r = math.toRadians(deg)
+    Seq(math.cos(r), math.sin(r), jitter * rnd.nextGaussian(), jitter * rnd.nextGaussian())
+      .map(_.toFloat)
+  }
+
+  /** `rows` (vec_id, grp, embedding) as a parquet table; returns its path */
+  private def vecTable(rows: Seq[(Long, Int, Seq[Float])]): String = {
+    val spark2 = spark
+    import spark2.implicits._
+    val path = java.nio.file.Files.createTempDirectory("ann_route").toString + "/t"
+    rows.toDF("vec_id", "grp", "embedding").write.parquet(path)
+    path
+  }
+
+  /** TQL top-k over `path` by the unrounded score of `metric` */
+  private def annTql(path: String, metric: String, q: Seq[Double], where: String,
+      k: Int): String = {
+    val arr = q.mkString("ARRAY[", ", ", "]")
+    val (fn, dir) = metric match {
+      case "cosine" => (s"COSINE_SIMILARITY(embedding, $arr)", "DESC")
+      case "l2" => (s"L2_NORM(embedding - $arr)", "ASC")
+      case _ => (s"DOT(embedding, $arr)", "DESC")
+    }
+    s"""SELECT vec_id, $fn AS s FROM "$path" $where ORDER BY s $dir, vec_id LIMIT $k"""
+  }
+
+  /** routed ids in answer order == AnnIndex.search's ids in rank order */
+  private def assertSameAsSearch(path: String, idx: graft.operators.AnnIndex.Index,
+      config: graft.operators.AnnIndex.SearchConfig, metric: String, q: Seq[Double],
+      where: Option[String], k: Int): Seq[Long] = {
+    import graft.operators.AnnIndex
+    val spark2 = spark
+    import spark2.implicits._
+    val routed = Tql.query(spark, dir, annTql(path, metric, q, where.fold("")("WHERE " + _), k))
+    val got = routed.collect().map(_.getLong(0)).toSeq
+    assertRoutedTo(routed, "vec_id")
+    val want = AnnIndex.search(idx, Seq((0, q)).toDF("qid", "q_vec"), "qid", "q_vec", k,
+        config, idFilter = where.map(w => spark.read.parquet(path).filter(expr(w))
+          .select(col("vec_id"))), metric = metric)
+      .orderBy(col("rank")).select(col("id")).collect().map(_.getLong(0)).toSeq
+    assert(got === want, s"$metric ${where.getOrElse("unfiltered")}")
+    got
+  }
+
+  test("single-query ANN route returns AnnIndex.search's ids in order: cosine, l2, dot; unfiltered, full-probe filter, widening filter") {
+    import graft.operators.AnnIndex
+    // 8 tight clusters: six near ones at 0..100 degrees (10 rows each)
+    // and two far ones at 180 and 200 degrees (60 rows each)
+    val rnd = new scala.util.Random(11)
+    val angles = Seq(0, 20, 40, 60, 80, 100, 180, 200)
+    var next = -1L
+    val rows = angles.zipWithIndex.flatMap { case (a, g) =>
+      Seq.fill(if (a >= 180) 60 else 10) { next += 1; (next, g, at(a, rnd, 0.01)) }
+    }
+    val path = vecTable(rows)
+    val idx = AnnIndex.build(spark.read.parquet(path), "vec_id", "embedding", 8)
+    // one cluster probed unfiltered: ceil(sqrt(8) * 0.3) = 1
+    val config = AnnIndex.SearchConfig(clusterSearchFactor = 0.3)
+    AnnIndex.Catalog.register(path, "embedding", "vec_id", idx, config)
+    try {
+      val q = at(5, rnd, 0.0).map(_.toDouble)
+      val far = rows.filter(_._2 >= 6).map(_._1).toSet
+      for (metric <- Seq("cosine", "l2", "dot")) {
+        assertSameAsSearch(path, idx, config, metric, q, None, 5)
+        // selectivity 20/180 is floored at 1/8, which scales the first
+        // probe to all 8 clusters
+        assertSameAsSearch(path, idx, config, metric, q, Some("grp < 2"), 5)
+        // selectivity 122/180 starts at 2 clusters holding 2 survivors;
+        // only widening reaches the far clusters' rows
+        val widened = assertSameAsSearch(path, idx, config, metric, q,
+          Some("grp >= 6 OR vec_id < 2"), 5)
+        assert(widened.length === 5 && widened.count(far) === 3, s"$metric: $widened")
+      }
+    } finally AnnIndex.Catalog.clear()
+  }
+
+  test("single-query ANN route ties: equal centroids probe the lower cluster_id, equal scores keep the lower id") {
+    import graft.operators.AnnIndex
+    val spark2 = spark
+    import spark2.implicits._
+    val rnd = new scala.util.Random(3)
+    // clusters 0 and 1 share one centroid; cluster 1 holds the better
+    // matches, so probing it instead of cluster 0 would change the answer
+    val rows = Seq((10L, 0, at(30, rnd, 0.0)), (11L, 0, at(35, rnd, 0.0)),
+      (20L, 1, at(1, rnd, 0.0)), (21L, 1, at(2, rnd, 0.0)),
+      (30L, 2, at(180, rnd, 0.0)))
+    val path = vecTable(rows)
+    val cents = Seq((0, at(20, rnd, 0.0)), (1, at(20, rnd, 0.0)), (2, at(180, rnd, 0.0)))
+      .toDF("cluster_id", "centroid")
+    val assign = spark.read.parquet(path)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"), col("grp").as("cluster_id"))
+    val idx = AnnIndex.of(cents, assign)
+    // one cluster probed: ceil(sqrt(3) * 0.5) = 1
+    val config = AnnIndex.SearchConfig(clusterSearchFactor = 0.5)
+    AnnIndex.Catalog.register(path, "embedding", "vec_id", idx, config)
+    val q = at(0, rnd, 0.0).map(_.toDouble)
+    try for (metric <- Seq("cosine", "l2", "dot"))
+      assert(assertSameAsSearch(path, idx, config, metric, q, None, 2) === Seq(10L, 11L))
+    finally AnnIndex.Catalog.clear()
+
+    // duplicate vectors: the score ties and the lower id ranks first
+    val dup = at(10, rnd, 0.0)
+    val path2 = vecTable(Seq((7L, 0, dup), (3L, 0, dup), (5L, 0, dup),
+      (1L, 0, at(60, rnd, 0.0))))
+    val one = Seq((0, at(10, rnd, 0.0))).toDF("cluster_id", "centroid")
+    val idx2 = AnnIndex.of(one, spark.read.parquet(path2)
+      .select(col("vec_id").as("id"), col("embedding").as("vec"), col("grp").as("cluster_id")))
+    AnnIndex.Catalog.register(path2, "embedding", "vec_id", idx2)
+    try for (metric <- Seq("cosine", "l2", "dot"))
+      assert(assertSameAsSearch(path2, idx2, AnnIndex.SearchConfig(), metric, q, None, 2) ===
+        Seq(3L, 5L))
+    finally AnnIndex.Catalog.clear()
+  }
+
+  test("a routed unfiltered ANN request runs 3 jobs: table open, candidates, answer") {
+    import graft.operators.AnnIndex
+    val emb = tbl("embeddings")
+    AnnIndex.Catalog.register("embeddings", "embedding", "vec_id",
+      AnnIndex.build(emb, "vec_id", "embedding", 8))
+    try {
+      val qv = emb.filter(col("vec_id") === 0).select(col("embedding"))
+        .collect()(0).getSeq[Float](0).map(_.toDouble)
+      val sql = s"""SELECT vec_id, ROUND(COSINE_SIMILARITY(embedding, ${qv.mkString("ARRAY[", ", ", "]")}), 6)
+                   |AS score FROM embeddings ORDER BY score DESC, vec_id LIMIT 10""".stripMargin
+      // job ids are handed out in submission order, so the jobs between
+      // two one-task marker jobs are exactly the request's jobs
+      val sc = spark.sparkContext
+      def marker(): Int = {
+        val f = sc.submitJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) => (),
+          Seq(0), (_: Int, _: Unit) => (), ())
+        f.get()
+        f.jobIds.head
+      }
+      def jobs(): Int = {
+        val a = marker(); Tql.query(spark, dir, sql).collect(); marker() - a - 1
+      }
+      jobs() // warm-up
+      assert(jobs() === 3)
     } finally AnnIndex.Catalog.clear()
   }
 }

@@ -79,6 +79,9 @@ def cell_eq(a, b):
     if type(a) is not type(b):
         return False
     if isinstance(a, float):
+        # pandas reads SQL NULL as NaN on both sides: NaN equals only NaN
+        if math.isnan(a) or math.isnan(b):
+            return math.isnan(a) and math.isnan(b)
         return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-9)
     return repr(a) == repr(b)
 
