@@ -392,9 +392,6 @@ object Tql {
   private val DropIndexRe =
     """(?is)^\s*DROP\s+INDEX\s+ON\s+("[^"]+"|[A-Za-z_]\w*)\s*\(\s*([A-Za-z_]\w*)\s*\)\s+TYPE\s+([A-Za-z_]\w*)\s*$""".r
 
-  private def isSnapshotRoot(p: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_v"))
-
   /** (catalog key, session artifact dir) for a non-versioned target.
     * The key must equal the root path the table's SCANS resolve to
     * (that is what IndexRewrite looks up): the URL itself for a quoted
@@ -431,7 +428,7 @@ object Tql {
     val quoted = target.startsWith("\"")
     val name = target.stripPrefix("\"").stripSuffix("\"")
     val where =
-      if (quoted && isSnapshotRoot(name)) {
+      if (quoted && graft.sources.Snapshots.isRoot(name)) {
         val df = graft.sources.Snapshots.open(spark, name)
         val idCol = idColOpt.getOrElse(df.columns.head)
         graft.sources.Snapshots.createIndex(spark, name, colName, tpe, idCol, jsonPaths)
@@ -479,7 +476,7 @@ object Tql {
                                         // live clustered index
     val quoted = target.startsWith("\"")
     val name = target.stripPrefix("\"").stripSuffix("\"")
-    if (quoted && isSnapshotRoot(name))
+    if (quoted && graft.sources.Snapshots.isRoot(name))
       graft.sources.Snapshots.dropIndex(spark, name, colName, tpe)
     else {
       val (key, dir) = namedIndexHome(name, colName, tpe)
@@ -505,7 +502,7 @@ object Tql {
 
   private def runShowIndexes(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    require(isSnapshotRoot(root), s"$root is not a versioned table root")
+    require(graft.sources.Snapshots.isRoot(root), s"$root is not a versioned table root")
     graft.sources.Snapshots.indexes(root)
       .map { case (c, t) => (root, c, t) }
       .toDF("table_root", "column_name", "index_type")

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+import graft.core.Op
 import graft.functions.{CosineSimilarity, DotProduct, VectorDistance, gf}
 
 /** Clustered ANN index (SURVEY.md §2.9) — the Spark analog of the
@@ -349,7 +350,7 @@ object AnnIndex {
       .map(_._2)
     val assignBase = filteredView(index.assignments, idFilter)
     val sc = index.assignments.sparkSession.sparkContext
-    def attempt(nProbe: Int): Seq[Any] = described(sc, "ann:candidates") {
+    def attempt(nProbe: Int): Seq[Any] = Op.scope(sc, "ann:candidates") {
       assignBase.filter(col("cluster_id").isin(clusters.take(nProbe): _*))
         .select(col("id"), score(col("vec"), Bridge.column(qExpr)).as("score"))
         .orderBy(ordFn(metric)(col("score")), col("id")).limit(k)
@@ -358,15 +359,7 @@ object AnnIndex {
     val nProbe0 = firstProbe(index.nClusters, config)
     if (idFilter.isEmpty) attempt(nProbe0)
     else widening(index.nClusters, nProbe0, k, index.assignmentRows,
-      described(sc, "ann:survivors")(assignBase.count()))(attempt)(_.length < _)
-  }
-
-  /** Run `body`'s jobs under `what` as their Spark job description, then
-    * restore the caller's. */
-  private def described[T](sc: org.apache.spark.SparkContext, what: String)(body: => T): T = {
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(what)
-    try body finally sc.setJobDescription(prev)
+      Op.scope(sc, "ann:survivors")(assignBase.count()))(attempt)(_.length < _)
   }
 
   /** the metric's codegen kernel, shared by frame scoring and the

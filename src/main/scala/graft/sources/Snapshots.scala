@@ -56,6 +56,11 @@ object Snapshots {
     if (branch == Main) Paths.get(root, "_v")
     else Paths.get(root, "_v", s"b_$branch")
 
+  /** A versioned root is a local dir holding `_v`: `file:` is stripped,
+    * and a `scheme://` URL or an unreadable path is never one. */
+  def isRoot(path: String): Boolean = Some(path.stripPrefix("file:")).exists(p =>
+    !p.contains("://") && (try Files.exists(Paths.get(p, "_v")) catch { case _: Exception => false }))
+
   private def refFile(root: String, kind: String, name: String): Path =
     Paths.get(root, "_refs", kind, name)
 

@@ -16,20 +16,7 @@ import graft.operators.{Dedup, Graphs, Ranking}
 class FixpointSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.core.Session.local(4)
 
-  /** id of a fresh one-task job. Job ids are handed out in submission
-    * order, so the jobs between two markers are exactly the jobs the
-    * body ran — no wait on the asynchronous listener bus. */
-  private def marker(): Int = {
-    val sc = spark.sparkContext
-    val f = sc.submitJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) => (),
-      Seq(0), (_: Int, _: Unit) => (), ())
-    f.get()
-    f.jobIds.head
-  }
-
-  private def jobs(body: => Unit): Int = {
-    val a = marker(); body; marker() - a - 1
-  }
+  private def jobs(body: => Unit): Int = JobCount(spark)(body)
 
   /** jobs(k + 1 rounds) − jobs(k rounds), after one warm-up run */
   private def perRound(run: Int => DataFrame, k: Int, k1: Int): Int = {

@@ -308,25 +308,20 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("LIMIT PERCENT compiles lazily (no eager count job)") {
-    // any compile runs table-resolution (parquet listing) jobs; the old
-    // bug was ONE EXTRA full count() job for PERCENT — so compare against
-    // a plain-LIMIT compile of the same query
-    def jobsDuring(tag: String)(body: => Unit): Int = {
-      spark.sparkContext.setJobGroup(tag, tag)
-      body
-      Thread.sleep(300) // let job-start events land in the status store
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.statusTracker.getJobIdsForGroup(tag).length
-    }
-    val plain = jobsDuring("lp-plain") {
+    // the old bug was ONE EXTRA full count() job for PERCENT, so compare
+    // against a plain-LIMIT compile of the same query; on a warm table
+    // (its schema cached by sources.Tables) both compiles run no job
+    tbl("orders")
+    val plain = JobCount(spark) {
       Tql.query(spark, dir, "SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 10")
     }
     var df: org.apache.spark.sql.DataFrame = null
-    val pct = jobsDuring("lp-pct") {
+    val pct = JobCount(spark) {
       df = Tql.query(spark, dir,
         "SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 10 PERCENT")
     }
     assert(pct == plain, s"LIMIT PERCENT compile launched ${pct - plain} extra job(s)")
+    assert(plain == 0, s"a warm plain-LIMIT compile launched $plain job(s)")
     // and the result still honors floor(total * pct / 100)
     val total = tbl("orders").count()
     assert(df.count() == (total * 10 / 100.0).toInt)
@@ -1110,7 +1105,7 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally AnnIndex.Catalog.clear()
   }
 
-  test("a routed unfiltered ANN request runs 3 jobs: table open, candidates, answer") {
+  test("a routed unfiltered ANN request runs 2 jobs on a warm table (candidates, answer), 3 on a cold one") {
     import graft.operators.AnnIndex
     val emb = tbl("embeddings")
     AnnIndex.Catalog.register("embeddings", "embedding", "vec_id",
@@ -1120,20 +1115,13 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect()(0).getSeq[Float](0).map(_.toDouble)
       val sql = s"""SELECT vec_id, ROUND(COSINE_SIMILARITY(embedding, ${qv.mkString("ARRAY[", ", ", "]")}), 6)
                    |AS score FROM embeddings ORDER BY score DESC, vec_id LIMIT 10""".stripMargin
-      // job ids are handed out in submission order, so the jobs between
-      // two one-task marker jobs are exactly the request's jobs
-      val sc = spark.sparkContext
-      def marker(): Int = {
-        val f = sc.submitJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) => (),
-          Seq(0), (_: Int, _: Unit) => (), ())
-        f.get()
-        f.jobIds.head
-      }
-      def jobs(): Int = {
-        val a = marker(); Tql.query(spark, dir, sql).collect(); marker() - a - 1
-      }
+      def jobs(): Int = JobCount(spark)(Tql.query(spark, dir, sql).collect())
       jobs() // warm-up
+      assert(jobs() === 2)
+      // a cold table adds its one schema-inference job
+      graft.sources.Tables.schemas.keySet().removeIf(_.endsWith(s"$dir/embeddings.parquet"))
       assert(jobs() === 3)
+      assert(jobs() === 2)
     } finally AnnIndex.Catalog.clear()
   }
 }
