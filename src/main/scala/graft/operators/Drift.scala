@@ -24,7 +24,7 @@ object Drift {
 
   /** per-bin breakdown: (bin, n_ref, n_cur, p_ref, p_cur, psi_term).
     * Exact edges (default) come from [[Quantiles.exactQuantiles]] —
-    * funnel-free rank selection, bit-identical to `percentile()` (the
+    * funnel-free sketch-then-refine, bit-identical to `percentile()` (the
     * oracle arithmetic) without its value→count map whose final merge
     * funnels through one reducer at distinct-cardinality cost;
     * `approxEdges` swaps in approx_percentile's fixed-size sketch
@@ -41,7 +41,7 @@ object Drift {
     val curNn = cur.filter(col(valueCol).isNotNull)
     val qs = (1 until nBins).map(_.toDouble / nBins)
     // edge frame: a broadcast 1-row sketch frame (approx) or the exact
-    // rank-selected edges bound as literals on a dummy 1-row frame —
+    // edges bound as literals on a dummy 1-row frame —
     // either way `binned` crossJoins it and reads __e0..__e{n-2}
     val edgeFrame: DataFrame =
       if (approxEdges) {

@@ -502,9 +502,9 @@ object EventAnalytics {
     * Gaps are near-unique doubles, so exact `percentile()`'s per-group
     * value→count map grows with the group's ROW count — a hot event
     * type funnels its whole history through one reducer buffer. The
-    * exact default therefore rank-selects
+    * exact default therefore sketches then refines
     * ([[Quantiles.exactQuantilesByKey]], bit-identical, every stage
-    * parallel; two window passes instead of one, nothing data-sized
+    * parallel; two grouped passes over the gaps, nothing data-sized
     * funnels) and assembles the type-count-bounded result locally.
     * `approxBounds` keeps the lazy one-window plan with a fixed-width
     * sketch per group — same convention as `Robust.winsorize`.

@@ -73,7 +73,7 @@ object Features {
     * at or below x, for k bins (edges at 1/k … (k−1)/k). Returns df +
     * `bin` (0-based; NULL values get NULL bins). Exact edges (default)
     * come from [[graft.operators.Quantiles.exactQuantiles]] — funnel-
-    * free rank selection, bit-identical to `percentile()` — and bind
+    * free sketch-then-refine, bit-identical to `percentile()` — and bind
     * as literals; `approxBounds` swaps in the fixed-state sketch
     * (lazy), exactly as [[Robust.winsorize]]. */
   def discretize(df: DataFrame, valueCol: String, bins: Int,
@@ -109,7 +109,7 @@ object Features {
     * bins combine as a weighted mean scaled to [0,1] — the standard
     * way to fuse incommensurable quality signals (length, token count,
     * ratios) into ONE ranking score without hand-tuned scale factors.
-    * Exact edges (default) come from ONE keyed rank-selection pass over
+    * Exact edges (default) come from ONE keyed exact-quantile call over
     * all signals ([[graft.operators.Quantiles.exactQuantilesByKey]] —
     * funnel-free, bit-identical to `percentile()`) and bind as
     * literals; `approxBounds` swaps in per-signal fixed-width sketches
@@ -140,7 +140,7 @@ object Features {
         }.drop(signalCols.indices.map(i => s"__e_$i"): _*)
       } else {
         // exact edges for EVERY signal in ONE corpus pass: explode to
-        // (signal, value) rows and rank-select per key — funnel-free
+        // (signal, value) rows and sketch then refine per key — funnel-free
         // ([[graft.operators.Quantiles.exactQuantilesByKey]]), unlike
         // percentile()'s per-signal value→count map merges. A signal
         // with no non-NULL values has no edges (percentile's NULL) and

@@ -1,35 +1,41 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable
+import scala.reflect.ClassTag
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.QuantileSummaries
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
 import org.apache.spark.sql.functions._
+import graft.core.Op
 
 /** Distributed EXACT quantiles.
   *
-  * Spark's exact `percentile()` aggregate carries a value→count map as
-  * its state: every partial map funnels through ONE final reducer whose
-  * merge is proportional to the global distinct-value count. On
-  * high-cardinality doubles that single thread IS the query's wall
-  * time — and at 100 TB it is a scale-killer (the map is the data).
+  * Spark's exact `percentile()` carries a value→count map as its state,
+  * and every partial map funnels through ONE final reducer whose merge
+  * is proportional to the global distinct count: at 100 TB of
+  * high-cardinality doubles, a scale-killer (the map is the data).
   *
-  * This operator computes the same interpolated quantiles
-  * (`percentile`/`quantile_cont` semantics: linear interpolation at
-  * 0-based rank q·(n−1)) with rank SELECTION instead of a value map —
-  * the [[Drift.ksGaps]] machinery:
-  *   1. ONE hash aggregate collapses ties: (value, count), fixed-width
-  *   2. range-repartition by value (partition order == value order)
-  *   3. per-partition totals → a numPartitions-row driver artifact,
-  *      prefix-summed into start offsets (no global window anywhere)
-  *   4. offsets broadcast back; each row knows its global 0-based rank
-  *      range [start, start+count); the ≤ 2·|qs| rows covering the
-  *      target ranks are collected and interpolated on the driver.
-  * Every stage is parallel; nothing data-sized crosses one thread.
+  * This operator computes the same interpolated quantiles (rank
+  * q·(n−1)) by sketch-then-refine, two fixed-state per-key passes:
+  *   1. bounds: a Greenwald–Khanna summary (SIGMOD 2001, the state of
+  *      `approx_percentile`; rank error ≤ n/accuracy, exact under
+  *      accuracy/2 rows) read 2n/accuracy ranks beyond each target rank;
+  *   2. slice: rows below lo, equal to lo and equal to hi are counted
+  *      (ties never collected), those strictly inside collected.
+  * The sketch is checked, not trusted: a rank outside the slice, or a
+  * slice past the cap (accuracy values), refines in the span that holds
+  * it. A round serves every open rank of every key, so jobs grow with
+  * the depth (one round to ~16.7M rows per key, two to ~2.8·10¹⁰), not
+  * with keys or ranks. Nothing is persisted and nothing data-sized
+  * crosses one thread. The price is laziness: this runs jobs NOW, where
+  * `percentile()` rides inside a lazy plan.
   *
-  * The price is laziness: this runs jobs NOW and returns values (like
-  * the literal-bound ANN centroids), where `percentile()` rides inside
-  * a lazy plan. Consumers that need lazy 1-row frames keep
-  * `percentile()`; consumers that broadcast the bounds anyway can bind
-  * these as literals with identical results.
+  * Each pass is an RDD `combineByKey`, which reads a summary at per-key
+  * ranks in one job (AQE runs a grouped aggregate as two) but pays a Row
+  * conversion per row: at 8M rows of one key it took 14.7–16.1 s, a
+  * DataFrame version 14.3 s. `QuantileSummaries` and `SQLOrderingUtil` are
+  * catalyst internals without a compatibility promise; AuditSpec's
+  * bit-identity tests against `percentile()` check them on an upgrade.
   */
 object Quantiles {
 
@@ -39,10 +45,9 @@ object Quantiles {
     * with k = ⌈(n+1)(1−α)⌉ guarantees P(new score ≤ threshold) ≥ 1−α
     * for exchangeable data — the coverage-GUARANTEED way to set a
     * "keep below this anomaly score" filter cutoff, where a plain
-    * quantile has no finite-sample guarantee. k-th order statistic via
-    * the funnel-free [[exactQuantiles]] rank selection at
-    * q = (k−1)/(n−1) (integer rank — interpolation weight 0).
-    * Returns one row `(n, k, alpha, threshold)` (threshold 6dp).
+    * quantile has no finite-sample guarantee: [[exactQuantiles]] at
+    * q = (k−1)/(n−1), an integer rank. Returns one row
+    * `(n, k, alpha, threshold)` (threshold 6dp).
     * α must satisfy k ≤ n (n ≥ (1−α)/α calibration points). */
   def conformalThreshold(df: DataFrame, scoreCol: String,
       alpha: Double): DataFrame = {
@@ -62,149 +67,164 @@ object Quantiles {
   }
 
   /** Exact interpolated quantiles of `valueCol` (NULLs excluded), same
-    * arithmetic as `percentile(col, array(qs))`: value at fractional
-    * 0-based rank r = q·(n−1) is lo + (r − ⌊r⌋)·(hi − lo). Throws on an
-    * empty (all-NULL) input like percentile returns NULL — caller
-    * checks. */
+    * arithmetic as `percentile(col, array(qs))` at 0-based rank
+    * q·(n−1). Throws on an empty (all-NULL) input. */
   def exactQuantiles(df: DataFrame, valueCol: String,
       qs: Seq[Double]): Array[Double] =
     exactQuantilesOpt(df, valueCol, qs)
       .getOrElse(throw new IllegalArgumentException(
         s"requirement failed: no non-NULL values in $valueCol"))
 
-  /** [[exactQuantiles]] that mirrors percentile()'s NULL-on-empty
-    * instead of throwing: None when `valueCol` has no non-NULL values.
-    * The graceful-degradation entry point for the exact-DEFAULT
-    * consumers (winsorize/madScore/psiBins/discretize), whose old
-    * percentile() plans produced NULL bounds on empty input rather
-    * than failing the job. */
+  /** [[exactQuantiles]] that mirrors percentile()'s NULL-on-empty:
+    * None when `valueCol` has no non-NULL values, so the exact-default
+    * consumers (winsorize/madScore/psiBins/discretize) degrade to NULL
+    * bounds instead of failing. */
   def exactQuantilesOpt(df: DataFrame, valueCol: String,
       qs: Seq[Double]): Option[Array[Double]] =
     exactQuantilesByKey(
       df.select(lit("").as("__k"), col(valueCol).as("__val")), "__k", "__val", qs)
       .get("")
 
-  /** [[exactQuantilesOpt]] over a PRE-COLLAPSED (value, weight) frame —
-    * the entry point for multi-pass consumers ([[Robust.madScore]]'s
-    * median-then-MAD): collapse the corpus to tie counts ONCE, persist
-    * that, and run every later pass over the distinct-value frame
-    * instead of re-scanning the source. Bit-identical to running
-    * [[exactQuantilesOpt]] on the exploded rows (the rank arithmetic
-    * only ever sees per-value totals). */
-  def exactQuantilesWeightedOpt(df: DataFrame, valueCol: String,
-      weightCol: String, qs: Seq[Double]): Option[Array[Double]] =
-    exactQuantilesByKey(
-      df.select(lit("").as("__k"), col(valueCol).as("__val"),
-        col(weightCol).as("__wt")),
-      "__k", "__val", qs, weightCol = Some("__wt"))
-      .get("")
-
-  /** [[exactQuantiles]] for SEVERAL value populations in ONE corpus
-    * pass: `df` carries (key, value) rows — e.g. the per-signal explode
-    * of [[graft.operators.Features.percentileBlend]] — and every key
-    * gets its own exact interpolated quantiles. Same rank-selection
-    * machinery, keys simply prepend the range-partition ordering; the
-    * driver artifacts grow to numPartitions × |keys| rows (keys are
-    * signals/metrics — a handful — never data-sized). Keys with no
+  /** [[exactQuantiles]] for SEVERAL value populations at once: `df`
+    * carries (key, value) rows — e.g. the per-signal explode of
+    * [[graft.operators.Features.percentileBlend]] — and both aggregates
+    * group by key (keys are a handful, never data-sized). Keys with no
     * non-NULL values are absent from the result (percentile's NULL). */
   def exactQuantilesByKey(df: DataFrame, keyCol: String, valueCol: String,
-      qs: Seq[Double], weightCol: Option[String] = None): Map[String, Array[Double]] =
-    exactQuantilesByKeyWithN(df, keyCol, valueCol, qs, weightCol)
+      qs: Seq[Double]): Map[String, Array[Double]] =
+    exactQuantilesByKeyWithN(df, keyCol, valueCol, qs)
       .map { case (k, (vs, _)) => k -> vs }
 
-  /** [[exactQuantilesByKey]] also returning each key's non-NULL row
-    * count — the machinery already collects per-partition totals to
-    * build rank offsets, so consumers that need n (Theil-Sen's pair
-    * count, conformal k) read it for free instead of paying a separate
-    * count() pass over the same frame. */
-  def exactQuantilesByKeyWithN(df: DataFrame, keyCol: String, valueCol: String,
-      qs: Seq[Double], weightCol: Option[String] = None): Map[String, (Array[Double], Long)] = {
+  private val Accuracy = 10000 // the sketch's rank error is 1/Accuracy of its span
+  private val Band = 2.0 / Accuracy // each bound sits Band of the span beyond its ranks
+
+  /** `ranks` of one key's `m` rows in the open window (lo, hi) (None is
+    * unbounded; `off` rows below it), read between bounds `blo` ≤ `bhi`. */
+  private[graft] case class Probe(lo: Option[Double], hi: Option[Double], off: Long, m: Long,
+      ranks: Seq[Long], blo: Option[Double] = None, bhi: Option[Double] = None) {
+    def holds(v: Double): Boolean =
+      lo.forall(compareDoubles(v, _) > 0) && hi.forall(compareDoubles(v, _) < 0)
+  }
+
+  /** [[exactQuantilesByKey]] also returning each key's non-NULL row count
+    * (Theil-Sen's pair count), refining slices past `cap` values. */
+  private[graft] def exactQuantilesByKeyWithN(df: DataFrame, keyCol: String, valueCol: String,
+      qs: Seq[Double], cap: Int = Accuracy): Map[String, (Array[Double], Long)] = {
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
       s"quantiles must be in [0,1]: $qs")
-    // perKV persists FIRST: repartitionByRange runs a range-boundary
-    // sampling job over its input, which would otherwise re-execute the
-    // whole tie-collapse aggregate (the corpus scan) a second time.
-    // With weightCol, rows arrive as (value, weight) tie runs and skip
-    // the collapse ENTIRELY — the rank machinery never needed unique
-    // values (each row covers its own [start, start+c) rank range, ties
-    // or not; the collapse was only a row-count optimization), so the
-    // weighted path costs zero extra shuffles.
-    val base = df.filter(col(valueCol).isNotNull && col(keyCol).isNotNull)
-    val perKV = (weightCol match {
-      case Some(wc) => base
-        .select(col(keyCol).cast("string").as("__k"),
-          col(valueCol).cast("double").as("__v"),
-          col(wc).cast("long").as("__c"))
-      case None => base
-        .select(col(keyCol).cast("string").as("__k"),
-          col(valueCol).cast("double").as("__v"))
-        .groupBy(col("__k"), col("__v")).agg(count(lit(1)).as("__c"))
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val parts = perKV.repartitionByRange(col("__k"), col("__v"))
-      .sortWithinPartitions(col("__k"), col("__v"))
-      .withColumn("__pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val totals = parts.groupBy(col("__pid"), col("__k"))
-        .agg(sum(col("__c")).as("__t"))
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
-      if (totals.isEmpty) return Map.empty
-      val byKey = totals.groupBy(_._2)
-      val offRows = byKey.toSeq.flatMap { case (k, rows) =>
-        var o = 0L
-        rows.sortBy(_._1).map { case (pid, _, t) =>
-          val row = (pid, k, o); o += t; row
-        }
+    val rows = df.select(col(keyCol).cast("string").as("__k"),
+        col(valueCol).cast("double").as("__v"))
+      .filter(col("__k").isNotNull && col("__v").isNotNull)
+    val first = bounds(rows, _ => Seq(Probe(None, None, 0L, 0L, Nil))) { (_, s) =>
+      qs.map { q =>
+        val r = q * (s.count - 1)
+        bounded(Probe(None, None, 0L, s.count,
+          Seq(math.floor(r).toLong, math.ceil(r).toLong).distinct), s)
       }
-      val ranksByKey = byKey.map { case (k, rows) =>
-        val n = rows.map(_._3).sum
-        k -> qs.map(q => q * (n - 1))
+    }
+    val found = mutable.Map.empty[(String, Long), Double]
+    var (live, probes) = (rows, first)
+    while (probes.nonEmpty) {
+      // one round: a slice pass reads every probe of every key, and one
+      // bounds pass sketches again each span that holds an unread rank
+      val open = slices(live, probes, cap).flatMap { case (k, p, ends, inside) =>
+        p.ranks.flatMap(t => locate(p, ends, inside, t, cap) match {
+          case Right(v) => found((k, t)) = v; None
+          case Left(next) => require(next.m < p.m, s"rank $t of $k not narrowed"); Some(k -> next)
+        })
+      }.distinct.groupMap(_._1)(_._2)
+      live = rows.filter(col("__k").isin(open.keys.toSeq: _*))
+      probes = if (open.isEmpty) Map.empty
+        else bounds(live, open)((p, s) => Seq(bounded(p, s)))
+    }
+    // Spark Percentile's exact lo·(1−f) + hi·f, NOT lo + f·(hi−lo): they
+    // differ in the last bit, and the specs gate bit-identity
+    first.map { case (k, ps) =>
+      val n = ps.head.m
+      k -> (qs.map { q =>
+        val r = q * (n - 1); val f = r - math.floor(r)
+        found((k, math.floor(r).toLong)) * (1.0 - f) + found((k, math.ceil(r).toLong)) * f
+      }.toArray, n)
+    }
+  }
+
+  /** `p` bounded by its span's sketch `s`, Band of the span below its
+    * lowest and above its highest rank at the sketch's 1-based rank ⌈f·m⌉
+    * (none off an end; an exact sketch puts blo ON the lowest rank). */
+  private def bounded(p: Probe, s: QuantileSummaries): Probe = {
+    val fs = Seq((p.ranks.min - p.off + 1).toDouble / p.m - Band,
+      (p.ranks.max - p.off + 1).toDouble / p.m + Band)
+    val Seq(a, b) = fs.map(f => s.query(math.min(1.0, math.max(0.0, f))).get)
+      .sorted(Ordering.Double.TotalOrdering)
+    p.copy(blo = if (fs(0) <= 0) None else Some(a), bhi = if (fs(1) >= 1) None else Some(b))
+  }
+
+  /** Folds each key's rows into one state per probe that holds them,
+    * merged per key after a shuffle: one job per pass. */
+  private def perKey[S: ClassTag](rows: DataFrame, pass: String, probes: String => Seq[Probe])(
+      zero: Probe => S)(add: (S, Double) => S, merge: (S, S) => S): Map[String, Seq[S]] = {
+    type St = (Array[Probe], Array[S])
+    def fold(st: St, v: Double): St = {
+      for (i <- st._1.indices if st._1(i).holds(v)) st._2(i) = add(st._2(i), v)
+      st
+    }
+    Op.scope(rows.sparkSession.sparkContext, pass) {
+      rows.rdd.map(r => (r.getString(0), r)).combineByKey(
+        (r: Row) => { val ps = probes(r.getString(0)).toArray; fold((ps, ps.map(zero)), r.getDouble(1)) },
+        (st: St, r: Row) => fold(st, r.getDouble(1)),
+        (a: St, b: St) => (a._1, a._2.zip(b._2).map(merge.tupled))
+      ).collect().map { case (k, (_, ss)) => k -> ss.toSeq }.toMap
+    }
+  }
+
+  /** Bounds pass: each key's probes, re-made by `read` from the
+    * Greenwald–Khanna summary of their spans (its count is m). */
+  private def bounds(rows: DataFrame, probes: String => Seq[Probe])(
+      read: (Probe, QuantileSummaries) => Seq[Probe]): Map[String, Seq[Probe]] =
+    perKey(rows, "quantiles:bounds", probes)(_ =>
+        new QuantileSummaries(QuantileSummaries.defaultCompressThreshold, 1.0 / Accuracy))(
+      _.insert(_), (a, b) => a.compress().merge(b.compress()))
+      .map { case (k, ss) => k -> probes(k).zip(ss).flatMap { case (p, s) => read(p, s.compress()) } }
+
+  /** One probe's slice in SQL's double order: counts of the rows below
+    * blo, = blo, strictly between the bounds (`inside`, complete while
+    * at most `cap`, so a state never holds more), = bhi. */
+  private final class Cut(p: Probe, cap: Int) extends Serializable {
+    val counts = new Array[Long](4)
+    val inside = mutable.ArrayBuffer.empty[Double]
+    def add(v: Double): Cut = {
+      val l = if (p.blo.isEmpty) 1 else compareDoubles(v, p.blo.get)
+      val h = if (p.bhi.isEmpty) -1 else compareDoubles(v, p.bhi.get)
+      if (l < 0) counts(0) += 1 else if (l == 0) counts(1) += 1
+      else if (h < 0) { counts(2) += 1; if (counts(2) <= cap) inside += v } else if (h == 0) counts(3) += 1
+      this
+    }
+    def merge(o: Cut): Cut = {
+      (0 to 3).foreach(i => counts(i) += o.counts(i))
+      if (counts(2) <= cap) inside ++= o.inside
+      this
+    }
+  }
+
+  /** Slice pass: each probe's [[Cut]], with the ranks where its regions end. */
+  private def slices(rows: DataFrame, probes: Map[String, Seq[Probe]],
+      cap: Int): Seq[(String, Probe, Seq[Long], Array[Double])] =
+    perKey(rows, "quantiles:slice", probes)(new Cut(_, cap))(_.add(_), _.merge(_)).toSeq
+      .flatMap { case (k, cs) =>
+        probes(k).zip(cs).map { case (p, c) => (k, p, c.counts.toSeq.scanLeft(p.off)(_ + _).tail,
+          c.inside.toArray.sorted(Ordering.Double.TotalOrdering)) }
       }
-      val targetsByKey = ranksByKey.map { case (k, rs) =>
-        k -> rs.flatMap(r => Seq(math.floor(r).toLong, math.ceil(r).toLong))
-          .distinct.sorted
-      }
-      val spark = df.sparkSession
-      import spark.implicits._
-      val offs = offRows.toDF("__pid", "__k", "__off")
-      // target ranks ride as a broadcast (key, rank) table and the
-      // covering-row test is a hash join on key + a range filter — a
-      // per-row cost of |qs|·2 comparisons for the row's OWN key. (A
-      // literal OR-chain over every key's targets would cost
-      // |keys|·|qs|·2 predicates per row — disastrous for the
-      // many-bucket keyed consumers.)
-      val targetRows = targetsByKey.toSeq
-        .flatMap { case (k, ts) => ts.map(t => (k, t)) }
-        .toDF("__k", "__t")
-      val w = Window.partitionBy(col("__pid"), col("__k")).orderBy(col("__v"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val hits = parts.join(broadcast(offs), Seq("__pid", "__k"))
-        .withColumn("__start",
-          col("__off") + sum(col("__c")).over(w) - col("__c"))
-        .join(broadcast(targetRows), Seq("__k"))
-        .filter(col("__start") <= col("__t") &&
-          col("__start") + col("__c") > col("__t"))
-        .select(col("__k"), col("__v"), col("__start"), col("__c"))
-        .dropDuplicates("__k", "__start")
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3)))
-        .groupBy(_._1)
-      ranksByKey.map { case (k, ranks) =>
-        val hs = hits.getOrElse(k, Array.empty)
-        def valueAt(t: Long): Double =
-          hs.find(h => h._3 <= t && t < h._3 + h._4)
-            .getOrElse(sys.error(s"rank $t not covered for key $k — bug"))._2
-        val vs = ranks.map { r =>
-          val lo = valueAt(math.floor(r).toLong)
-          val hi = valueAt(math.ceil(r).toLong)
-          // Spark Percentile's exact arithmetic (lo·(1−f) + hi·f), NOT
-          // lo + f·(hi−lo) — the two differ in the last bit and the
-          // specs gate bit-identity against percentile()
-          val f = r - math.floor(r)
-          lo * (1.0 - f) + hi * f
-        }.toArray
-        k -> (vs, byKey(k).map(_._3).sum)
-      }
-    } finally { parts.unpersist(false); perKV.unpersist(false); () }
+
+  /** The value at rank `t`, or the narrower span that holds it; `ends` are
+    * where the rows below blo, = blo, between (`inside`) and = bhi end. */
+  private[graft] def locate(p: Probe, ends: Seq[Long], inside: Array[Double], t: Long,
+      cap: Int): Either[Probe, Double] = {
+    val Seq(atLo, atIn, atHi, above) = ends
+    if (t < atLo) Left(Probe(p.lo, p.blo, p.off, atLo - p.off, Seq(t)))
+    else if (t < atIn) Right(p.blo.get)
+    else if (t >= above) Left(Probe(p.bhi, p.hi, above, p.off + p.m - above, Seq(t)))
+    else if (t >= atHi) Right(p.bhi.get)
+    else if (atHi - atIn <= cap) Right(inside((t - atIn).toInt))
+    else Left(Probe(p.blo, p.bhi, atIn, atHi - atIn, Seq(t)))
   }
 }

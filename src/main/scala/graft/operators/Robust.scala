@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * Two bound postures:
   *   - exact (default): [[Quantiles.exactQuantiles]] — exact AND
-  *     funnel-free (range-partition rank selection; bit-identical to
+  *     funnel-free (sketch-then-refine; bit-identical to
   *     `percentile()` by AuditSpec, so the SQL oracle holds). The
   *     bounds are eager driver-bound literals, which is what the clamp
   *     broadcast wanted anyway. Spark's own exact `percentile` is NOT
@@ -122,9 +122,9 @@ object Robust {
       .select(((col("y2") - col("y1")) / (col("x2") - col("x1"))).as("m"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // slope median AND the pair count from ONE rank-selection pass —
-      // the quantile machinery already sums per-partition totals, so a
-      // separate count() over the pair frame was a redundant action
+      // slope median AND the pair count from ONE exact-quantile call —
+      // its bounds pass counts the rows, so a separate count() over the
+      // pair frame would be a redundant action
       val (slopes, nPairs) = Quantiles.exactQuantilesByKeyWithN(
           pairs.select(lit("").as("__k"), col("m").as("__val")), "__k", "__val",
           Seq(0.5))
@@ -164,24 +164,15 @@ object Robust {
           when(col("mad") > 0,
             lit(0.6745) * (col(valueCol).cast("double") - col("med")) / col("mad")))
     } else {
-      // collapse the corpus to (value, tie-count) ONCE and run BOTH
-      // median passes weighted over that persisted distinct-value frame
-      // — the second pass (median of |x − m|) pays a distinct-value
-      // re-agg instead of a full source re-scan + re-collapse. None
-      // (empty / all-NULL input) mirrors percentile()'s NULL medians.
-      val vc = df.select(col(valueCol).cast("double").as("__x"))
-        .filter(col("__x").isNotNull)
-        .groupBy(col("__x")).agg(count(lit(1)).as("__c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val stats =
-        try {
-          Quantiles.exactQuantilesWeightedOpt(vc, "__x", "__c", Seq(0.5)).map { m0 =>
-            val m = m0.head
-            (m, Quantiles.exactQuantilesWeightedOpt(
-              vc.select(abs(col("__x") - m).as("__d"), col("__c")),
-              "__d", "__c", Seq(0.5)).get.head)
-          }
-        } finally { vc.unpersist(false); () }
+      // two exact passes, each re-reading the source: the median, then
+      // the median of |x − m|. None (empty / all-NULL input) mirrors
+      // percentile()'s NULL medians.
+      val stats = Quantiles.exactQuantilesOpt(df, valueCol, Seq(0.5)).map { m0 =>
+        val m = m0.head
+        (m, Quantiles.exactQuantiles(
+          df.select(abs(col(valueCol).cast("double") - m).as("__d")),
+          "__d", Seq(0.5)).head)
+      }
       stats match {
         case Some((med, mad)) =>
           df.withColumn("med", lit(med)).withColumn("mad", lit(mad))

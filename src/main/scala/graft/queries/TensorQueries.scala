@@ -563,7 +563,7 @@ object TensorQueries extends QueryModule {
 
     // ---- winsorized (percentile-clipped) statistics: outlier-robust
     // feature cleaning — exact [p01, p99] bounds come from funnel-free
-    // rank selection (operators.Quantiles, bit-identical to DuckDB
+    // sketch-then-refine (operators.Quantiles, bit-identical to DuckDB
     // quantile_cont so fully oracle-checked) and bind as literals;
     // clamping is map-side math. operators.Robust also offers
     // approxBounds (fixed-size sketch state) as the lazy posture.

@@ -26,7 +26,7 @@ object StreamingDrift {
     require(nBins >= 2, "need at least 2 bins")
     val spark = ref.sparkSession
     val refNn = ref.filter(col(valueCol).isNotNull)
-    // rank-selected exact edges (bit-identical to percentile(), no
+    // exact edges (bit-identical to percentile(), no
     // value-map single-reducer state — the repo's exact-default rule)
     val edges = graft.operators.Quantiles.exactQuantiles(
       refNn, valueCol, (1 until nBins).map(_.toDouble / nBins))

@@ -390,6 +390,115 @@ class AuditSpec extends AnyFunSuite {
     assert(!got.contains("k2"))
   }
 
+  test("exactQuantiles: a median tied across more rows than the slice cap equals percentile()") {
+    import graft.operators.Quantiles
+    val qs = Seq(0.25, 0.5, 0.75)
+    // 3000 of 5000 rows tie at 7.0, spanning every target rank
+    val tied = spark.range(5000).select(
+      when(col("id") % 5 < 3, lit(7.0))
+        .otherwise(pmod(xxhash64(col("id"), lit(5L)), lit(1000L)) / 100.0).as("v"))
+    val expected = tied.agg(expr(s"percentile(v, array(${qs.mkString(",")}))"))
+      .head().getSeq[Double](0)
+    val kv = tied.select(lit("").as("k"), col("v"))
+    for (cap <- Seq(10, 10000)) {
+      val (got, n) = Quantiles.exactQuantilesByKeyWithN(kv, "k", "v", qs, cap)("")
+      assert(got.toSeq === expected && n === 5000L, s"cap $cap")
+    }
+  }
+
+  test("exactQuantiles: a forced refine stays bit-identical to percentile()") {
+    import graft.operators.Quantiles
+    val qs = Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0)
+    val rnd = spark.range(5000).select(lit("").as("k"),
+      (pmod(xxhash64(col("id"), lit(3L)), lit(100000L)) / 7.0).as("v"))
+    val expected = rnd.agg(expr(s"percentile(v, array(${qs.mkString(",")}))"))
+      .head().getSeq[Double](0)
+    var got = Seq.empty[Double]
+    // cap 0: no inner slice is ever collected, every rank is narrowed
+    // until it lands on a bound
+    val refined = JobCount(spark) {
+      got = Quantiles.exactQuantilesByKeyWithN(rnd, "k", "v", qs, 0)("")._1.toSeq
+    }
+    assert(got === expected)
+    val plain = JobCount(spark)(Quantiles.exactQuantiles(rnd, "v", qs))
+    assert(refined > plain, s"refine ran $refined jobs, one round $plain")
+  }
+
+  test("exactQuantilesByKey: one-value and two-value keys at q in {0, 0.5, 1}") {
+    import graft.operators.Quantiles
+    val qs = Seq(0.0, 0.5, 1.0)
+    val kv = Seq(("a", 3.5), ("b", -1.0), ("b", 2.0)).toDF("k", "v")
+    for (cap <- Seq(0, 10000)) {
+      val got = Quantiles.exactQuantilesByKeyWithN(kv, "k", "v", qs, cap)
+      assert(got("a")._1.toSeq === Seq(3.5, 3.5, 3.5) && got("a")._2 === 1L, s"cap $cap")
+      for (k <- Seq("a", "b")) {
+        val expected = kv.filter(col("k") === k)
+          .agg(expr(s"percentile(v, array(${qs.mkString(",")}))"))
+          .head().getSeq[Double](0)
+        assert(got(k)._1.toSeq === expected, s"key $k cap $cap")
+      }
+      assert(got("b")._1.toSeq === Seq(-1.0, 0.5, 2.0) && got("b")._2 === 2L)
+    }
+  }
+
+  test("exactQuantilesByKey: keys of 1 to 60 rows and 300 keys of 7 rows read every rank from the first sketch, in 2 jobs") {
+    import graft.operators.Quantiles
+    val qs = Seq(0.0, 0.1, 0.25, 0.5, 0.9, 0.99, 1.0)
+    // ties within keys (values mod 5); a key of n rows has ranks at every
+    // fraction of q·(n−1), so each sketch bound is checked at small n
+    val kv = ((1 to 60).flatMap(n => (0 until n).map(i => (s"n$n", ((i * 7919) % 5).toDouble))) ++
+      (0 until 300).flatMap(k => (0 until 7).map(i => (s"s$k", ((k * 31 + i * 17) % 11) / 3.0))))
+      .toDF("k", "v")
+    val expected = kv.groupBy("k").agg(expr(s"percentile(v, array(${qs.mkString(",")}))"))
+      .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+    var got = Map.empty[String, Array[Double]]
+    val jobs = JobCount(spark) { got = Quantiles.exactQuantilesByKey(kv, "k", "v", qs) }
+    assert(got.keySet === expected.keySet)
+    for ((k, e) <- expected) assert(got(k).toSeq === e, s"key $k")
+    assert(jobs <= 2, s"$jobs jobs for 360 small keys")
+  }
+
+  test("exactQuantilesByKey: a forced refine narrows every key's open ranks in one more round") {
+    import graft.operators.Quantiles
+    val qs = Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0)
+    val kv = spark.range(2000).select((col("id") % 40).cast("string").as("k"),
+      (pmod(xxhash64(col("id"), lit(5L)), lit(100000L)) / 7.0).as("v"))
+    val expected = kv.groupBy("k").agg(expr(s"percentile(v, array(${qs.mkString(",")}))"))
+      .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+    var got = Map.empty[String, (Array[Double], Long)]
+    // cap 0: no inner slice is collected, so every rank between the
+    // bounds of all 40 keys and 7 quantiles refines, all in round 2
+    val jobs = JobCount(spark) { got = Quantiles.exactQuantilesByKeyWithN(kv, "k", "v", qs, 0) }
+    for ((k, e) <- expected) assert(got(k)._1.toSeq === e && got(k)._2 === 50L, s"key $k")
+    assert(jobs <= 4, s"$jobs jobs for 2 rounds")
+  }
+
+  test("exactQuantiles: a rank the sketch misses narrows to the span beside its slice") {
+    import graft.operators.Quantiles.{Probe, locate}
+    // a span of 100 rows in (0, 50) with 10 rows below it; bounds 5 and
+    // 7: 20 rows below 5, 3 equal to 5, 10 between, 2 equal to 7
+    val p = Probe(Some(0.0), Some(50.0), 10L, 100L, Nil, Some(5.0), Some(7.0))
+    val ends = Seq(30L, 33L, 43L, 45L)
+    val inside = (1 to 10).map(i => 5.0 + i / 10.0).toArray
+    assert(locate(p, ends, inside, 12L, 100) ===
+      Left(Probe(Some(0.0), Some(5.0), 10L, 20L, Seq(12L))))
+    assert(locate(p, ends, inside, 31L, 100) === Right(5.0))
+    assert(locate(p, ends, inside, 35L, 100) === Right(inside(2)))
+    assert(locate(p, ends, inside, 35L, 5) ===
+      Left(Probe(Some(5.0), Some(7.0), 33L, 10L, Seq(35L))))
+    assert(locate(p, ends, inside, 44L, 100) === Right(7.0))
+    assert(locate(p, ends, inside, 60L, 100) ===
+      Left(Probe(Some(7.0), Some(50.0), 45L, 65L, Seq(60L))))
+  }
+
+  test("exactQuantiles: one key runs 2 jobs (a bounds and a slice pass)") {
+    import graft.operators.Quantiles
+    val rnd = spark.range(5000).select(
+      (pmod(xxhash64(col("id"), lit(11L)), lit(100000L)) / 7.0).as("v"))
+    val jobs = JobCount(spark)(Quantiles.exactQuantiles(rnd, "v", Seq(0.1, 0.5, 0.9)))
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
   test("timeWeightedAvg: holding intervals weight the mean; constant signals equal the row mean") {
     import graft.operators.EventAnalytics
     // v=10 held for 10s, then v=0 for 1s: twa = 100/11, row mean = 10/3

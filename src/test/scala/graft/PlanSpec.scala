@@ -328,7 +328,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("MAD score: med/mad bind as literals — no join, no percentile map state") {
     val p = planOf("q_robust_mad")
-    // exact bounds come from funnel-free rank selection and bind as
+    // exact bounds come from funnel-free sketch-then-refine and bind as
     // in-plan literals: the scoring plan is scan → project → agg with
     // no join of any kind and no value→count percentile aggregate
     assert(!p.contains("Join"), s"bounds must bind as literals:\n$p")
@@ -376,8 +376,8 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("exact-default quantile consumers carry NO percentile() single-reducer state") {
     // the SURVEY's own 100 TB killer: exact percentile()'s value→count
     // map funnels its final merge through ONE reducer proportional to
-    // global distinct cardinality. The exact defaults now rank-select
-    // (Quantiles.exactQuantiles, bit-identical) and bind literals —
+    // global distinct cardinality. The exact defaults now sketch then
+    // refine (Quantiles.exactQuantiles, bit-identical) and bind literals —
     // so no plan here may contain a percentile aggregate of any kind.
     for (q <- Seq("q_winsorize", "q_robust_mad", "q_drift_psi",
         "q_discretize", "q_quality_blend")) {
@@ -388,7 +388,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("inter-arrival gaps: lazy sketch posture is one fine-key window + one agg; exact default funnel-free") {
-    // the exact default rank-selects per type and assembles a
+    // the exact default sketches then refines per type and assembles a
     // type-count-bounded local result — no plan to window-audit, but it
     // must never carry a percentile aggregate either
     val exact = planOf("q_event_gaps")

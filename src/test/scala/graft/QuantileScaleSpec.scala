@@ -15,11 +15,14 @@ import graft.operators.Quantiles
   * gate (AuditSpec) cannot: at ~8M fully-distinct doubles,
   *
   *  - exactQuantiles still matches percentile() BIT-identically
-  *    (the rank-selection merge path at real cardinality), and
+  *    (the sketch-then-refine path at real cardinality), and
   *  - its wall-time does not degrade vs percentile()'s funnel
   *    (gate at 1.5x for host noise; in practice it should win, and the
   *    gap widens with cardinality — the funnel is linear in distincts
-  *    on one thread, rank selection is parallel everywhere).
+  *    on one thread, both exact passes are parallel aggregates);
+  *  - past ~16.7M rows of one key, where the sketch's error bound no
+  *    longer keeps the first slice under its cap, every rank is still
+  *    read in at most one refine round: ≤ 4 jobs, whatever the ranks.
   *
   * Ignored by default; opt in with
   *   GRAFT_QUANTILE_SCALE=1 sbt "testOnly graft.QuantileScaleSpec"
@@ -56,10 +59,29 @@ class QuantileScaleSpec extends AnyFunSuite {
         f"[quantile-scale] 8M distinct: percentile()=$funnelSec%.1fs " +
           f"exactQuantiles=$selectSec%.1fs ratio=${selectSec / funnelSec}%.2f")
       assert(selected.toSeq === funnel.toSeq,
-        "rank selection must stay BIT-identical to percentile() at scale")
+        "exactQuantiles must stay BIT-identical to percentile() at scale")
       assert(selectSec <= funnelSec * 1.5,
         f"exactQuantiles ($selectSec%.1fs) must not degrade vs the " +
           f"percentile() funnel ($funnelSec%.1fs)")
     } finally { df.unpersist(false); () }
+  }
+
+  scaleTest("exact quantiles at 20M rows of one key: past the slice cap's bound, at most one refine round") {
+    val n = 20000000L
+    // a permutation of 0 until n (7919 is prime to n): every quantile is
+    // known, with percentile()'s lo·(1−f) + hi·f
+    val df = spark.range(n).select((col("id") * 7919L % n).cast("double").as("v"))
+    val qs = Seq(0.01, 0.25, 0.5, 0.75, 0.99)
+    val expected = qs.map { q =>
+      val r = q * (n - 1); val f = r - math.floor(r)
+      math.floor(r) * (1.0 - f) + math.ceil(r) * f
+    }
+    var got = Array.empty[Double]
+    val t0 = System.nanoTime()
+    val jobs = JobCount(spark) { got = Quantiles.exactQuantiles(df, "v", qs) }
+    val sec = (System.nanoTime() - t0) / 1e9
+    System.err.println(f"[quantile-scale] 20M rows, one key: exactQuantiles=$sec%.1fs jobs=$jobs")
+    assert(got.toSeq === expected)
+    assert(jobs <= 4, s"$jobs jobs: a bounds and a slice pass per round, two rounds")
   }
 }
