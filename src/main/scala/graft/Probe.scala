@@ -6,7 +6,9 @@ import scala.collection.mutable
 /** Developer measurement main: time registered queries in isolation and
   * print per-job wall times and stage/task counts from a SparkListener,
   * so a multi-job operator's time can be split into job count and
-  * per-stage work; optionally print each query's formatted plan. Each
+  * per-stage work, and name the operator pass (`spark.job.description`,
+  * see [[core.Op.scope]]) behind each of the slowest jobs; optionally
+  * print each query's formatted plan. Each
   * rep is [[Bench.timed]], so a Probe number is a Bench number. Not part
   * of the driver contract.
   *
@@ -53,13 +55,17 @@ object Probe {
       msg => { System.err.println(msg); sys.exit(2) }, identity)
     val spark = core.Session.local(o.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val jobs = mutable.ArrayBuffer.empty[(Int, Long, Long, Int, Int)] // id, start, end, stages, tasks
-    val starts = mutable.Map.empty[Int, (Long, Int, Int)]
+    // id, start, end, stages, tasks, description
+    val jobs = mutable.ArrayBuffer.empty[(Int, Long, Long, Int, Int, String)]
+    val starts = mutable.Map.empty[Int, (Long, Int, Int, String)]
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
-        starts(js.jobId) = (js.time, js.stageInfos.size, js.stageInfos.map(_.numTasks).sum)
+        starts(js.jobId) = (js.time, js.stageInfos.size, js.stageInfos.map(_.numTasks).sum,
+          Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse("-"))
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        starts.remove(je.jobId).foreach { case (t0, st, tk) => jobs += ((je.jobId, t0, je.time, st, tk)) }
+        starts.remove(je.jobId).foreach { case (t0, st, tk, d) =>
+          jobs += ((je.jobId, t0, je.time, st, tk, d)) }
     })
     // warm every persisted artifact, so no query's first rep silently
     // pays an index build
@@ -84,8 +90,8 @@ object Probe {
               wall
             }
             jobs.sortBy(j => -(j._3 - j._2)).take(10).foreach {
-              case (id, s, e, st, tk) =>
-                println(f"[probe]   job#$id ${(e - s) / 1e3}%.3fs stages=$st tasks=$tk")
+              case (id, s, e, st, tk, d) =>
+                println(f"[probe]   job#$id ${(e - s) / 1e3}%.3fs stages=$st tasks=$tk $d")
             }
             println(f"[probe] $name median=${Bench.median(walls)}%.3fs (${walls.map(t => f"$t%.2f").mkString(" ")})")
           } catch { case e: Throwable => println(s"[probe] $name FAIL ${e.getMessage}") }

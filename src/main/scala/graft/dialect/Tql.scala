@@ -1,6 +1,9 @@
 package graft.dialect
 
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -563,6 +566,20 @@ object Tql {
   /** internal column carrying a routed BM25 score (never leaks into *) */
   private val Bm25ScoreCol = "__bm25_score"
 
+  /** a route's candidate id (a Scala value, as collected) as a literal
+    * of the id column `c`'s type */
+  private def idLit(c: Column, id: Any): Literal = {
+    val dt = Bridge.expression(c).dataType
+    Literal(Cast(Literal(id), dt, Some(SQLConf.get.sessionLocalTimeZone)).eval(), dt)
+  }
+
+  /** `c IN (ids)` for a route's candidate ids, as an InSet: an `In` of
+    * up to ten literals inlines them into the generated code, so every
+    * request would compile its answer plan anew. InSet holds Catalyst
+    * values (UTF8String, days, micros), so each id converts first. */
+  private def idIn(c: Column, ids: Seq[Any]): Column =
+    Bridge.column(InSet(Bridge.expression(c), ids.map(idLit(c, _).value).toSet))
+
   private def compileSelect(spark: SparkSession, sel: ast.Select,
       resolve: (String, Option[String]) => DataFrame, params: Seq[Any]): DataFrame = {
 
@@ -592,10 +609,11 @@ object Tql {
     // like the reference's index route). A WHERE clause composes into
     // the search as a candidate pre-filter (the reference runs index
     // queries against a filter bitmap — `cpp/query_core/index_holder.hpp:33`):
-    // ids surviving the filter gate the assignment scan, and the search
-    // adaptively widens its cluster probe when the filter starves the
-    // candidate pool. The quantized index's int8 cosine gate and the PQ
-    // index keep the frame search behind a broadcast semi-join.
+    // ids surviving the filter gate the assignment scan, one pass returns
+    // each cluster's survivor count and top k, and the driver replays the
+    // adaptive probe widening over those lists when the filter starves
+    // the candidate pool. The quantized index's int8 cosine gate and the
+    // PQ index keep the frame search behind a broadcast semi-join.
     // Joins/grouping still disable the route.
     if (indexRoutingEnabled.get()) annTopKRoute(sel, params).foreach { case (vecCol, qVec, k, metric) =>
       routeTable(sel.from) match {
@@ -614,8 +632,8 @@ object Tql {
             }
             val restricted = plain match {
               case Some(entry) if !entry.index.quantized || metric != "cosine" =>
-                env.df.filter(env.df(idCol).isin(A.topIds(entry.index, qVec, k,
-                  entry.config, idFilter = filterIds, metric = metric): _*))
+                env.df.filter(idIn(env.df(idCol), A.topIds(entry.index, qVec, k,
+                  entry.config, idFilter = filterIds, metric = metric)))
               case _ =>
                 import spark.implicits._
                 val qdf = Seq((0, qVec)).toDF("qid", "q_vec")
@@ -671,28 +689,42 @@ object Tql {
     // BM25_SIMILARITY(col, 'query') — the BM25 arm of the same top-k
     // routing (`cpp/deeplake_pg/index_search.cpp:135-169`): the score
     // only exists via the maintained index (idf/avgdl are corpus
-    // statistics, not per-row formulas), so the route joins the scored
-    // candidates and compiles every BM25_SIMILARITY call to that score
-    // column. A WHERE pre-filters the scored ids; docs sharing no query
-    // term drop (inner join), matching the reference's index search.
+    // statistics, not per-row formulas), so every BM25_SIMILARITY call
+    // compiles to a routed score. The top-k shape (`bm25TopK`) is planned
+    // on the driver like ANN: `Bm25.topScores` collects the k best
+    // (id, score) pairs plus the k-th's ties at the statement's
+    // rounding, the scan keeps `idCol IN (ids)`, and each id's score is
+    // bound back as a literal, so compiling or EXPLAINing such a
+    // statement runs its candidate jobs. Other shapes, and a top-k
+    // whose candidates would pass `Bm25.MaxCandidates`, join the whole
+    // scored set back to the table. Either way a WHERE pre-filters the
+    // scored ids, and docs sharing no query term drop, matching the
+    // reference's index search.
     if (indexRoutingEnabled.get()) bm25Route(sel).foreach { case (tcol, qtext) =>
-      routeTable(sel.from) match {
-        case Some(tname) =>
-          graft.operators.Bm25.Catalog.lookup(tname, tcol).foreach { entry =>
-            val filterIds = sel.where.map { w =>
-              env.df.filter(expr(env, w, params)).select(col(entry.idCol))
-            }
-            val terms = qtext.split(" ").toSeq.filter(_.nonEmpty)
-            val cand = graft.operators.Bm25
-              .scoreWithIndex(entry.index, terms, idFilter = filterIds)
+      routeTable(sel.from).flatMap(graft.operators.Bm25.Catalog.lookup(_, tcol)).foreach { entry =>
+        val B = graft.operators.Bm25
+        val filterIds = sel.where.map { w =>
+          env.df.filter(expr(env, w, params)).select(col(entry.idCol))
+        }
+        val terms = qtext.split(" ").toSeq.filter(_.nonEmpty)
+        val top = bm25TopK(sel, params).flatMap { case (k, scale) =>
+          B.topScores(entry.index, terms, k, scale, idFilter = filterIds)
+        }
+        val score = top match {
+          case Some(top) =>
+            val id = env.df(entry.idCol)
+            env = env.copy(df = env.df.filter(idIn(id, top.map(_._1))))
+            if (top.isEmpty) lit(null).cast("double")
+            else map(top.flatMap { case (i, s) =>
+              Seq(Bridge.column(idLit(id, i)), lit(s)) }: _*)(col(entry.idCol))
+          case None =>
+            val cand = B.scoreWithIndex(entry.index, terms, idFilter = filterIds)
               .select(col("doc_id").as("__bm25_id"), col("score").as(Bm25ScoreCol))
-            env = env.copy(
-              df = env.df.join(cand,
-                env.df(entry.idCol) === col("__bm25_id"), "inner").drop("__bm25_id"),
-              fnOverrides = env.fnOverrides +
-                ("BM25_SIMILARITY" -> col(Bm25ScoreCol)))
-          }
-        case _ => ()
+            env = env.copy(df = env.df.join(cand,
+              env.df(entry.idCol) === col("__bm25_id"), "inner").drop("__bm25_id"))
+            col(Bm25ScoreCol)
+        }
+        env = env.copy(fnOverrides = env.fnOverrides + ("BM25_SIMILARITY" -> score))
       }
     }
 
@@ -889,15 +921,15 @@ object Tql {
     sEnv.df.select(outCols: _*)
   }
 
-  /** Detect the indexed-top-k shape: single-statement, no joins /
-    * grouping / sampling, primary ORDER key `COSINE_SIMILARITY(col,
-    * const-vector)` DESC (directly or via a SELECT alias), plain LIMIT k.
-    * A WHERE clause is allowed (it becomes the search's id pre-filter)
-    * unless it uses ROW_NUMBER (stamped after routing) or RANDOM
-    * (recomputing it for the filter frame would see different draws).
-    * Returns (vector column, query vector, k). */
-  private def annTopKRoute(sel: ast.Select,
-      params: Seq[Any]): Option[(String, Seq[Double], Int, String)] = {
+  /** The indexed-top-k shape every top-k route shares: no joins /
+    * grouping / sampling / expand / OFFSET, a plain LIMIT k, and an
+    * ORDER BY whose primary key (directly or via a SELECT alias) the
+    * route then matches. A WHERE clause is allowed (it becomes the
+    * search's id pre-filter) unless it uses ROW_NUMBER (stamped after
+    * routing) or RANDOM (recomputing it for the filter frame would see
+    * different draws). Returns (primary ORDER expression, ascending, k). */
+  private def topKOrder(sel: ast.Select,
+      params: Seq[Any]): Option[(ast.Expr, Boolean, Int)] = {
     if (sel.joins.nonEmpty || sel.groupBy.nonEmpty ||
         sel.ungroup.nonEmpty || sel.sampleBy.nonEmpty || sel.expand.nonEmpty ||
         sel.offset.nonEmpty || sel.orderBy.isEmpty)
@@ -916,62 +948,71 @@ object Tql {
         }.getOrElse(sel.orderBy.head.e)
       case other => other
     }
-    // ROUND(sim, d) orders like sim up to d-decimal ties — candidates are
-    // identical, so the route applies through the wrapper
-    val unwrapped = ordExpr match {
-      case ast.Fn("ROUND", Seq(inner, _), Seq()) => inner
-      case other => other
-    }
-    // cosine serves the DESCENDING top-k; L2 distance the ASCENDING one
-    // (reference order_type::ascending — top_k_search_info.hpp:35)
-    val asc = sel.orderBy.head.asc
-    unwrapped match {
-      case ast.Fn("COSINE_SIMILARITY", Seq(ast.Ref(Seq(c)), v), Seq()) if !asc =>
-        constVector(v, params).map(vec => (c, vec, k, "cosine"))
-      case ast.Fn("L2_NORM", Seq(ast.Bin("-", ast.Ref(Seq(c)), v)), Seq()) if asc =>
-        constVector(v, params).map(vec => (c, vec, k, "l2"))
-      // MIPS: ORDER BY DOT(col, const) DESC — probes clusters by
-      // q·centroid (faiss IVF inner-product posture), exact-scores
-      // probed candidates
-      case ast.Fn("DOT", Seq(ast.Ref(Seq(c)), v), Seq()) if !asc =>
-        constVector(v, params).map(vec => (c, vec, k, "dot"))
-      case _ => None
-    }
+    Some((ordExpr, sel.orderBy.head.asc, k))
   }
 
+  /** ROUND(sim, d) orders like sim up to d-decimal ties, so the ANN
+    * routes' candidates are identical through the wrapper */
+  private def unwrapRound(e: ast.Expr): ast.Expr = e match {
+    case ast.Fn("ROUND", Seq(inner, _), Seq()) => inner
+    case other => other
+  }
+
+  /** Detect the ANN indexed-top-k shape ([[topKOrder]]) with primary
+    * ORDER key `COSINE_SIMILARITY(col, const-vector)` DESC, `L2_NORM(col
+    * - const)` ASC or `DOT(col, const)` DESC, bare or under ROUND.
+    * Returns (vector column, query vector, k, metric). */
+  private def annTopKRoute(sel: ast.Select,
+      params: Seq[Any]): Option[(String, Seq[Double], Int, String)] =
+    topKOrder(sel, params).flatMap { case (ordExpr, asc, k) =>
+      // cosine serves the DESCENDING top-k; L2 distance the ASCENDING one
+      // (reference order_type::ascending — top_k_search_info.hpp:35)
+      unwrapRound(ordExpr) match {
+        case ast.Fn("COSINE_SIMILARITY", Seq(ast.Ref(Seq(c)), v), Seq()) if !asc =>
+          constVector(v, params).map(vec => (c, vec, k, "cosine"))
+        case ast.Fn("L2_NORM", Seq(ast.Bin("-", ast.Ref(Seq(c)), v)), Seq()) if asc =>
+          constVector(v, params).map(vec => (c, vec, k, "l2"))
+        // MIPS: ORDER BY DOT(col, const) DESC — probes clusters by
+        // q·centroid (faiss IVF inner-product posture), exact-scores
+        // probed candidates
+        case ast.Fn("DOT", Seq(ast.Ref(Seq(c)), v), Seq()) if !asc =>
+          constVector(v, params).map(vec => (c, vec, k, "dot"))
+        case _ => None
+      }
+    }
+
   /** Detect the MAXSIM indexed-top-k shape — the multi-vector sibling of
-    * [[annTopKRoute]]: primary ORDER key `MAXSIM(col, const-bag)` DESC
-    * (directly, via an alias, or through ROUND), plain LIMIT k, same
-    * structural guards. Returns (bag column, query bag, k). */
+    * [[annTopKRoute]]: primary ORDER key `MAXSIM(col, const-bag)` DESC,
+    * bare or under ROUND. Returns (bag column, query bag, k). */
   private def maxsimRoute(sel: ast.Select,
-      params: Seq[Any]): Option[(String, Seq[Seq[Double]], Int)] = {
-    if (sel.joins.nonEmpty || sel.groupBy.nonEmpty ||
-        sel.ungroup.nonEmpty || sel.sampleBy.nonEmpty || sel.expand.nonEmpty ||
-        sel.offset.nonEmpty || sel.orderBy.isEmpty)
-      return None
-    if (sel.where.exists(w => usesFn(w, "ROW_NUMBER") || usesFn(w, "RANDOM")))
-      return None
-    val k = sel.limit match {
-      case Some((e, false)) => evalInt(e, params)
-      case _ => return None
-    }
-    val ordExpr = sel.orderBy.head.e match {
-      case ast.Ref(Seq(n)) =>
-        sel.projs.collectFirst {
-          case ast.Proj(pe, Some(a)) if a.equalsIgnoreCase(n) => pe
-        }.getOrElse(sel.orderBy.head.e)
-      case other => other
-    }
-    val unwrapped = ordExpr match {
-      case ast.Fn("ROUND", Seq(inner, _), Seq()) => inner
-      case other => other
-    }
-    if (sel.orderBy.head.asc) return None
-    unwrapped match {
-      case ast.Fn("MAXSIM", Seq(ast.Ref(Seq(c)), v), Seq()) =>
-        constBag(v, params).map(bag => (c, bag, k))
+      params: Seq[Any]): Option[(String, Seq[Seq[Double]], Int)] =
+    topKOrder(sel, params).flatMap {
+      case (ordExpr, false, k) => unwrapRound(ordExpr) match {
+        case ast.Fn("MAXSIM", Seq(ast.Ref(Seq(c)), v), Seq()) =>
+          constBag(v, params).map(bag => (c, bag, k))
+        case _ => None
+      }
       case _ => None
     }
+
+  /** Detect the BM25 top-k shape ([[topKOrder]]): primary ORDER key
+    * `BM25_SIMILARITY(col, 'query')` DESC, bare or under ROUND. Later
+    * ORDER keys may be anything, because the candidates hold every doc
+    * tied with the k-th. Returns (k, the ROUND scale, compiled as the
+    * ROUND function compiles it; None when bare). */
+  private def bm25TopK(sel: ast.Select, params: Seq[Any]): Option[(Int, Option[Int])] =
+    topKOrder(sel, params).flatMap {
+      case (ast.Fn("BM25_SIMILARITY", _, Seq()), false, k) => Some((k, None))
+      case (ast.Fn("ROUND", args @ (ast.Fn("BM25_SIMILARITY", _, Seq()) +: _), Seq()), false, k) =>
+        Some((k, Some(roundScale(args))))
+      case _ => None
+    }
+
+  /** ROUND(x[, d])'s scale as the ROUND function compiles it: an int
+    * literal d, else 0 */
+  private def roundScale(args: Seq[ast.Expr]): Int = args.lift(1) match {
+    case Some(ast.Lit(v: Long)) => v.toInt
+    case _ => 0
   }
 
   /** a constant query BAG: ARRAY[ARRAY[...], ...] of constant vectors,
@@ -1327,9 +1368,9 @@ object Tql {
       case "SAMPLE_INFO" =>
         dtype(env, a0) match {
           case BinaryType =>
-            org.apache.spark.sql.graft.Bridge.column(
+            Bridge.column(
               graft.functions.SampleInfo(
-                org.apache.spark.sql.graft.Bridge.expression(a0)))
+                Bridge.expression(a0)))
           case ArrayType(et, _) =>
             val metaDims = argsAst.head match {
               case ast.Ref(parts) =>
@@ -1388,11 +1429,7 @@ object Tql {
       case "ROUND" =>
         // fold in double: Spark's round(float) stays float, which is not
         // precision-stable against engines that round in f64
-        val scale = if (args.size > 1) argsAst(1) match {
-          case ast.Lit(v: Long) => v.toInt
-          case _ => 0
-        } else 0
-        round(a0.cast("double"), scale)
+        round(a0.cast("double"), roundScale(argsAst))
       case "SQRT" => if (isArray(env, a0)) transform(a0, x => sqrt(x)) else sqrt(a0)
       case "ABS" => if (isArray(env, a0)) transform(a0, x => abs(x)) else abs(a0)
       case "RANDOM" => (rand(defaultSeed) * Int.MaxValue).cast("int")

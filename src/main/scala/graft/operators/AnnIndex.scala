@@ -4,13 +4,17 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
+  Expression, InterpretedOrdering, Literal, SortOrder}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 import graft.core.Op
 import graft.functions.{CosineSimilarity, DotProduct, VectorDistance, gf}
+import scala.collection.mutable
 
 /** Clustered ANN index (SURVEY.md §2.9) — the Spark analog of the
   * reference's `Clustered` / `ClusteredQuantized` embedding indexes
@@ -319,23 +323,24 @@ object AnnIndex {
 
   /** Top-k ids for ONE query vector, best first, planned on the driver:
     * the same ids in the same order as [[search]] over a one-row query
-    * frame, from one candidate job instead of a windowed query. The
-    * reference likewise probes an in-memory index for candidate ids and
-    * fetches only those rows (`cpp/deeplake_pg/index_search.cpp:114-133`).
-    * The driver-held centroids are scored with the codegen kernels'
-    * own expressions evaluated over literals, so the cluster order is
-    * bit-identical to [[search]]'s (ties on cluster_id); one
-    * `orderBy(score, id).limit(k)` collect then ranks the probed
-    * clusters' candidates. With `idFilter` the driver replays
-    * [[search]]'s widening, reading each attempt's shortfall from the
-    * collected row count, so nothing is persisted. The quantized index
-    * gates cosine candidates on int8 scores: that search stays on
-    * [[search]]. */
+    * frame, without a windowed query. The reference likewise probes an
+    * in-memory index for candidate ids and fetches only those rows
+    * (`cpp/deeplake_pg/index_search.cpp:114-133`). The driver-held
+    * centroids are scored with the codegen kernels' own expressions
+    * evaluated over literals, so the cluster order is bit-identical to
+    * [[search]]'s (ties on cluster_id). Unfiltered, one
+    * `orderBy(score, id).limit(k)` collect (`ann:candidates`) ranks the
+    * probed clusters' candidates. With `idFilter`, one pass
+    * (`ann:clusters`, see [[clusterTops]]) returns each cluster's
+    * survivor count and its own top k, and the driver replays
+    * [[search]]'s [[widening]] from those counts: an attempt merges the
+    * first nProbe clusters' lists, which holds the top k of their union.
+    * Nothing is persisted. The quantized index gates cosine candidates
+    * on int8 scores: that search stays on [[search]]. */
   def topIds(index: Index, q: Seq[Double], k: Int, config: SearchConfig = SearchConfig(),
       idFilter: Option[DataFrame] = None, metric: String = "cosine"): Seq[Any] = {
     require(!index.quantized || metric != "cosine",
       "a quantized cosine search gates on int8 scores: use search")
-    val score = scoreFn(metric)
     val qExpr = Literal.create(q, ArrayType(DoubleType, containsNull = false))
     val sign = if (metric == "l2") 1 else -1
     val clusters = index.centers
@@ -348,19 +353,55 @@ object AnnIndex {
         c < 0 || (c == 0 && ca < cb)
       }
       .map(_._2)
-    val assignBase = filteredView(index.assignments, idFilter)
+    val scored = filteredView(index.assignments, idFilter)
+      .select(col("cluster_id"), col("id"),
+        scoreFn(metric)(col("vec"), Bridge.column(qExpr)).as("score"))
     val sc = index.assignments.sparkSession.sparkContext
-    def attempt(nProbe: Int): Seq[Any] = Op.scope(sc, "ann:candidates") {
-      assignBase.filter(col("cluster_id").isin(clusters.take(nProbe): _*))
-        .select(col("id"), score(col("vec"), Bridge.column(qExpr)).as("score"))
-        .orderBy(ordFn(metric)(col("score")), col("id")).limit(k)
-        .collect().map(_.get(0)).toSeq
-    }
     val nProbe0 = firstProbe(index.nClusters, config)
-    if (idFilter.isEmpty) attempt(nProbe0)
-    else widening(index.nClusters, nProbe0, k, index.assignmentRows,
-      Op.scope(sc, "ann:survivors")(assignBase.count()))(attempt)(_.length < _)
+    if (idFilter.isEmpty) Op.scope(sc, "ann:candidates") {
+      scored.filter(col("cluster_id").isin(clusters.take(nProbe0): _*))
+        .orderBy(ordFn(metric)(col("score")), col("id")).limit(k)
+        .collect().map(_.get(1)).toSeq
+    } else {
+      val idType = scored.schema("id").dataType
+      // orderBy(ord(score), id) over (cluster_id, id, score) rows
+      val order = new InterpretedOrdering(Seq(
+        SortOrder(BoundReference(2, DoubleType, nullable = true),
+          if (metric == "l2") Ascending else Descending),
+        SortOrder(BoundReference(1, idType, nullable = true), Ascending)))
+      val tops = Op.scope(sc, "ann:clusters")(clusterTops(scored, order, k))
+      val toId = CatalystTypeConverters.createToScalaConverter(idType)
+      widening(index.nClusters, nProbe0, k, index.assignmentRows,
+          tops.values.map(_._1).sum) { nProbe =>
+        clusters.take(nProbe).flatMap(c => tops.get(c).fold(Seq.empty[InternalRow])(_._2))
+          .sorted(order).take(k)
+      }(_.length < _).map(r => toId(r.get(1, idType)))
+    }
   }
+
+  /** One pass over `scored` (cluster_id, id, score) rows: per cluster, its
+    * row count and its k first rows under `order`. Each partition keeps a
+    * bounded heap per cluster and the driver merges the partitions'
+    * lists, so no shuffle runs and the pass is one job. The assignments
+    * are not clustered on disk, so scoring every survivor reads no more
+    * than a probe of a few clusters would. */
+  private def clusterTops(scored: DataFrame, order: Ordering[InternalRow],
+      k: Int): Map[Int, (Long, Seq[InternalRow])] =
+    scored.queryExecution.toRdd.mapPartitions { rows =>
+      val counts = mutable.HashMap.empty[Int, Long].withDefaultValue(0L)
+      // each queue's head is its worst row
+      val tops = mutable.HashMap.empty[Int, mutable.PriorityQueue[InternalRow]]
+      rows.foreach { r =>
+        val c = r.getInt(0)
+        counts(c) += 1
+        val top = tops.getOrElseUpdate(c, mutable.PriorityQueue.empty(order))
+        if (top.size < k) top += r.copy()
+        else if (top.nonEmpty && order.lt(r, top.head)) { top.dequeue(); top += r.copy() }
+      }
+      counts.iterator.map { case (c, n) => (c, n, tops(c).toSeq) }
+    }.collect().groupBy(_._1).map { case (c, parts) =>
+      c -> (parts.map(_._2).sum, parts.toSeq.flatMap(_._3).sorted(order).take(k))
+    }
 
   /** the metric's codegen kernel, shared by frame scoring and the
     * driver's centroid ranking */
@@ -398,7 +439,9 @@ object AnnIndex {
     * by 1/selectivity (same expected candidate count as an unfiltered
     * search), then double `nProbe` while clusters remain and
     * `short(result, want)` says some query has fewer than
-    * want = min(k, survivors) hits. Returns the last attempt. */
+    * want = min(k, survivors) hits. Returns the last attempt. The frame
+    * search runs each attempt as Spark jobs; [[topIds]] replays the
+    * same schedule on the driver over one pass's per-cluster lists. */
   private def widening[R](nClusters: Int, nProbe0: Int, k: Int, total: Long,
       survivors: Long)(attempt: Int => R)(short: (R, Long) => Boolean): R = {
     val selectivity = math.max(survivors.toDouble / total, 1.0 / nClusters)
@@ -417,8 +460,9 @@ object AnnIndex {
     * (`nQueries` is never forced); filtered, it runs the count jobs and
     * one shortfall job per attempt, and returns a persisted result
     * that the caller owns. The TQL route's single-query search
-    * ([[topIds]]) runs neither: it collects its candidates eagerly and
-    * persists nothing. */
+    * ([[topIds]]) runs neither: it collects its candidates eagerly in
+    * one job (filtered: one per-cluster pass plus its filter-id
+    * broadcast) and persists nothing. */
   private def adaptiveSearch(assignBase: DataFrame, total: => Long,
       nClusters: Int, nProbe0: Int, k: Int, nQueries: => Long,
       filtered: Boolean, once: Int => DataFrame): DataFrame =

@@ -1,18 +1,27 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Round}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.core.Op
+import scala.collection.mutable
 
 /** BM25 text relevance (SURVEY.md §2.9; reference BM25 index
   * `docs/docs/advanced/tql.md:170-176`, search routing
   * `cpp/deeplake_pg/index_search.cpp:135-169`).
   *
-  * The reference maintains a BM25 index (df, avgdl) incrementally; we
-  * compute corpus stats as DataFrames — at scale these are the "index
-  * tables": (term, df) is tiny after aggregation and broadcast-joins to
-  * the postings. Scoring never shuffles the corpus: postings are built
-  * with one explode + hash-agg, query terms filter via broadcast
-  * semi-join, and the final agg groups by doc id.
+  * The reference maintains a BM25 index (df, avgdl) incrementally and
+  * keeps its statistics in memory; we keep the corpus stats as
+  * DataFrames — the "index tables" (doc_stats, term_df) next to the
+  * postings — and hold (n_docs, avgdl) on the driver once per index
+  * ([[Index.corpus]]). The TQL top-k route ([[topScores]]) reads only
+  * its query terms' df rows and binds df, n_docs and avgdl as literals;
+  * the frame form ([[scoreWithIndex]]) broadcast-joins them. Scoring
+  * never shuffles the corpus: postings are built with one explode +
+  * hash-agg, query terms filter the postings scan, and the final sum
+  * groups by doc id.
   *
   * Formula (Okapi BM25, k1=1.2, b=0.75, Lucene-style idf):
   *   idf(t)  = ln(1 + (N - df + 0.5)/(df + 0.5))
@@ -82,7 +91,10 @@ object Bm25 {
   /** Maintained BM25 index: the postings plus both stats tables — what
     * the reference keeps incrementally (`index_search.cpp:135-169`).
     * Built once ([[buildIndex]]/[[save]]), scored many ([[scoreWithIndex]]). */
-  final case class Index(postings: DataFrame, docStats: DataFrame, termDf: DataFrame)
+  final case class Index(postings: DataFrame, docStats: DataFrame, termDf: DataFrame) {
+    /** (n_docs, avgdl) held on the driver, collected once per index */
+    lazy val corpus: Row = docStats.select(col("n_docs"), col("avgdl")).head()
+  }
 
   def buildIndex(docs: DataFrame, idCol: String, textCol: String): Index = {
     val post = postings(docs, idCol, textCol)
@@ -171,10 +183,36 @@ object Bm25 {
       .agg((sum(col("n_docs") * col("avgdl")) / sum(col("n_docs"))).as("avgdl"),
         sum(col("n_docs")).as("n_docs"))
       .select(col("n_docs"), col("avgdl"))
-    val tdf = spark.read.parquet(s"$dir/term_df").drop("batch")
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
+    // one segment is already one row per term: reading it as is lets a
+    // df lookup run as a plain filtered scan, with no shuffle
+    val tdfDir = new org.apache.hadoop.fs.Path(s"$dir/term_df")
+    val segments = tdfDir.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(tdfDir).count(_.getPath.getName.startsWith("batch="))
+    val tdf0 = spark.read.parquet(s"$dir/term_df").drop("batch")
+    val tdf = if (segments <= 1) tdf0
+      else tdf0.groupBy(col("term")).agg(sum(col("df")).as("df"))
     Index(spark.read.parquet(s"$dir/postings").drop("batch"), ds, tdf)
   }
+
+  /** one posting's BM25 contribution from its tf and dl, given its
+    * term's df and the corpus's n_docs and avgdl */
+  private def termScore(nDocs: Column, df: Column, avgdl: Column): Column =
+    log(lit(1.0) + (nDocs - df + 0.5) / (df + 0.5)) *
+      (col("tf") * (K1 + 1)) /
+      (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / avgdl))
+
+  /** WHERE pre-filter composition (index_holder.hpp:33): only postings
+    * of ids in `idFilter`'s first column are scored; corpus stats (idf,
+    * avgdl) stay global, exactly as an index search over a filter
+    * bitmap. A semi-join keeps each posting once, so duplicate ids need
+    * no distinct and its shuffle. */
+  private def filteredPostings(index: Index, idFilter: Option[DataFrame]): DataFrame =
+    idFilter match {
+      case Some(ids) =>
+        index.postings.join(ids.select(col(ids.columns.head).as("doc_id")),
+          Seq("doc_id"), "left_semi")
+      case None => index.postings
+    }
 
   /** BM25 scores for a bag of query terms against a maintained index:
     * (doc_id, score) for every doc containing at least one query term.
@@ -183,39 +221,122 @@ object Bm25 {
   def scoreWithIndex(index: Index, queryTerms: Seq[String],
       idFilter: Option[DataFrame] = None): DataFrame = {
     val lowered = queryTerms.distinct
-    // WHERE pre-filter composition (index_holder.hpp:33): only ids
-    // surviving the filter are scored/ranked; corpus stats (idf, avgdl)
-    // stay global, exactly as an index search over a filter bitmap
-    val base = idFilter match {
-      case Some(ids) =>
-        index.postings.join(
-          ids.select(col(ids.columns.head).as("doc_id")).distinct(),
-          Seq("doc_id"), "left_semi")
-      case None => index.postings
-    }
-    base.filter(col("term").isin(lowered: _*))
+    filteredPostings(index, idFilter).filter(col("term").isin(lowered: _*))
       .join(broadcast(index.termDf.filter(col("term").isin(lowered: _*))), "term")
       .crossJoin(broadcast(index.docStats))
       .select(col("doc_id"),
-        (log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * (K1 + 1)) /
-          (col("tf") + lit(K1) * (lit(1 - B) + lit(B) * col("dl") / col("avgdl")))).as("term_score"))
+        termScore(col("n_docs"), col("df"), col("avgdl")).as("term_score"))
       .groupBy(col("doc_id"))
       .agg(sum(col("term_score")).as("score"))
   }
 
-  /** Ad-hoc BM25 (no maintained index): tokenizes once — the postings are
-    * cached so the three consumers (score join, docStats, termDf) don't
-    * each re-run the scan→tokenize→explode→agg subtree. */
-  def score(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
-      queryTerms: Seq[String]): DataFrame = {
-    val post = postings(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (docStats, termDf) = corpusStats(post)
-    scoreWithIndex(Index(post, docStats, termDf), queryTerms)
+  /** Most (id, score) pairs a routed top-k collects and binds into its
+    * answer plan as literals. A statement whose k best plus the k-th's
+    * ties exceed it (a large LIMIT, or a coarse ROUND that ties most
+    * matching docs) answers through [[scoreWithIndex]]'s join instead. */
+  val MaxCandidates = 1024
+
+  /** The best BM25 scores for ONE query, planned on the driver: (doc_id,
+    * score) pairs, best first, for the k best docs plus every doc whose
+    * score rounds to the k-th's at `scale` decimals (Spark's ROUND; None
+    * compares raw scores). Those are exactly the docs an `ORDER BY
+    * ROUND(score, scale) DESC, … LIMIT k` can return, whatever its later
+    * keys, and the scores equal [[scoreWithIndex]]'s. The reference
+    * likewise scores from in-memory statistics and fetches only the
+    * candidate rows (`cpp/deeplake_pg/index_search.cpp:135-169`). None,
+    * before any job when k alone is too many, when the pairs would
+    * exceed [[MaxCandidates]].
+    *
+    * One job (`bm25:df`, a filtered scan of a loaded index's term_df)
+    * reads the query terms' df; n_docs and avgdl come from
+    * [[Index.corpus]]. One job (`bm25:candidates`) scores only those
+    * terms' postings with df, n_docs and avgdl bound as literals in
+    * [[scoreWithIndex]]'s expression, sums per doc through an RDD
+    * shuffle (one job, where the SQL aggregate runs its map stage as a
+    * job of its own), and streams each reduce partition through a
+    * [[BestWithTies]]. The sum adds a doc's terms in scan order, as the
+    * SQL aggregate's partial sum does. The global k-th rounded score is
+    * at least each partition's, so every doc tied with it comes back:
+    * the tie window is complete by construction, with no rerun. Docs
+    * with a null id drop first, as the join drops them. */
+  def topScores(index: Index, queryTerms: Seq[String], k: Int, scale: Option[Int],
+      idFilter: Option[DataFrame] = None): Option[Seq[(Any, Double)]] = {
+    if (k > MaxCandidates) return None
+    val sc = index.postings.sparkSession.sparkContext
+    val (dfs, corpus) = Op.scope(sc, "bm25:df") {
+      (index.termDf.filter(col("term").isin(queryTerms.distinct: _*))
+        .select(col("term"), col("df")).collect().map(r => r.getString(0) -> r.get(1)).toSeq,
+        index.corpus)
+    }
+    if (k <= 0 || dfs.isEmpty || corpus.isNullAt(0)) return Some(Nil)
+    // a map literal is one generated-code constant, so requests with
+    // different terms reuse the compiled scan
+    val df = map(dfs.flatMap { case (t, d) => Seq(lit(t), lit(d)) }: _*)(col("term"))
+    val scored = filteredPostings(index, idFilter)
+      .filter(col("term").isin(dfs.map(_._1): _*))
+      .select(col("doc_id"), termScore(lit(corpus.get(0)), df, lit(corpus.get(1))))
+    val idType = scored.schema.head.dataType
+    val parts = Op.scope(sc, "bm25:candidates") {
+      scored.queryExecution.toRdd.filter(!_.isNullAt(0))
+        .map(r => (r.copy().get(0, idType), r.getDouble(1)))
+        .reduceByKey(_ + _)
+        .mapPartitions { docs =>
+          val best = new BestWithTies(k, scale)
+          docs.foreach(best.add)
+          Iterator.single(best.result)
+        }
+        .collect()
+    }
+    val best = new BestWithTies(k, scale)
+    parts.foreach(_.foreach(best.add))
+    val top = best.result
+    val toId = CatalystTypeConverters.createToScalaConverter(idType)
+    if (top.length > MaxCandidates) None
+    else Some(top.map { case (id, s) => (toId(id), s) })
   }
 
-  /** Matching DuckDB oracle SQL for [[score]] over the `documents` table. */
+  /** The k best (id, score) pairs of a stream, plus every pair whose
+    * score rounds to the k-th's at `scale` decimals, in bounded memory:
+    * at most [[MaxCandidates]] + 1 pairs. A min-heap holds the k best so
+    * far and `ties` the pairs past them that round to the heap's worst.
+    * The k-th score only rises and ROUND is monotone, so once its
+    * rounded value moves the old ties all drop. Ties past the bound
+    * drop at once; keeping one pair more than [[MaxCandidates]] still
+    * tells a window that is too large. A reduce partition that drops
+    * ties at its own k-th rounded score sends that many pairs at or
+    * above it, so if the global k-th rounds the same the merged window
+    * is too large too, and if it rounds higher the dropped ties are
+    * out of the window. */
+  private final class BestWithTies(k: Int, scale: Option[Int]) {
+    private val round: Double => Double = scale match {
+      case Some(d) =>
+        val r = Round(BoundReference(0, DoubleType, nullable = false), Literal(d))
+        x => r.eval(InternalRow(x)).asInstanceOf[Double]
+      case None => identity
+    }
+    private val byScore = Ordering.Double.TotalOrdering
+    // the queue's head is its worst pair
+    private val heap = mutable.PriorityQueue.empty[(Any, Double)](
+      Ordering.by[(Any, Double), Double](_._2)(byScore.reverse))
+    private val ties = mutable.ArrayBuffer.empty[(Any, Double)]
+    private def edge: Double = round(heap.head._2)
+
+    def add(d: (Any, Double)): Unit =
+      if (heap.size < k) heap += d
+      else if (byScore.gt(d._2, heap.head._2)) {
+        val out = heap.dequeue()
+        heap += d
+        if (round(out._2) == edge) tie(out) else ties.clear()
+      } else if (round(d._2) == edge) tie(d)
+
+    private def tie(d: (Any, Double)): Unit =
+      if (heap.size + ties.size <= MaxCandidates) ties += d
+
+    /** the pairs kept, best first */
+    def result: Seq[(Any, Double)] = (heap.toSeq ++ ties).sortBy(_._2)(byScore.reverse)
+  }
+
+  /** Matching DuckDB oracle SQL for [[scoreWithIndex]] over the `documents` table. */
   def oracleSql(queryTerms: Seq[String], roundTo: Int, k: Int): String = {
     val terms = queryTerms.distinct.map(t => s"'$t'").mkString(", ")
     s"""WITH post AS (

@@ -57,9 +57,13 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     }))
   }
 
+  /** a collected value as the plan holds it (UTF8String, days, micros) */
+  private def catalyst(v: Any): Any =
+    org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(v)
+
   /** the plan restricts `idCol` to exactly the ids the query returns */
   private def assertRoutedTo(df: org.apache.spark.sql.DataFrame, idCol: String): Unit = {
-    val got = df.collect().map(_.get(0)).toSet
+    val got = df.collect().map(r => catalyst(r.get(0))).toSet
     assert(inIds(df, idCol) === Seq(got), df.queryExecution.optimizedPlan.toString)
   }
 
@@ -669,6 +673,177 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally Bm25.Catalog.clear()
   }
 
+  /** `rows` (doc_id, n, text) as a parquet table; returns its path */
+  private def docTable(rows: Seq[(Long, Int, String)]): String = {
+    val spark2 = spark
+    import spark2.implicits._
+    val path = java.nio.file.Files.createTempDirectory("bm25_route").toString + "/t"
+    rows.toDF("doc_id", "n", "text").write.parquet(path)
+    path
+  }
+
+  /** a BM25 index saved and loaded like a table-owned one */
+  private def savedBm25(docs: org.apache.spark.sql.DataFrame): graft.operators.Bm25.Index = {
+    import graft.operators.Bm25
+    val dir = java.nio.file.Files.createTempDirectory("bm25_index").toString
+    Bm25.save(spark, docs, "doc_id", "text", dir)
+    Bm25.load(spark, dir)
+  }
+
+  /** the routed top-k answer == scoreWithIndex's scores under the same
+    * rounding, ORDER BY and LIMIT; `routed = false` expects the answer
+    * through the scored-set join */
+  private def assertBm25Route(path: String, idx: graft.operators.Bm25.Index, query: String,
+      scale: Int, where: Option[String], k: Int, routed: Boolean = true): Seq[(Any, Double)] = {
+    import graft.operators.Bm25
+    val df = Tql.query(spark, dir,
+      s"""SELECT doc_id, ROUND(BM25_SIMILARITY(text, '$query'), $scale) AS s FROM "$path"
+         |${where.fold("")("WHERE " + _)} ORDER BY s DESC, doc_id LIMIT $k""".stripMargin)
+    val got = df.collect().map(r => (r.get(0), r.getDouble(1))).toSeq
+    // routed: no scored-set join, and the candidates hold the answer
+    // plus the k-th's ties it left out
+    val plan = df.queryExecution.optimizedPlan
+    val joins = plan.collect { case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+    assert(joins.isEmpty === routed, plan.toString)
+    if (!routed) assert(inIds(df, "doc_id").isEmpty, plan.toString)
+    else if (got.nonEmpty) assert(inIds(df, "doc_id") match {
+      case Seq(cand) => got.map(g => catalyst(g._1)).toSet.subsetOf(cand)
+      case _ => false
+    }, plan.toString)
+    val want = Bm25.scoreWithIndex(idx, query.split(" ").toSeq,
+        idFilter = where.map(w => spark.read.parquet(path).filter(expr(w)).select(col("doc_id"))))
+      .select(col("doc_id"), round(col("score"), scale).as("s"))
+      .orderBy(col("s").desc, col("doc_id")).limit(k)
+      .collect().map(r => (r.get(0), r.getDouble(1))).toSeq
+    assert(got === want, s"'$query' ROUND $scale ${where.getOrElse("")} LIMIT $k")
+    got
+  }
+
+  test("BM25 top-k route: the k best plus the k-th's ties at the statement's rounding, bound back as literals") {
+    import graft.operators.Bm25
+    // every doc holds the query term q once, so its idf is small; doc i
+    // of the tied run adds 20000+i filler tokens, and its raw score
+    // falls with i about 3e-7 apart: adjacent docs tie at 6 dp in runs
+    // and at 4 dp in long runs. Ids rise with the raw score, so the
+    // statement's doc_id tiebreak disagrees with the raw order.
+    val n = 30
+    val tied = (0 until n).map(i => ((n - i).toLong, i % 3, ("q " + "z " * (20000 + i)).trim))
+    val other = Seq((100L, 0, "q w z"), (101L, 1, "q w w z"), (102L, 2, "q v"))
+    val path = docTable(tied ++ other)
+    val idx = savedBm25(spark.read.parquet(path))
+    Bm25.Catalog.register(path, "text", "doc_id", idx)
+    try {
+      val raw = Bm25.scoreWithIndex(idx, Seq("q")).collect()
+        .map(_.getDouble(1)).sorted(Ordering.Double.TotalOrdering.reverse).toSeq
+      // a k whose k-th raw score differs from the next one's, but not
+      // once both are rounded to `scale` decimals
+      def straddle(scale: Int): Int = (1 until raw.length).find { k =>
+        def r(x: Double) = BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP)
+        raw(k - 1) != raw(k) && r(raw(k - 1)) == r(raw(k))
+      }.get
+      val k6 = straddle(6)
+      assertBm25Route(path, idx, "q", 6, None, k6)
+      assertBm25Route(path, idx, "q", 4, None, straddle(4))
+      assertBm25Route(path, idx, "q", 4, Some("n == 1"), 5)
+      assertBm25Route(path, idx, "q w", 6, Some("n < 2"), k6)
+      // a term missing from the vocabulary drops out of the score
+      assert(assertBm25Route(path, idx, "q nosuchterm", 6, None, 5).length === 5)
+      // zero matching docs: no term in the vocabulary, or none past the WHERE
+      assert(assertBm25Route(path, idx, "nosuchterm", 6, None, 5).isEmpty)
+      assert(assertBm25Route(path, idx, "w", 6, Some("n == 2"), 5).isEmpty)
+      // LIMIT past the number of matches returns every match
+      assert(assertBm25Route(path, idx, "q w", 6, None, 100).length === n + 3)
+
+      // without a LIMIT the statement answers through the scored-set join
+      val joined = Tql.query(spark, dir,
+        s"""SELECT doc_id, ROUND(BM25_SIMILARITY(text, 'w'), 6) AS s FROM "$path"
+           |ORDER BY s DESC, doc_id""".stripMargin)
+      assert(inIds(joined, "doc_id").isEmpty)
+      assert(joined.queryExecution.optimizedPlan.collectFirst {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.nonEmpty)
+      assert(joined.collect().map(_.getLong(0)).toSeq === Seq(101L, 100L))
+    } finally Bm25.Catalog.clear()
+  }
+
+  test("BM25 top-k route answers through the join when its candidates would pass MaxCandidates: ROUND(.., 0), a large LIMIT") {
+    import graft.operators.Bm25
+    // every doc holds q once and its idf is near 0, so every score
+    // rounds to 0 at 0 dp; at 6 dp only equal lengths tie. Unfiltered,
+    // each of the candidate pass's reduce partitions ties more docs
+    // than it keeps.
+    val n = 5 * Bm25.MaxCandidates
+    val path = docTable((0 until n).map(i => (i.toLong, i % 3, ("q " + "z " * (i % 50)).trim)))
+    val idx = savedBm25(spark.read.parquet(path))
+    Bm25.Catalog.register(path, "text", "doc_id", idx)
+    try {
+      assert(assertBm25Route(path, idx, "q", 0, None, 5, routed = false).length === 5)
+      assert(assertBm25Route(path, idx, "q", 0, Some("n < 2"), 5, routed = false).length === 5)
+      assertBm25Route(path, idx, "q", 6, None, 5)
+      assert(assertBm25Route(path, idx, "q", 6, None, Bm25.MaxCandidates + 1,
+        routed = false).length === Bm25.MaxCandidates + 1)
+    } finally Bm25.Catalog.clear()
+  }
+
+  test("routes bind the candidates of a STRING or DATE id column as Catalyst values: ANN unfiltered and filtered, BM25") {
+    import graft.operators.{AnnIndex, Bm25}
+    val spark2 = spark
+    import spark2.implicits._
+    // the table of the ANN route-equivalence tests, with String ids
+    val rnd = new scala.util.Random(11)
+    val angles = Seq(0, 20, 40, 60, 80, 100, 180, 200)
+    var next = -1L
+    val rows = angles.zipWithIndex.flatMap { case (a, g) =>
+      Seq.fill(if (a >= 180) 60 else 10) { next += 1; (f"v$next%03d", g, at(a, rnd, 0.01)) }
+    }
+    val vpath = java.nio.file.Files.createTempDirectory("ann_route").toString + "/t"
+    rows.toDF("vec_id", "grp", "embedding").write.parquet(vpath)
+    val aidx = AnnIndex.build(spark.read.parquet(vpath), "vec_id", "embedding", 8)
+    val config = AnnIndex.SearchConfig(clusterSearchFactor = 0.3)
+    AnnIndex.Catalog.register(vpath, "embedding", "vec_id", aidx, config)
+    try {
+      val q = at(5, rnd, 0.0).map(_.toDouble)
+      // unfiltered; a filter that widens twice
+      for (where <- Seq(None, Some("grp == 7 OR vec_id == 'v000'"))) {
+        val routed = Tql.query(spark, dir, annTql(vpath, "cosine", q, where.fold("")("WHERE " + _), 5))
+        val got = routed.collect().map(_.getString(0)).toSeq
+        assertRoutedTo(routed, "vec_id")
+        val want = AnnIndex.search(aidx, Seq((0, q)).toDF("qid", "q_vec"), "qid", "q_vec", 5,
+            config, idFilter = where.map(w => spark.read.parquet(vpath).filter(expr(w))
+              .select(col("vec_id"))))
+          .orderBy(col("rank")).select(col("id")).collect().map(_.getString(0)).toSeq
+        assert(got === want && got.length === 5, where.getOrElse("unfiltered"))
+      }
+    } finally AnnIndex.Catalog.clear()
+
+    val docs = Seq((1, 0, "q a"), (2, 1, "q b b"), (3, 2, "q a c"), (4, 0, "a b"), (5, 1, "q"))
+    val day0 = java.time.LocalDate.of(2024, 1, 1)
+    val byString = docs.map { case (i, n, t) => (s"d$i", n, t) }.toDF("doc_id", "n", "text")
+    val byDate = docs.map { case (i, n, t) => (java.sql.Date.valueOf(day0.plusDays(i)), n, t) }
+      .toDF("doc_id", "n", "text")
+    for (frame <- Seq(byString, byDate)) {
+      val path = java.nio.file.Files.createTempDirectory("bm25_route").toString + "/t"
+      frame.write.parquet(path)
+      val idx = savedBm25(spark.read.parquet(path))
+      Bm25.Catalog.register(path, "text", "doc_id", idx)
+      try {
+        assert(assertBm25Route(path, idx, "q a", 6, None, 3).length === 3)
+        assert(assertBm25Route(path, idx, "q a", 6, Some("n < 2"), 3).length === 3)
+      } finally Bm25.Catalog.clear()
+    }
+  }
+
+  test("a routed BM25 request runs 3 jobs on a warm table (df, candidates, answer)") {
+    import graft.operators.Bm25
+    Bm25.Catalog.register("documents", "text", "doc_id", savedBm25(tbl("documents")))
+    try {
+      val sql = """SELECT doc_id, ROUND(BM25_SIMILARITY(text, 'spark join'), 6) AS s
+                  |FROM documents ORDER BY s DESC, doc_id LIMIT 10""".stripMargin
+      def jobs(): Int = JobCount(spark)(Tql.query(spark, dir, sql).collect())
+      jobs() // warm-up: table schema, n_docs and avgdl
+      assert(jobs() === 3)
+    } finally Bm25.Catalog.clear()
+  }
+
   test("vector ? params bind as array literals in projections (expr.hpp:107-126)") {
     val emb = tbl("embeddings")
     val qv = emb.filter(col("vec_id") === 0).select(col("embedding"))
@@ -1064,6 +1239,51 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
           Some("grp >= 6 OR vec_id < 2"), 5)
         assert(widened.length === 5 && widened.count(far) === 3, s"$metric: $widened")
       }
+    } finally AnnIndex.Catalog.clear()
+  }
+
+  test("filtered ANN route replays the widening from one per-cluster pass: a filter that widens twice, one that keeps every row") {
+    import graft.operators.AnnIndex
+    // the table of the route-equivalence test above: six near clusters
+    // (10 rows each) and two far ones (60 rows each)
+    val rnd = new scala.util.Random(11)
+    val angles = Seq(0, 20, 40, 60, 80, 100, 180, 200)
+    var next = -1L
+    val rows = angles.zipWithIndex.flatMap { case (a, g) =>
+      Seq.fill(if (a >= 180) 60 else 10) { next += 1; (next, g, at(a, rnd, 0.01)) }
+    }
+    val path = vecTable(rows)
+    val idx = AnnIndex.build(spark.read.parquet(path), "vec_id", "embedding", 8)
+    val config = AnnIndex.SearchConfig(clusterSearchFactor = 0.3)
+    AnnIndex.Catalog.register(path, "embedding", "vec_id", idx, config)
+    try {
+      val q = at(5, rnd, 0.0).map(_.toDouble)
+      for (metric <- Seq("cosine", "l2", "dot")) {
+        // selectivity 61/180 starts at ceil(1 / 0.339) = 3 clusters
+        // holding one survivor, then widens to 6 and to all 8
+        val widened = assertSameAsSearch(path, idx, config, metric, q,
+          Some("grp == 7 OR vec_id == 0"), 5)
+        assert(widened.length === 5 && widened.count(_ >= 120L) === 4, s"$metric: $widened")
+        // every row survives: the first probe (one cluster) already holds k
+        assertSameAsSearch(path, idx, config, metric, q, Some("vec_id >= 0"), 5)
+      }
+    } finally AnnIndex.Catalog.clear()
+  }
+
+  test("a routed filtered ANN request runs 3 jobs on a warm table (filter ids, cluster pass, answer)") {
+    import graft.operators.AnnIndex
+    val emb = tbl("embeddings")
+    AnnIndex.Catalog.register("embeddings", "embedding", "vec_id",
+      AnnIndex.build(emb, "vec_id", "embedding", 8))
+    try {
+      val qv = emb.filter(col("vec_id") === 0).select(col("embedding"))
+        .collect()(0).getSeq[Float](0).map(_.toDouble)
+      val sql = s"""SELECT vec_id, ROUND(COSINE_SIMILARITY(embedding, ${qv.mkString("ARRAY[", ", ", "]")}), 6)
+                   |AS score FROM embeddings WHERE vec_id % 5 == 0
+                   |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin
+      def jobs(): Int = JobCount(spark)(Tql.query(spark, dir, sql).collect())
+      jobs() // warm-up: the index's assignment row count
+      assert(jobs() === 3)
     } finally AnnIndex.Catalog.clear()
   }
 
