@@ -471,8 +471,6 @@ object Tql {
 
   private def runDropIndex(spark: SparkSession, target: String, colName: String,
       tpe0: String): DataFrame = {
-    import graft.operators.{AnnIndex, Bm25}
-    import graft.plans.IndexCatalog
     val tpe = graft.sources.Snapshots.normType(tpe0) // throws on unknown:
                                         // a typo must not fall through to
                                         // the ANN case and unregister a
@@ -483,13 +481,7 @@ object Tql {
       graft.sources.Snapshots.dropIndex(spark, name, colName, tpe)
     else {
       val (key, dir) = namedIndexHome(name, colName, tpe)
-      tpe match {
-        case "inverted" => IndexCatalog.unregister(key, colName, IndexCatalog.Contains)
-        case "exact" => IndexCatalog.unregister(key, colName, IndexCatalog.Equals)
-        case "json" => IndexCatalog.unregister(key, colName, IndexCatalog.Json)
-        case "bm25" => Bm25.Catalog.unregister(name, colName)
-        case _ => AnnIndex.Catalog.unregister(name, colName)
-      }
+      graft.sources.Snapshots.unregisterIndex(key, name, colName, tpe)
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(p)) fs.delete(p, true)
@@ -598,59 +590,32 @@ object Tql {
       env = Env(joined, env.aliases ++ ralias)
     }
 
-    // ORDER BY COSINE_SIMILARITY(col, const) DESC LIMIT k over a table
-    // with a registered embedding index → restrict the scan to the
-    // index's top-k candidates first (reference `cpp/tql/tql.hpp:171`
-    // check_for_top_k_binary_function_search): the driver ranks the
-    // index's centroids, one job collects the k candidate ids from the
-    // probed clusters, and the scan keeps only `idCol IN (ids)`; the
-    // ORDER/LIMIT below then orders only the candidates, so schema and
-    // tiebreak semantics are unchanged (result is approximate exactly
-    // like the reference's index route). A WHERE clause composes into
-    // the search as a candidate pre-filter (the reference runs index
-    // queries against a filter bitmap — `cpp/query_core/index_holder.hpp:33`):
-    // ids surviving the filter gate the assignment scan, one pass returns
-    // each cluster's survivor count and top k, and the driver replays the
-    // adaptive probe widening over those lists when the filter starves
-    // the candidate pool. The quantized index's int8 cosine gate and the
-    // PQ index keep the frame search behind a broadcast semi-join.
-    // Joins/grouping still disable the route.
+    // the ids of the rows that pass WHERE: a route's candidate pre-filter
+    // (the reference runs index queries against a filter bitmap —
+    // `cpp/query_core/index_holder.hpp:33`)
+    def whereIds(idCol: String): Option[DataFrame] =
+      sel.where.map(w => env.df.filter(expr(env, w, params)).select(col(idCol)))
+
+    // ORDER BY COSINE_SIMILARITY(col, const) DESC LIMIT k (or L2_NORM
+    // ASC, DOT DESC) over a table with a registered embedding index →
+    // restrict the scan to the index's top-k candidates first (reference
+    // `cpp/tql/tql.hpp:171` check_for_top_k_binary_function_search):
+    // `AnnIndex.topIds` ranks the index's centroids on the driver, one
+    // job collects the k candidate ids from the probed clusters (through
+    // the index's candidate gate under cosine, if it has one), and the
+    // scan keeps only `idCol IN (ids)`; the ORDER/LIMIT below then
+    // orders only the candidates, so schema and tiebreak semantics are
+    // unchanged (result is approximate exactly like the reference's
+    // index route). A WHERE clause composes into the search as a
+    // candidate pre-filter: one pass returns each cluster's survivor
+    // count and best candidates, and the driver replays the adaptive
+    // probe widening over those lists when the filter starves the
+    // candidate pool. Joins/grouping still disable the route.
     if (indexRoutingEnabled.get()) annTopKRoute(sel, params).foreach { case (vecCol, qVec, k, metric) =>
-      routeTable(sel.from) match {
-        case Some(tname) =>
-          val A = graft.operators.AnnIndex
-          val plain = A.Catalog.lookup(tname, vecCol)
-          // PQ route fires only when no plain/quantized entry exists (the
-          // plain index is the more exact artifact for the same column);
-          // PQ's ADC tables approximate the inner product, so it serves
-          // cosine only
-          val pq = if (plain.isEmpty && metric == "cosine")
-            A.Catalog.lookupPq(tname, vecCol) else None
-          plain.map(_.idCol).orElse(pq.map(_.idCol)).foreach { idCol =>
-            val filterIds = sel.where.map { w =>
-              env.df.filter(expr(env, w, params)).select(col(idCol).as("id"))
-            }
-            val restricted = plain match {
-              case Some(entry) if !entry.index.quantized || metric != "cosine" =>
-                env.df.filter(idIn(env.df(idCol), A.topIds(entry.index, qVec, k,
-                  entry.config, idFilter = filterIds, metric = metric)))
-              case _ =>
-                import spark.implicits._
-                val qdf = Seq((0, qVec)).toDF("qid", "q_vec")
-                val cand = plain match {
-                  case Some(entry) => A.search(entry.index, qdf, "qid", "q_vec", k,
-                    entry.config, idFilter = filterIds, metric = metric)
-                  case None =>
-                    val pe = pq.get
-                    A.searchPq(pe.index, qdf, "qid", "q_vec", k, pe.config,
-                      idFilter = filterIds)
-                }
-                env.df.join(broadcast(cand.select(col("id").as("__ann_cand_id"))),
-                  env.df(idCol) === col("__ann_cand_id"), "left_semi")
-            }
-            env = env.copy(df = restricted)
-          }
-        case _ => ()
+      routeTable(sel.from).flatMap(graft.operators.AnnIndex.Catalog.lookup(_, vecCol)).foreach { entry =>
+        val ids = graft.operators.AnnIndex.topIds(entry.index, qVec, k, entry.config,
+          idFilter = whereIds(entry.idCol), metric = metric)
+        env = env.copy(df = env.df.filter(idIn(env.df(entry.idCol), ids)))
       }
     }
 
@@ -664,25 +629,17 @@ object Tql {
     // survivors — the scan never ranks the whole corpus on the
     // len(bag) x len(qbag) kernel.
     if (indexRoutingEnabled.get()) maxsimRoute(sel, params).foreach { case (bagCol, qBag, k) =>
-      routeTable(sel.from) match {
-        case Some(tname) =>
-          val A = graft.operators.AnnIndex
-          A.Catalog.lookup(tname, bagCol).foreach { entry =>
-            import spark.implicits._
-            val qdf = qBag.zipWithIndex.map { case (v, i) => (i, v) }
-              .toDF("qid", "q_vec")
-            val filterIds = sel.where.map { w =>
-              env.df.filter(expr(env, w, params)).select(col(entry.idCol).as("id"))
-            }
-            val cand = A.search(entry.index, qdf, "qid", "q_vec",
-                k * math.max(entry.config.accuracyFactor, 1), entry.config,
-                idFilter = filterIds, metric = "cosine")
-              .select(col("id")).distinct()
-            env = env.copy(df = env.df.join(
-              broadcast(cand.select(col("id").as("__ann_cand_id"))),
-              env.df(entry.idCol) === col("__ann_cand_id"), "left_semi"))
-          }
-        case _ => ()
+      routeTable(sel.from).flatMap(graft.operators.AnnIndex.Catalog.lookup(_, bagCol)).foreach { entry =>
+        import spark.implicits._
+        val qdf = qBag.zipWithIndex.map { case (v, i) => (i, v) }
+          .toDF("qid", "q_vec")
+        val cand = graft.operators.AnnIndex.search(entry.index, qdf, "qid", "q_vec",
+            k * math.max(entry.config.accuracyFactor, 1), entry.config,
+            idFilter = whereIds(entry.idCol), metric = "cosine")
+          .select(col("id")).distinct()
+        env = env.copy(df = env.df.join(
+          broadcast(cand.select(col("id").as("__ann_cand_id"))),
+          env.df(entry.idCol) === col("__ann_cand_id"), "left_semi"))
       }
     }
 
@@ -703,9 +660,7 @@ object Tql {
     if (indexRoutingEnabled.get()) bm25Route(sel).foreach { case (tcol, qtext) =>
       routeTable(sel.from).flatMap(graft.operators.Bm25.Catalog.lookup(_, tcol)).foreach { entry =>
         val B = graft.operators.Bm25
-        val filterIds = sel.where.map { w =>
-          env.df.filter(expr(env, w, params)).select(col(entry.idCol))
-        }
+        val filterIds = whereIds(entry.idCol)
         val terms = qtext.split(" ").toSeq.filter(_.nonEmpty)
         val top = bm25TopK(sel, params).flatMap { case (k, scale) =>
           B.topScores(entry.index, terms, k, scale, idFilter = filterIds)

@@ -38,35 +38,11 @@ object Bm25 {
     * BM25 search routing `cpp/deeplake_pg/index_search.cpp:135-169`).
     * Keyed by (table, text column); `idCol` names the table's id column
     * candidates join back on. */
-  object Catalog {
+  object Catalog extends RouteCatalog {
     final case class Entry(index: Index, idCol: String)
-    @volatile private var entries: Map[(String, String), Entry] = Map.empty
-    @volatile private var providers: Map[(String, String), () => Option[Entry]] =
-      Map.empty
 
     def register(table: String, textCol: String, idCol: String, index: Index): Unit =
-      entries += (table, textCol) -> Entry(index, idCol)
-
-    /** Version-gated registration: the provider re-validates at LOOKUP
-      * time (table-owned indexes re-check their manifest + artifact
-      * stamp — see `Snapshots.bm25Provider`), so a drop/quarantine or
-      * absorb in another process is observed instead of serving a
-      * stale loaded frame; `None` means no route (linear fallback). An
-      * eager [[register]] for the same key wins (session indexes have
-      * no manifest to gate on). */
-    def registerProvider(table: String, textCol: String,
-        p: () => Option[Entry]): Unit =
-      providers += (table, textCol) -> p
-
-    def lookup(table: String, textCol: String): Option[Entry] =
-      entries.get((table, textCol))
-        .orElse(providers.get((table, textCol)).flatMap(_.apply()))
-
-    def unregister(table: String, textCol: String): Unit = {
-      entries -= ((table, textCol)); providers -= ((table, textCol))
-    }
-
-    def clear(): Unit = { entries = Map.empty; providers = Map.empty }
+      put(table, textCol, Entry(index, idCol))
   }
 
   /** postings: one row per (doc, term) with tf and dl.

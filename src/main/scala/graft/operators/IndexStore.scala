@@ -92,19 +92,20 @@ object IndexStore {
   /** plain Clustered ANN index over embeddings(vec_id, embedding) */
   def ann(spark: SparkSession, sfDir: String, nClusters: Int = 16): AnnIndex.Index = {
     val idx = AnnIndex.load(spark, annArtifact(spark, sfDir, nClusters))
-    idx.copy(assignments = idx.assignments.drop("vec_q"), quantized = false)
+    idx.copy(assignments = idx.assignments.drop("vec_q"), gate = None)
   }
 
   /** ClusteredQuantized ANN index (int8 candidate form stored) */
   def annQuantized(spark: SparkSession, sfDir: String, nClusters: Int = 16): AnnIndex.Index =
     AnnIndex.load(spark, annArtifact(spark, sfDir, nClusters))
 
-  /** IVF-PQ index over embeddings(vec_id, embedding): coarse clusters +
-    * m-byte PQ codes; candidate scan is table lookups, not float math */
+  /** IVF-PQ index over embeddings(vec_id, embedding): the clustered
+    * index gated by m-byte PQ codes (candidates score by table lookups,
+    * not float math) */
   def annPq(spark: SparkSession, sfDir: String, nClusters: Int = 16,
-      m: Int = 8, ksub: Int = 64): AnnIndex.PqIndex =
-    AnnIndex.loadPq(spark, ensure(artifactDir(sfDir, s"annpq2-$nClusters-$m-$ksub")) { d =>
-      AnnIndex.savePq(AnnIndex.buildPq(
+      m: Int = 8, ksub: Int = 64): AnnIndex.Index =
+    AnnIndex.load(spark, ensure(artifactDir(sfDir, s"annpq2-$nClusters-$m-$ksub")) { d =>
+      AnnIndex.save(AnnIndex.buildPq(
         Tables(spark, sfDir, "embeddings"), "vec_id", "embedding",
         nClusters, m, ksub), d)
     })

@@ -103,8 +103,8 @@ object AnnQueries extends QueryModule {
         "FROM qn q CROSS JOIN cb GROUP BY 1, 2), " +
       "lutq AS (SELECT qid, list(tbl ORDER BY subspace) AS luts FROM lut GROUP BY 1), " +
       attempt("", nProbe, pool)
-    // the filtered TQL arm replays AnnIndex.adaptiveSearch's widening,
-    // not a hard-coded fixpoint: if the first attempt leaves the (one)
+    // the filtered TQL arm replays AnnIndex.widening (topIds runs it on
+    // the driver), not a hard-coded fixpoint: if the first attempt leaves the (one)
     // query short of min(k, filtered survivors) results, the probe
     // doubles to all 16 clusters — replayed as a second chain plus a
     // count-gated selector, so the oracle tracks the route on ANY corpus
@@ -291,7 +291,7 @@ object AnnQueries extends QueryModule {
       (s, dir) => {
         val idx = IndexStore.annPq(s, dir)
         val queries = table(s, dir, "embeddings").filter(col("vec_id") < 5)
-        AnnIndex.searchPq(idx, queries, "vec_id", "embedding", k = 10)
+        AnnIndex.search(idx, queries, "vec_id", "embedding", k = 10)
           .select(col("qid"), col("rank"), col("id").as("neighbor_id"),
             round(col("score"), 6).as("cos_sim"))
           .orderBy(col("qid"), col("rank"))
@@ -300,9 +300,10 @@ object AnnQueries extends QueryModule {
         tqlFinal = false)),
       doc = "IVF-PQ: per-query ADC lookup tables score m-byte codes, exact rerank on survivors (oracle replays ADC)"),
 
-    // PQ arm of the same dialect route: with only a PQ index registered
-    // for the column, ORDER BY COSINE_SIMILARITY ... LIMIT k (plus a
-    // WHERE pre-filter) searches the PQ artifact
+    // the same dialect route over a PQ-gated index registered for the
+    // column: ORDER BY COSINE_SIMILARITY ... LIMIT k (plus a WHERE
+    // pre-filter) ranks the probed survivors by ADC in topIds' one pass
+    // and reranks the gate's pool exactly
     // FULL oracle: same ADC replay, candidates pre-filtered to the
     // WHERE survivors; selectivity 1/2 widens the adaptive probe's
     // first step to ceil(4/0.5) = 8 clusters, and the oracle ALSO
@@ -311,7 +312,7 @@ object AnnQueries extends QueryModule {
     "q_tql_ann_pq" -> Q(
       (s, dir) => {
         AnnIndex.Catalog.clear()
-        AnnIndex.Catalog.registerPq("embeddings", "embedding", "vec_id",
+        AnnIndex.Catalog.register("embeddings", "embedding", "vec_id",
           IndexStore.annPq(s, dir))
         try graft.dialect.Tql.query(s, dir,
           s"""SELECT vec_id, ROUND(COSINE_SIMILARITY(embedding, ${qv0(s, dir)}), 6) AS score

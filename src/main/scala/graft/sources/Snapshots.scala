@@ -824,6 +824,23 @@ object Snapshots {
       s"unsupported index type '$other' (supported: ${IndexTypes.mkString(", ")})")
   }
 
+  /** Drop `column`'s index of kind `tpe` from its routing catalog: the
+    * scan-rewrite kinds key on the scan path `scanKey`, the top-k routes
+    * on the FROM name `table` (both are the root for a table-owned
+    * index). An unknown kind throws ([[normType]]), so a typo never
+    * unregisters a live ANN index. */
+  private[graft] def unregisterIndex(scanKey: String, table: String, column: String,
+      tpe: String): Unit = {
+    import graft.plans.IndexCatalog
+    normType(tpe) match {
+      case "inverted" => IndexCatalog.unregister(scanKey, column, IndexCatalog.Contains)
+      case "exact" => IndexCatalog.unregister(scanKey, column, IndexCatalog.Equals)
+      case "json" => IndexCatalog.unregister(scanKey, column, IndexCatalog.Json)
+      case "bm25" => graft.operators.Bm25.Catalog.unregister(table, column)
+      case _ => graft.operators.AnnIndex.Catalog.unregister(table, column)
+    }
+  }
+
   /** CREATE INDEX: build over the CURRENT snapshot, persist under the
     * table root, record in the manifest, register with the routing
     * catalog — queries route immediately and after any later reopen.
@@ -853,17 +870,7 @@ object Snapshots {
   def dropIndex(spark: SparkSession, root: String, column: String,
       indexType: String): Unit = {
     val tpe = normType(indexType)
-    import graft.operators.{AnnIndex, Bm25}
-    tpe match {
-      case "inverted" => graft.plans.IndexCatalog.unregister(root, column,
-        graft.plans.IndexCatalog.Contains)
-      case "exact" => graft.plans.IndexCatalog.unregister(root, column,
-        graft.plans.IndexCatalog.Equals)
-      case "json" => graft.plans.IndexCatalog.unregister(root, column,
-        graft.plans.IndexCatalog.Json)
-      case "bm25" => Bm25.Catalog.unregister(root, column)
-      case _ => AnnIndex.Catalog.unregister(root, column)
-    }
+    unregisterIndex(root, root, column, tpe)
     writeIndexDefs(root,
       readIndexDefs(root).filterNot(d => d.column == column && d.tpe == tpe))
     val p = new org.apache.hadoop.fs.Path(indexDir(root, column, tpe).toString)
@@ -1042,17 +1049,7 @@ object Snapshots {
     * postings would still match), so concurrent planners must fall back
     * to linear scans until [[rebuildIndexes]] re-registers. */
   private def unregisterIndexes(root: String): Unit =
-    readIndexDefs(root).foreach { d =>
-      import graft.operators.{AnnIndex, Bm25}
-      import graft.plans.IndexCatalog
-      d.tpe match {
-        case "inverted" => IndexCatalog.unregister(root, d.column, IndexCatalog.Contains)
-        case "exact" => IndexCatalog.unregister(root, d.column, IndexCatalog.Equals)
-        case "json" => IndexCatalog.unregister(root, d.column, IndexCatalog.Json)
-        case "bm25" => Bm25.Catalog.unregister(root, d.column)
-        case _ => AnnIndex.Catalog.unregister(root, d.column)
-      }
-    }
+    readIndexDefs(root).foreach(d => unregisterIndex(root, root, d.column, d.tpe))
 
   /** On-disk fence for the copy-on-write rebuild window. While it
     * exists: [[registerIndexes]] refuses to (re)register the root — in

@@ -101,7 +101,7 @@ class AnnScaleSpec extends AnyFunSuite {
     val nExact = exact.count().toDouble
     val runs = configs.map { cfg =>
       val t1 = System.nanoTime()
-      val approx = AnnIndex.searchPq(idx, queries, "id", "embedding", k = 10, cfg)
+      val approx = AnnIndex.search(idx, queries, "id", "embedding", k = 10, cfg)
         .select(col("qid"), col("id")).persist()
       approx.count()
       val searchSec = (System.nanoTime() - t1) / 1e9

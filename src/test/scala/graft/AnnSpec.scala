@@ -15,33 +15,35 @@ class AnnSpec extends AnyFunSuite {
 
   test("default config recall@10 >= 0.6 on random vectors") {
     val queries = emb.filter(col("vec_id") < 10)
-    val r = AnnIndex.recallAtK(spark, emb, queries, "vec_id", "embedding",
-      k = 10, AnnIndex.SearchConfig(), nClusters = 16)
+    val r = AnnIndex.recallAtK(AnnIndex.build(emb, "vec_id", "embedding", nClusters = 16),
+      emb, queries, "vec_id", "embedding", k = 10, AnnIndex.SearchConfig())
     assert(r >= 0.6, s"recall@10 = $r")
   }
 
   test("high-accuracy config (probe all clusters) recall@10 = 1.0") {
     val queries = emb.filter(col("vec_id") < 10)
-    val r = AnnIndex.recallAtK(spark, emb, queries, "vec_id", "embedding",
-      k = 10, AnnIndex.SearchConfig(accuracyFactor = 20, clusterSearchFactor = 8.0),
-      nClusters = 16)
+    val r = AnnIndex.recallAtK(AnnIndex.build(emb, "vec_id", "embedding", nClusters = 16),
+      emb, queries, "vec_id", "embedding",
+      k = 10, AnnIndex.SearchConfig(accuracyFactor = 20, clusterSearchFactor = 8.0))
     assert(r === 1.0, s"recall@10 = $r (exhaustive probe must equal exact)")
   }
 
   test("quantized index: recall@10 non-decreasing in accuracyFactor") {
     val queries = emb.filter(col("vec_id") < 10)
+    val idx = AnnIndex.build(emb, "vec_id", "embedding", nClusters = 16, quantized = true)
     val rs = Seq(1, 3, 10).map { af =>
-      AnnIndex.recallAtK(spark, emb, queries, "vec_id", "embedding", k = 10,
-        AnnIndex.SearchConfig(accuracyFactor = af), nClusters = 16, quantized = true)
+      AnnIndex.recallAtK(idx, emb, queries, "vec_id", "embedding", k = 10,
+        AnnIndex.SearchConfig(accuracyFactor = af))
     }
     assert(rs == rs.sorted, s"recall must be non-decreasing in accuracyFactor: $rs")
   }
 
   test("quantized index recall@10 >= 0.9 vs brute force (all clusters probed)") {
     val queries = emb.filter(col("vec_id") < 10)
-    val r = AnnIndex.recallAtK(spark, emb, queries, "vec_id", "embedding", k = 10,
-      AnnIndex.SearchConfig(accuracyFactor = 10, clusterSearchFactor = 4.0),
-      nClusters = 16, quantized = true)
+    val r = AnnIndex.recallAtK(
+      AnnIndex.build(emb, "vec_id", "embedding", nClusters = 16, quantized = true),
+      emb, queries, "vec_id", "embedding", k = 10,
+      AnnIndex.SearchConfig(accuracyFactor = 10, clusterSearchFactor = 4.0))
     assert(r >= 0.9, s"quantized recall@10 = $r")
   }
 
@@ -87,8 +89,8 @@ class AnnSpec extends AnyFunSuite {
 
   test("IVF-PQ recall@10 >= 0.6 at default config") {
     val queries = emb.filter(col("vec_id") < 10)
-    val r = AnnIndex.recallAtKPq(spark, emb, queries, "vec_id", "embedding",
-      k = 10, AnnIndex.SearchConfig(), nClusters = 16)
+    val r = AnnIndex.recallAtK(AnnIndex.buildPq(emb, "vec_id", "embedding", nClusters = 16),
+      emb, queries, "vec_id", "embedding", k = 10, AnnIndex.SearchConfig())
     info(s"pq default recall@10 = $r")
     assert(r >= 0.6, s"pq recall@10 = $r")
   }
@@ -98,16 +100,16 @@ class AnnSpec extends AnyFunSuite {
     // to keep true neighbors inside the top k*accuracyFactor for the
     // exact rerank to recover them
     val queries = emb.filter(col("vec_id") < 10)
-    val r = AnnIndex.recallAtKPq(spark, emb, queries, "vec_id", "embedding",
-      k = 10, AnnIndex.SearchConfig(accuracyFactor = 10, clusterSearchFactor = 4.0),
-      nClusters = 16)
+    val r = AnnIndex.recallAtK(AnnIndex.buildPq(emb, "vec_id", "embedding", nClusters = 16),
+      emb, queries, "vec_id", "embedding",
+      k = 10, AnnIndex.SearchConfig(accuracyFactor = 10, clusterSearchFactor = 4.0))
     info(s"pq exhaustive recall@10 = $r")
     assert(r >= 0.9, s"pq recall@10 = $r")
   }
 
   test("IVF-PQ knob matrix: accuracy_factor 5/10/20 x cluster fraction 0.5/2/8 behave like the reference's") {
     // the reference's search_config.hpp:30-100 defines the same two
-    // knobs; this matrix pins their SEMANTICS on searchPq: accuracy
+    // knobs; this matrix pins their SEMANTICS on the PQ gate: accuracy
     // factor widens the exact-rerank pool (recall non-decreasing, by
     // construction: the rerank of a superset pool can only improve),
     // cluster fraction widens the probe, and the generous corner must
@@ -123,7 +125,7 @@ class AnnSpec extends AnyFunSuite {
     val afs = Seq(5, 10, 20)
     val cfs = Seq(0.5, 2.0, 8.0)
     val recall = (for (af <- afs; cf <- cfs) yield {
-      val approx = AnnIndex.searchPq(idx, queries, "vec_id", "embedding", k,
+      val approx = AnnIndex.search(idx, queries, "vec_id", "embedding", k,
           AnnIndex.SearchConfig(accuracyFactor = af, clusterSearchFactor = cf))
         .select(col("qid"), col("id"))
       val r = exact.intersect(approx).count().toDouble / nExact
@@ -155,7 +157,7 @@ class AnnSpec extends AnyFunSuite {
         keep, "vec_id", "embedding", queries, "vec_id", "embedding", 10)
       .select(col("qid"), col("id"))
     val idx = AnnIndex.buildPq(emb, "vec_id", "embedding", nClusters = 16)
-    val approx = AnnIndex.searchPq(idx, queries, "vec_id", "embedding", 10,
+    val approx = AnnIndex.search(idx, queries, "vec_id", "embedding", 10,
         AnnIndex.SearchConfig(accuracyFactor = 10, clusterSearchFactor = 2.0),
         idFilter = Some(keep.select(col("vec_id"))))
       .select(col("qid"), col("id"))
@@ -167,13 +169,14 @@ class AnnSpec extends AnyFunSuite {
   test("IVF-PQ index round-trips through save/load with identical results") {
     val tmp = java.nio.file.Files.createTempDirectory("pqidx").toString
     val idx = AnnIndex.buildPq(emb, "vec_id", "embedding", nClusters = 8, m = 8, ksub = 16)
-    AnnIndex.savePq(idx, tmp)
-    val loaded = AnnIndex.loadPq(spark, tmp)
-    assert(loaded.codebooks.m === 8 && loaded.codebooks.ksub === 16)
+    AnnIndex.save(idx, tmp)
+    val loaded = AnnIndex.load(spark, tmp)
+    val Some(AnnIndex.Pq(codebooks)) = loaded.gate
+    assert(codebooks.m === 8 && codebooks.ksub === 16)
     val queries = emb.filter(col("vec_id") < 3)
-    val a = AnnIndex.searchPq(idx, queries, "vec_id", "embedding", 5)
+    val a = AnnIndex.search(idx, queries, "vec_id", "embedding", 5)
       .select("qid", "rank", "id").collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    val b = AnnIndex.searchPq(loaded, queries, "vec_id", "embedding", 5)
+    val b = AnnIndex.search(loaded, queries, "vec_id", "embedding", 5)
       .select("qid", "rank", "id").collect().map(_.toSeq).toSeq.sortBy(_.toString)
     assert(a === b)
   }
@@ -242,7 +245,7 @@ class AnnSpec extends AnyFunSuite {
     val idx = AnnIndex.buildPq(emb, "vec_id", "embedding", nClusters = 16)
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
-    val res = AnnIndex.searchPq(idx, emb.filter(col("vec_id") < 3), "vec_id", "embedding",
+    val res = AnnIndex.search(idx, emb.filter(col("vec_id") < 3), "vec_id", "embedding",
       10, idFilter = Some(emb.filter(col("vec_id") % 2 === 0).select(col("vec_id"))))
     assert(res.collect().length === 30)
     // the returned, persisted result is the caller's to release

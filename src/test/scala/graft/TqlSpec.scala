@@ -1210,7 +1210,7 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
     got
   }
 
-  test("single-query ANN route returns AnnIndex.search's ids in order: cosine, l2, dot; unfiltered, full-probe filter, widening filter") {
+  test("single-query ANN route returns AnnIndex.search's ids in order: plain, int8- and PQ-gated indexes; cosine, l2, dot; unfiltered, full-probe filter, widening filter") {
     import graft.operators.AnnIndex
     // 8 tight clusters: six near ones at 0..100 degrees (10 rows each)
     // and two far ones at 180 and 200 degrees (60 rows each)
@@ -1221,24 +1221,31 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq.fill(if (a >= 180) 60 else 10) { next += 1; (next, g, at(a, rnd, 0.01)) }
     }
     val path = vecTable(rows)
-    val idx = AnnIndex.build(spark.read.parquet(path), "vec_id", "embedding", 8)
-    // one cluster probed unfiltered: ceil(sqrt(8) * 0.3) = 1
-    val config = AnnIndex.SearchConfig(clusterSearchFactor = 0.3)
-    AnnIndex.Catalog.register(path, "embedding", "vec_id", idx, config)
-    try {
-      val q = at(5, rnd, 0.0).map(_.toDouble)
-      val far = rows.filter(_._2 >= 6).map(_._1).toSet
-      for (metric <- Seq("cosine", "l2", "dot")) {
-        assertSameAsSearch(path, idx, config, metric, q, None, 5)
-        // selectivity 20/180 is floored at 1/8, which scales the first
-        // probe to all 8 clusters
-        assertSameAsSearch(path, idx, config, metric, q, Some("grp < 2"), 5)
-        // selectivity 122/180 starts at 2 clusters holding 2 survivors;
-        // only widening reaches the far clusters' rows
-        val widened = assertSameAsSearch(path, idx, config, metric, q,
-          Some("grp >= 6 OR vec_id < 2"), 5)
-        assert(widened.length === 5 && widened.count(far) === 3, s"$metric: $widened")
-      }
+    val emb = spark.read.parquet(path)
+    // a gate serves cosine only: l2 and dot score a gated index's
+    // candidates exactly, as on the plain index
+    val indexes = Seq(
+      "plain" -> (AnnIndex.build(emb, "vec_id", "embedding", 8), Seq("cosine", "l2", "dot")),
+      "int8" -> (AnnIndex.build(emb, "vec_id", "embedding", 8, quantized = true), Seq("cosine")),
+      "pq" -> (AnnIndex.buildPq(emb, "vec_id", "embedding", 8, m = 2, ksub = 8),
+        Seq("cosine", "l2")))
+    // one cluster probed unfiltered: ceil(sqrt(8) * 0.3) = 1; a gate
+    // keeps only k candidates for the exact rerank, so its own order
+    // shows in the answer (exact scoring in place of the gate fails here)
+    val config = AnnIndex.SearchConfig(accuracyFactor = 1, clusterSearchFactor = 0.3)
+    val q = at(5, rnd, 0.0).map(_.toDouble)
+    val far = rows.filter(_._2 >= 6).map(_._1).toSet
+    try for ((name, (idx, metrics)) <- indexes; metric <- metrics) {
+      AnnIndex.Catalog.register(path, "embedding", "vec_id", idx, config)
+      assertSameAsSearch(path, idx, config, metric, q, None, 5)
+      // selectivity 20/180 is floored at 1/8, which scales the first
+      // probe to all 8 clusters
+      assertSameAsSearch(path, idx, config, metric, q, Some("grp < 2"), 5)
+      // selectivity 122/180 starts at 2 clusters holding 2 survivors;
+      // only widening reaches the far clusters' rows
+      val widened = assertSameAsSearch(path, idx, config, metric, q,
+        Some("grp >= 6 OR vec_id < 2"), 5)
+      assert(widened.length === 5 && widened.count(far) === 3, s"$name $metric: $widened")
     } finally AnnIndex.Catalog.clear()
   }
 
@@ -1284,6 +1291,46 @@ class TqlSpec extends AnyFunSuite with BeforeAndAfterAll {
       def jobs(): Int = JobCount(spark)(Tql.query(spark, dir, sql).collect())
       jobs() // warm-up: the index's assignment row count
       assert(jobs() === 3)
+    } finally AnnIndex.Catalog.clear()
+  }
+
+  test("a routed request through an int8- or PQ-gated index runs the plain index's jobs on a warm table: 2 unfiltered, 3 filtered") {
+    import graft.operators.AnnIndex
+    val emb = tbl("embeddings")
+    val qv = emb.filter(col("vec_id") === 0).select(col("embedding"))
+      .collect()(0).getSeq[Float](0).map(_.toDouble)
+    def sql(where: String) =
+      s"""SELECT vec_id, ROUND(COSINE_SIMILARITY(embedding, ${qv.mkString("ARRAY[", ", ", "]")}), 6)
+         |AS score FROM embeddings $where ORDER BY score DESC, vec_id LIMIT 10""".stripMargin
+    def jobs(sql: String): Int = JobCount(spark)(Tql.query(spark, dir, sql).collect())
+    try for (idx <- Seq(AnnIndex.build(emb, "vec_id", "embedding", 8, quantized = true),
+        AnnIndex.buildPq(emb, "vec_id", "embedding", 8))) {
+      AnnIndex.Catalog.register("embeddings", "embedding", "vec_id", idx)
+      jobs(sql("")) // warm-up
+      assert(jobs(sql("")) === 2, idx.gate)
+      jobs(sql("WHERE vec_id % 5 == 0")) // warm-up: the index's assignment row count
+      assert(jobs(sql("WHERE vec_id % 5 == 0")) === 3, idx.gate)
+    } finally AnnIndex.Catalog.clear()
+  }
+
+  test("warm routed unfiltered ANN requests compile no new code: the probed cluster ids are a referenced literal") {
+    import graft.operators.AnnIndex
+    val emb = tbl("embeddings")
+    AnnIndex.Catalog.register("embeddings", "embedding", "vec_id",
+      AnnIndex.build(emb, "vec_id", "embedding", 16))
+    try {
+      // different queries probe different sets of 4 of the 16 clusters;
+      // an `In` of the probed ids inlined them, one compile per set
+      val vecs = emb.orderBy("vec_id").limit(14).select("embedding").collect()
+        .map(_.getSeq[Float](0).map(_.toDouble))
+      def run(qv: Seq[Double]): Unit = Tql.query(spark, dir,
+        s"""SELECT vec_id, ROUND(COSINE_SIMILARITY(embedding, ${qv.mkString("ARRAY[", ", ", "]")}), 6)
+           |AS score FROM embeddings ORDER BY score DESC, vec_id LIMIT 10""".stripMargin).collect()
+      vecs.take(4).foreach(run) // warm-up
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val before = compiles.getCount
+      vecs.drop(4).foreach(run)
+      assert(compiles.getCount - before === 0L)
     } finally AnnIndex.Catalog.clear()
   }
 
