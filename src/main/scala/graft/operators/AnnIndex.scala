@@ -250,9 +250,9 @@ object AnnIndex {
     * [[topIds]], which returns the same ids without the query frame).
     * Queries broadcast; corpus touched only in probed clusters. With a
     * [[Gate]] under cosine, the gate's query-side values
-    * ([[gateQuery]]) are computed per probed (query, cluster) row, and
-    * the gate score ranks each query's probed candidates down to
-    * `k * accuracyFactor` before the exact rerank.
+    * ([[gateQuery]]) are computed once per query, and the gate score
+    * ranks each query's probed candidates down to `k * accuracyFactor`
+    * before the exact rerank.
     *
     * `idFilter` composes a WHERE pre-filter into the index search (the
     * reference runs index queries against a filter bitmap —
@@ -284,22 +284,21 @@ object AnnIndex {
     val score = scoreFn(metric)
     val ord = ordFn(metric)
     val gate = gateOf(index, metric)
-    val q = queries.select(col(qIdCol).as("qid"), col(qVecCol).as("q_vec"))
+    // the gate's query-side columns, computed once per query row
+    val q = gate.toSeq.flatMap(gateQuery(_, index.centers)).foldLeft(
+      queries.select(col(qIdCol).as("qid"), col(qVecCol).as("q_vec"))) {
+      case (df, (name, c)) => df.withColumn(name, c)
+    }
     val assignBase = filteredView(index.assignments, idFilter)
 
     def once(nProbe: Int): DataFrame = {
-      // rank clusters per query over the broadcast centroid table; each
-      // probed (query, cluster) row gets the gate's query-side columns
-      val probed = gate.toSeq.flatMap(gateQuery(_, index.centers)).foldLeft(
-        q.crossJoin(broadcast(index.centroids))
-          .withColumn("c_rank", row_number().over(
-            Window.partitionBy(col("qid"))
-              .orderBy(ord(score(col("q_vec"), col("centroid"))),
-                col("cluster_id"))))
-          .filter(col("c_rank") <= nProbe)
-          .select(col("qid"), col("q_vec"), col("cluster_id"))) {
-        case (df, (name, c)) => df.withColumn(name, c)
-      }
+      // rank clusters per query over the broadcast centroid table
+      val probed = q.crossJoin(broadcast(index.centroids))
+        .withColumn("c_rank", row_number().over(
+          Window.partitionBy(col("qid"))
+            .orderBy(ord(score(col("q_vec"), col("centroid"))), col("cluster_id"))))
+        .filter(col("c_rank") <= nProbe)
+        .drop("centroid", "c_rank")
       gate match {
         case None =>
           // every candidate in a probed cluster is scored exactly —
@@ -344,11 +343,9 @@ object AnnIndex {
     * bit-identical to [[search]]'s (ties on cluster_id); a gate's query
     * values are [[search]]'s own expressions, evaluated on the driver.
     *
-    * Without a gate and unfiltered, one `orderBy(score, id).limit(k)`
-    * collect (`ann:candidates`) ranks the probed clusters' candidates.
-    * Otherwise one pass (see [[clusterTops]]) returns each cluster's
-    * candidate count and its own best pool under the gate order (the
-    * exact order without a gate), with the exact score attached: k, or
+    * One pass (see [[clusterTops]]) returns each cluster's candidate
+    * count and its own best pool under the gate order (the exact order
+    * without a gate), with the exact score attached: k, or
     * `k * accuracyFactor` for a gate. An attempt merges the first nProbe
     * clusters' lists, keeps the pool, and reranks it by the exact score
     * to k. Unfiltered, the pass (`ann:candidates`) reads only the probed
@@ -376,42 +373,35 @@ object AnnIndex {
     // an array literal is a reference in generated code, where an `In`
     // of the ids would inline them: one compile per probed set
     val probe = array_contains(typedLit(clusters.take(nProbe0)), col("cluster_id"))
-    val gate = gateOf(index, metric)
-    if (idFilter.isEmpty && gate.isEmpty) Op.scope(sc, "ann:candidates") {
-      view.select(col("cluster_id"), col("id"), exact).filter(probe)
-        .orderBy(ordFn(metric)(col("score")), col("id")).limit(k)
-        .collect().map(_.get(1)).toSeq
-    } else {
-      val idType = view.schema("id").dataType
-      // orderBy(score, id) over (cluster_id, id, score[, exact score])
-      // rows, the score at `i`
-      def order(i: Int, asc: Boolean): Ordering[InternalRow] = new InterpretedOrdering(Seq(
-        SortOrder(BoundReference(i, DoubleType, nullable = true),
-          if (asc) Ascending else Descending),
-        SortOrder(BoundReference(1, idType, nullable = true), Ascending)))
-      val first = order(2, metric == "l2")
-      val (scores, pool, rerank) = gate match {
-        case None => (Seq(exact), k, (rows: Seq[InternalRow]) => rows)
-        case Some(g) =>
-          (Seq(gateScore(g, gateLiterals(index, g, qExpr)).as("score_q"), exact),
-            k * math.max(1, config.accuracyFactor),
-            (rows: Seq[InternalRow]) => rows.sorted(order(3, asc = false)))
-      }
-      val scored = view.select(col("cluster_id") +: col("id") +: scores: _*)
-      val tops =
-        if (idFilter.isEmpty)
-          Op.scope(sc, "ann:candidates")(clusterTops(scored.filter(probe), first, pool))
-        else Op.scope(sc, "ann:clusters")(clusterTops(scored, first, pool))
-      def attempt(nProbe: Int): Seq[InternalRow] = rerank(
-        clusters.take(nProbe).flatMap(c => tops.get(c).fold(Seq.empty[InternalRow])(_._2))
-          .sorted(first).take(pool)).take(k)
-      val top =
-        if (idFilter.isEmpty) attempt(nProbe0)
-        else widening(index.nClusters, nProbe0, k, index.assignmentRows,
-          tops.values.map(_._1).sum)(attempt)(_.length < _)
-      val toId = CatalystTypeConverters.createToScalaConverter(idType)
-      top.map(r => toId(r.get(1, idType)))
+    val idType = view.schema("id").dataType
+    // orderBy(score, id) over (cluster_id, id, score[, exact score])
+    // rows, the score at `i`
+    def order(i: Int, asc: Boolean): Ordering[InternalRow] = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(i, DoubleType, nullable = true),
+        if (asc) Ascending else Descending),
+      SortOrder(BoundReference(1, idType, nullable = true), Ascending)))
+    val first = order(2, metric == "l2")
+    val (scores, pool, rerank) = gateOf(index, metric) match {
+      case None => (Seq(exact), k, (rows: Seq[InternalRow]) => rows)
+      case Some(g) =>
+        (Seq(gateScore(g, gateLiterals(index, g, qExpr)).as("score_q"), exact),
+          k * math.max(1, config.accuracyFactor),
+          (rows: Seq[InternalRow]) => rows.sorted(order(3, asc = false)))
     }
+    val scored = view.select(col("cluster_id") +: col("id") +: scores: _*)
+    val tops =
+      if (idFilter.isEmpty)
+        Op.scope(sc, "ann:candidates")(clusterTops(scored.filter(probe), first, pool))
+      else Op.scope(sc, "ann:clusters")(clusterTops(scored, first, pool))
+    def attempt(nProbe: Int): Seq[InternalRow] = rerank(
+      clusters.take(nProbe).flatMap(c => tops.get(c).fold(Seq.empty[InternalRow])(_._2))
+        .sorted(first).take(pool)).take(k)
+    val top =
+      if (idFilter.isEmpty) attempt(nProbe0)
+      else widening(index.nClusters, nProbe0, k, index.assignmentRows,
+        tops.values.map(_._1).sum)(attempt)(_.length < _)
+    val toId = CatalystTypeConverters.createToScalaConverter(idType)
+    top.map(r => toId(r.get(1, idType)))
   }
 
   /** One pass over `scored` (cluster_id, id, score...) rows: per cluster,
