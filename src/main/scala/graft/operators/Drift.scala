@@ -15,23 +15,21 @@ import org.apache.spark.sql.functions._
   * ε-smoothing for empty bins. Rule of thumb: < 0.1 stable, 0.1–0.25
   * drifting, > 0.25 broken.
   *
-  * Plan shape: the reference's quantile edges are ONE exact-percentile
-  * aggregate broadcast as a 1-row frame; both sides bucket map-side
-  * against the literal edges and pay one small (nBins-row) aggregation
+  * Plan shape: the reference's quantile edges come from ONE exact
+  * funnel-free quantile call and bind as literals; both sides bucket
+  * map-side against them and pay one small (nBins-row) aggregation
   * each. Neither side ever joins the other's rows.
   */
 object Drift {
 
   /** per-bin breakdown: (bin, n_ref, n_cur, p_ref, p_cur, psi_term).
-    * Exact edges (default) come from [[Quantiles.exactQuantiles]] —
-    * funnel-free sketch-then-refine, bit-identical to `percentile()` (the
-    * oracle arithmetic) without its value→count map whose final merge
-    * funnels through one reducer at distinct-cardinality cost;
-    * `approxEdges` swaps in approx_percentile's fixed-size sketch
-    * (lazy, rides inside one plan). */
+    * The edges come from [[Quantiles.exactQuantiles]] — funnel-free
+    * sketch-then-refine, bit-identical to `percentile()` (the oracle
+    * arithmetic) without its value→count map whose final merge funnels
+    * through one reducer at distinct-cardinality cost — and bind as
+    * literals. */
   def psiBins(ref: DataFrame, cur: DataFrame, valueCol: String,
-      nBins: Int = 10, eps: Double = 1e-4,
-      approxEdges: Boolean = false, accuracy: Int = 10000): DataFrame = {
+      nBins: Int = 10, eps: Double = 1e-4): DataFrame = {
     require(nBins >= 2, "need at least 2 bins")
     // NULLs are excluded on BOTH sides (counts and denominators) to
     // match percentile(), which ignores them when placing the edges —
@@ -40,37 +38,12 @@ object Drift {
     val refNn = ref.filter(col(valueCol).isNotNull)
     val curNn = cur.filter(col(valueCol).isNotNull)
     val qs = (1 until nBins).map(_.toDouble / nBins)
-    // edge frame: a broadcast 1-row sketch frame (approx) or the exact
-    // edges bound as literals on a dummy 1-row frame —
-    // either way `binned` crossJoins it and reads __e0..__e{n-2}
-    val edgeFrame: DataFrame =
-      if (approxEdges) {
-        val qArr = qs.mkString("array(", ", ", ")")
-        refNn.agg(expr(s"approx_percentile($valueCol, $qArr, $accuracy)").as("__earr"))
-          .select(qs.indices.map(i =>
-            element_at(col("__earr"), i + 1).cast("double").as(s"__e$i")): _*)
-      } else {
-        // None (empty/all-NULL reference) mirrors percentile()'s NULL
-        // edges: binning proceeds against NULL edges, never a crash
-        val es = graft.operators.Quantiles
-          .exactQuantilesOpt(refNn, valueCol, qs)
-          .map(_.toSeq.map(e => lit(e)))
-          .getOrElse(qs.map(_ => lit(null).cast("double")))
-        ref.sparkSession.range(1)
-          .select(es.zipWithIndex.map { case (e, i) => e.as(s"__e$i") }: _*)
-      }
-    def binned(df: DataFrame, side: String): DataFrame = {
-      // bin = number of edges strictly below the value — map-side math
-      // against the broadcast 1-row edge frame
-      val b = (0 until nBins - 1).map(i =>
-        when(col(valueCol) > col(s"__e$i"), 1).otherwise(0))
-        .reduce[Column](_ + _)
-      df.select(col(valueCol)).crossJoin(broadcast(edgeFrame))
-        .select(b.as("bin"))
-        .groupBy(col("bin")).agg(count(lit(1)).as(s"n_$side"))
-    }
-    val r = binned(refNn, "ref")
-    val c = binned(curNn, "cur")
+    // an empty/all-NULL reference has no edges (percentile()'s NULL
+    // edges): every row bins to 0, never a crash
+    val es = Quantiles.exactQuantilesOpt(refNn, valueCol, qs)
+      .getOrElse(Array.empty[Double])
+    val r = binCounts(refNn, valueCol, es).withColumnRenamed("n", "n_ref")
+    val c = binCounts(curNn, valueCol, es).withColumnRenamed("n", "n_cur")
     val nr = refNn.count().toDouble
     val nc = curNn.count().toDouble
     r.join(c, Seq("bin"), "full")
@@ -83,6 +56,18 @@ object Drift {
         (col("p_cur") - col("p_ref")) * log(col("p_cur") / col("p_ref")))
   }
 
+  /** `(bin, n)`: the PSI bin rule — bin = number of literal `edges`
+    * strictly below the value (0 with no edges), map-side — then one
+    * nBins-row count. NULL values are dropped. Shared by [[psiBins]]
+    * and the streaming maintainer, so both bin alike. */
+  private[graft] def binCounts(df: DataFrame, valueCol: String,
+      edges: Seq[Double]): DataFrame = {
+    val b = edges.map(e => when(col(valueCol) > e, 1).otherwise(0))
+      .reduceOption[Column](_ + _).getOrElse(lit(0))
+    df.filter(col(valueCol).isNotNull)
+      .select(b.as("bin")).groupBy(col("bin")).agg(count(lit(1)).as("n"))
+  }
+
   /** bin share with an empty-side guard: an EMPTY reference or current
     * window has no distribution to compare (and `n / 0` is an ANSI-mode
     * runtime error) — its shares and psi_terms go NULL instead of
@@ -93,9 +78,8 @@ object Drift {
   /** the scalar PSI; NaN when either window is empty (psiBins degrades
     * its terms to NULL then — summing NULLs must not crash the scalar) */
   def psi(ref: DataFrame, cur: DataFrame, valueCol: String,
-      nBins: Int = 10, eps: Double = 1e-4,
-      approxEdges: Boolean = false, accuracy: Int = 10000): Double = {
-    val r = psiBins(ref, cur, valueCol, nBins, eps, approxEdges, accuracy)
+      nBins: Int = 10, eps: Double = 1e-4): Double = {
+    val r = psiBins(ref, cur, valueCol, nBins, eps)
       .agg(sum(col("psi_term"))).head()
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
@@ -539,24 +523,21 @@ object Drift {
     * Rows never join rows. */
   def psiTimeline(df: DataFrame, bucketCol: String, valueCol: String,
       nBins: Int = 10, eps: Double = 1e-4,
-      maxBuckets: Long = 100000,
-      approxEdges: Boolean = false, accuracy: Int = 10000): DataFrame = {
+      maxBuckets: Long = 100000): DataFrame = {
     require(nBins >= 2, "need at least 2 bins")
     val nn = df.filter(col(valueCol).isNotNull)
       .select(col(bucketCol).as("bucket"), col(valueCol).cast("double").as("__v"))
     val qs = (1 until nBins).map(_.toDouble / nBins)
     // per-bucket edges: ONE grouped aggregate. Exact per-bucket state
     // parallelizes across buckets (each value→count map is bounded by
-    // ITS bucket's distinct values); `approxEdges` swaps in the
-    // fixed-width sketch — the posture when a single hot bucket's value
-    // set outgrows a reducer. [[Quantiles.exactQuantilesByKey]] is the
-    // bit-identical funnel-free third option for exact-at-any-skew.
+    // ITS bucket's distinct values) and stays lazy, with no per-bucket
+    // driver memory. If a single hot bucket's value set outgrows a
+    // reducer, [[Quantiles.exactQuantilesByKey]] is the bit-identical
+    // funnel-free swap.
     val qArr = qs.mkString("array(", ", ", ")")
-    val edgeAgg =
-      if (approxEdges) expr(s"approx_percentile(__v, $qArr, $accuracy)")
-      else expr(s"percentile(__v, $qArr)")
     val edges = nn.groupBy(col("bucket"))
-      .agg(edgeAgg.as("edges"), count(lit(1)).as("n"))
+      .agg(expr(s"percentile(__v, $qArr)").as("edges"),
+        count(lit(1)).as("n"))
     val paired = BoundedWindow.over(edges, maxBuckets) { (d, w) =>
       val byBucket = w.orderBy(col("bucket"))
       d.withColumn("prev_bucket", lag(col("bucket"), 1).over(byBucket))
@@ -652,22 +633,18 @@ object Drift {
     * pay one (group, bin) hash agg each. Rows never join rows — the
     * [[psiBins]] posture with a group key. */
   def psiBinsByGroup(ref: DataFrame, cur: DataFrame, valueCol: String,
-      groupCol: String, nBins: Int = 10, eps: Double = 1e-4,
-      approxEdges: Boolean = false, accuracy: Int = 10000): DataFrame = {
+      groupCol: String, nBins: Int = 10, eps: Double = 1e-4): DataFrame = {
     require(nBins >= 2, "need at least 2 bins")
     def nn(df: DataFrame) = df.filter(col(valueCol).isNotNull)
       .select(col(groupCol).as("group"), col(valueCol).cast("double").as("__v"))
     val qs = (1 until nBins).map(_.toDouble / nBins)
     // per-group reference edges: ONE grouped aggregate (the
     // [[psiTimeline]] posture — exact maps parallelize across groups;
-    // `approxEdges` is the hot-group swap, exactQuantilesByKey the
-    // exact-at-any-skew one)
+    // exactQuantilesByKey is the exact-at-any-skew swap)
     val qArr = qs.mkString("array(", ", ", ")")
-    val edgeAgg =
-      if (approxEdges) expr(s"approx_percentile(__v, $qArr, $accuracy)")
-      else expr(s"percentile(__v, $qArr)")
     val edges = nn(ref).groupBy(col("group"))
-      .agg(edgeAgg.as("__edges"), count(lit(1)).as("n_ref"))
+      .agg(expr(s"percentile(__v, $qArr)").as("__edges"),
+        count(lit(1)).as("n_ref"))
     val curTot = nn(cur).groupBy(col("group")).agg(count(lit(1)).as("n_cur"))
     def binAgg(df: DataFrame, side: String): DataFrame =
       df.join(broadcast(edges.select(col("group"), col("__edges"))), "group")

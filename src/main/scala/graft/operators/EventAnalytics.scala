@@ -502,20 +502,19 @@ object EventAnalytics {
     * Gaps are near-unique doubles, so exact `percentile()`'s per-group
     * value→count map grows with the group's ROW count — a hot event
     * type funnels its whole history through one reducer buffer. The
-    * exact default therefore sketches then refines
+    * quantiles therefore sketch then refine
     * ([[Quantiles.exactQuantilesByKey]], bit-identical, every stage
     * parallel; two grouped passes over the gaps, nothing data-sized
-    * funnels) and assembles the type-count-bounded result locally.
-    * `approxBounds` keeps the lazy one-window plan with a fixed-width
-    * sketch per group — same convention as `Robust.winsorize`.
+    * funnels) and the type-count-bounded result assembles locally.
     *
-    * The exact path is driver-bounded by the TYPE cardinality (one
+    * That exact path is driver-bounded by the TYPE cardinality (one
     * collected row per type), so it is guarded: past `maxExactTypes`
-    * distinct types the call falls back to the approx plan instead of
-    * funneling an unbounded result through the driver. */
+    * distinct types the call falls back to a lazy one-window plan with
+    * a fixed-width `approx_percentile` sketch per type (rank error ≤
+    * 1/10000) instead of funneling an unbounded result through the
+    * driver. */
   def interArrival(events: DataFrame, userCol: String, tsNsCol: String,
-      typeCol: String, approxBounds: Boolean = false,
-      accuracy: Int = 10000, maxExactTypes: Int = 100000): DataFrame = {
+      typeCol: String, maxExactTypes: Int = 100000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(userCol), col(typeCol))
       .orderBy(col(tsNsCol))
@@ -524,14 +523,14 @@ object EventAnalytics {
         (col(tsNsCol) - lag(col(tsNsCol), 1).over(w)) / 1e9)
       .filter(col("__gap").isNotNull)
     // cheap HLL probe: is the exact path's driver-side result bounded?
-    val exactOk = !approxBounds && gapped
+    val exactOk = gapped
       .agg(approx_count_distinct(col(typeCol)).as("c"))
       .head.getLong(0) <= maxExactTypes
-    if (approxBounds || !exactOk) {
+    if (!exactOk) {
       gapped
         .groupBy(col(typeCol))
         .agg(count(lit(1)).as("n_gaps"),
-          expr(s"approx_percentile(__gap, array(0.5, 0.9), $accuracy)").as("__q"))
+          expr("approx_percentile(__gap, array(0.5, 0.9), 10000)").as("__q"))
         .select(col(typeCol), col("n_gaps"),
           round(element_at(col("__q"), 1), 4).as("p50_gap_s"),
           round(element_at(col("__q"), 2), 4).as("p90_gap_s"))

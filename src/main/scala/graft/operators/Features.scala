@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * the full corpus right before training, so their plan shapes matter
   * as much as any query's.
   *
-  * Both operators follow the broadcast-bounds pattern ([[Robust]],
-  * [[Drift]]): global statistics reduce to a tiny frame (k−1 edges, a
-  * category table, a 1-row prior), ride back as broadcasts, and the
+  * Global statistics reduce to a tiny artifact — k−1 quantile edges
+  * bound as literals (as in [[Robust]] and [[Drift]]), or a category
+  * table with a 1-row prior riding back as a broadcast — and the
   * per-row transform is map-side math. Rows never shuffle.
   */
 object Features {
@@ -71,94 +71,58 @@ object Features {
 
   /** Equal-frequency discretization: bin(x) = number of quantile edges
     * at or below x, for k bins (edges at 1/k … (k−1)/k). Returns df +
-    * `bin` (0-based; NULL values get NULL bins). Exact edges (default)
-    * come from [[graft.operators.Quantiles.exactQuantiles]] — funnel-
-    * free sketch-then-refine, bit-identical to `percentile()` — and bind
-    * as literals; `approxBounds` swaps in the fixed-state sketch
-    * (lazy), exactly as [[Robust.winsorize]]. */
-  def discretize(df: DataFrame, valueCol: String, bins: Int,
-      approxBounds: Boolean = false, accuracy: Int = 10000): DataFrame = {
+    * `bin` (0-based; NULL values get NULL bins). The edges come from
+    * [[graft.operators.Quantiles.exactQuantiles]] — funnel-free
+    * sketch-then-refine, bit-identical to `percentile()` — and bind as
+    * literals. */
+  def discretize(df: DataFrame, valueCol: String, bins: Int): DataFrame = {
     require(bins >= 2, "need at least 2 bins")
     val qs = (1 until bins).map(_.toDouble / bins)
-    if (approxBounds) {
-      val qArr = qs.mkString("array(", ", ", ")")
-      val edges = df.filter(col(valueCol).isNotNull)
-        .agg(expr(s"approx_percentile($valueCol, $qArr, $accuracy)").as("__edges"))
-      df.crossJoin(broadcast(edges))
-        .withColumn("bin",
-          when(col(valueCol).isNotNull,
-            aggregate(col("__edges"), lit(0),
-              (acc, e) => acc + when(col(valueCol) >= e, 1).otherwise(0))))
-        .drop("__edges")
-    } else {
-      // None (empty/all-NULL input) mirrors percentile()'s NULL edges:
-      // every bin is NULL, never a crash
-      graft.operators.Quantiles.exactQuantilesOpt(df, valueCol, qs) match {
-        case Some(es) =>
-          df.withColumn("bin",
-            when(col(valueCol).isNotNull,
-              es.map(e => when(col(valueCol) >= e, 1).otherwise(0))
-                .reduce[Column](_ + _)))
-        case None => df.withColumn("bin", lit(null).cast("int"))
-      }
-    }
+    df.withColumn("bin", edgesAtOrBelow(col(valueCol),
+      graft.operators.Quantiles.exactQuantilesOpt(df, valueCol, qs)))
   }
+
+  /** the [[discretize]] bin rule: the number of literal `edges` at or
+    * below `v`, NULL for a NULL value. No edges (empty/all-NULL input)
+    * mirrors percentile()'s NULL edges: every bin is NULL, never a
+    * crash. */
+  private def edgesAtOrBelow(v: Column, edges: Option[Array[Double]]): Column =
+    edges match {
+      case Some(es) => when(v.isNotNull,
+        es.map(e => when(v >= e, 1).otherwise(0)).reduce[Column](_ + _))
+      case None => lit(null).cast("int")
+    }
 
   /** Percentile-normalized quality blend: each signal is mapped to its
     * equal-frequency decile bin (the [[discretize]] edge rule) and the
     * bins combine as a weighted mean scaled to [0,1] — the standard
     * way to fuse incommensurable quality signals (length, token count,
     * ratios) into ONE ranking score without hand-tuned scale factors.
-    * Exact edges (default) come from ONE keyed exact-quantile call over
-    * all signals ([[graft.operators.Quantiles.exactQuantilesByKey]] —
+    * The edges come from ONE keyed exact-quantile call over all
+    * signals ([[graft.operators.Quantiles.exactQuantilesByKey]] —
     * funnel-free, bit-identical to `percentile()`) and bind as
-    * literals; `approxBounds` swaps in per-signal fixed-width sketches
-    * in a single 1-row broadcast aggregate. The blend itself is
-    * map-side array math either way. Returns df + `bin_<signal>` per
-    * signal + `q_blend`. NULL in any signal ⇒ NULL blend (an
-    * unscorable row, not a zero-quality row). */
+    * literals; the blend itself is map-side math. Returns df +
+    * `bin_<signal>` per signal + `q_blend`. NULL in any signal ⇒ NULL
+    * blend (an unscorable row, not a zero-quality row). */
   def percentileBlend(df: DataFrame, signalCols: Seq[String],
-      weights: Seq[Double], bins: Int = 10,
-      approxBounds: Boolean = false, accuracy: Int = 10000): DataFrame = {
+      weights: Seq[Double], bins: Int = 10): DataFrame = {
     require(signalCols.nonEmpty, "need at least one signal")
     require(signalCols.length == weights.length, "one weight per signal")
     require(weights.forall(_ >= 0) && weights.sum > 0, "weights must be non-negative, sum > 0")
     val qs = (1 until bins).map(_.toDouble / bins)
-    val binned =
-      if (approxBounds) {
-        val qArr = qs.mkString("array(", ", ", ")")
-        val edgeAggs = signalCols.zipWithIndex.map { case (c, i) =>
-          expr(s"approx_percentile($c, $qArr, $accuracy)").as(s"__e_$i")
-        }
-        val edges = df.agg(edgeAggs.head, edgeAggs.tail: _*)
-        signalCols.zipWithIndex.foldLeft(
-          df.crossJoin(broadcast(edges))) { case (acc, (c, i)) =>
-          acc.withColumn(s"bin_$c",
-            when(col(c).isNotNull,
-              aggregate(col(s"__e_$i"), lit(0),
-                (n, e) => n + when(col(c) >= e, 1).otherwise(0))))
-        }.drop(signalCols.indices.map(i => s"__e_$i"): _*)
-      } else {
-        // exact edges for EVERY signal in ONE corpus pass: explode to
-        // (signal, value) rows and sketch then refine per key — funnel-free
-        // ([[graft.operators.Quantiles.exactQuantilesByKey]]), unlike
-        // percentile()'s per-signal value→count map merges. A signal
-        // with no non-NULL values has no edges (percentile's NULL) and
-        // bins NULL.
-        val kv = df.select(explode(array(signalCols.map(c =>
-            struct(lit(c).as("__k"), col(c).cast("double").as("__v"))): _*)).as("__s"))
-          .select(col("__s.__k").as("__k"), col("__s.__v").as("__v"))
-        val edgesByKey =
-          graft.operators.Quantiles.exactQuantilesByKey(kv, "__k", "__v", qs)
-        signalCols.foldLeft(df) { case (acc, c) =>
-          acc.withColumn(s"bin_$c", edgesByKey.get(c) match {
-            case Some(es) => when(col(c).isNotNull,
-              es.map(e => when(col(c) >= e, 1).otherwise(0))
-                .reduce[Column](_ + _))
-            case None => lit(null).cast("int")
-          })
-        }
-      }
+    // exact edges for EVERY signal in ONE corpus pass: explode to
+    // (signal, value) rows and sketch then refine per key — funnel-free
+    // ([[graft.operators.Quantiles.exactQuantilesByKey]]), unlike
+    // percentile()'s per-signal value→count map merges. A signal with
+    // no non-NULL values has no edges (percentile's NULL) and bins NULL.
+    val kv = df.select(explode(array(signalCols.map(c =>
+        struct(lit(c).as("__k"), col(c).cast("double").as("__v"))): _*)).as("__s"))
+      .select(col("__s.__k").as("__k"), col("__s.__v").as("__v"))
+    val edgesByKey =
+      graft.operators.Quantiles.exactQuantilesByKey(kv, "__k", "__v", qs)
+    val binned = signalCols.foldLeft(df) { case (acc, c) =>
+      acc.withColumn(s"bin_$c", edgesAtOrBelow(col(c), edgesByKey.get(c)))
+    }
     val blend = signalCols.zipWithIndex
       .map { case (c, i) => col(s"bin_$c") * weights(i) }
       .reduce(_ + _) / (weights.sum * (bins - 1))

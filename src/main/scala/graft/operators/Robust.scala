@@ -5,54 +5,35 @@ import org.apache.spark.sql.functions._
 
 /** Outlier-robust numeric cleaning (winsorization): clamp a value
   * column to its [loQ, hiQ] quantile bounds. The bounds bind as
-  * literals (exact) or ride as a broadcast 1-row frame (approx) and
-  * the clamp is map-side math.
+  * literals and the clamp is map-side math.
   *
-  * Two bound postures:
-  *   - exact (default): [[Quantiles.exactQuantiles]] — exact AND
-  *     funnel-free (sketch-then-refine; bit-identical to
-  *     `percentile()` by AuditSpec, so the SQL oracle holds). The
-  *     bounds are eager driver-bound literals, which is what the clamp
-  *     broadcast wanted anyway. Spark's own exact `percentile` is NOT
-  *     used here: its aggregation state is a value→count map whose
-  *     final merge funnels through one reducer proportional to global
-  *     distinct cardinality — a 100 TB killer on continuous columns;
-  *   - `approxBounds = true`: `approx_percentile` (Greenwald-Khanna),
-  *     fixed-size state with rank error ≤ 1/accuracy — the sketch
-  *     posture, fully lazy (rides inside one plan).
+  * The bounds come from [[Quantiles.exactQuantiles]] — exact AND
+  * funnel-free (sketch-then-refine; bit-identical to `percentile()` by
+  * AuditSpec, so the SQL oracle holds). They are eager driver-bound
+  * literals, which is what the clamp broadcast wanted anyway. Spark's
+  * own exact `percentile` is NOT used here: its aggregation state is a
+  * value→count map whose final merge funnels through one reducer
+  * proportional to global distinct cardinality — a 100 TB killer on
+  * continuous columns.
   */
 object Robust {
 
   /** `df` + `lo`, `hi` (the quantile bounds) + `__w` (the clamped
     * value). Callers aggregate or project from there. */
   def winsorize(df: DataFrame, valueCol: String,
-      loQ: Double = 0.01, hiQ: Double = 0.99,
-      approxBounds: Boolean = false, accuracy: Int = 10000): DataFrame = {
+      loQ: Double = 0.01, hiQ: Double = 0.99): DataFrame = {
     require(0 <= loQ && loQ < hiQ && hiQ <= 1, s"bad quantiles [$loQ, $hiQ]")
-    if (approxBounds) {
-      // ONE sketch aggregate with an array of quantiles (separate calls
-      // would each carry their own state), riding as a 1-row broadcast
-      val bounds = df
-        .agg(expr(s"approx_percentile($valueCol, array($loQ, $hiQ), $accuracy)")
-          .as("__b"))
-        .select(element_at(col("__b"), 1).cast("double").as("lo"),
-          element_at(col("__b"), 2).cast("double").as("hi"))
-      df.crossJoin(broadcast(bounds))
-        .withColumn("__w",
-          least(greatest(col(valueCol).cast("double"), col("lo")), col("hi")))
-    } else {
-      // None (empty / all-NULL input) mirrors percentile()'s NULL
-      // bounds: rows keep flowing with NULL lo/hi/__w, never a crash
-      Quantiles.exactQuantilesOpt(df, valueCol, Seq(loQ, hiQ)) match {
-        case Some(Array(lo, hi)) =>
-          df.withColumn("lo", lit(lo)).withColumn("hi", lit(hi))
-            .withColumn("__w",
-              least(greatest(col(valueCol).cast("double"), lit(lo)), lit(hi)))
-        case _ =>
-          df.withColumn("lo", lit(null).cast("double"))
-            .withColumn("hi", lit(null).cast("double"))
-            .withColumn("__w", lit(null).cast("double"))
-      }
+    // None (empty / all-NULL input) mirrors percentile()'s NULL
+    // bounds: rows keep flowing with NULL lo/hi/__w, never a crash
+    Quantiles.exactQuantilesOpt(df, valueCol, Seq(loQ, hiQ)) match {
+      case Some(Array(lo, hi)) =>
+        df.withColumn("lo", lit(lo)).withColumn("hi", lit(hi))
+          .withColumn("__w",
+            least(greatest(col(valueCol).cast("double"), lit(lo)), lit(hi)))
+      case _ =>
+        df.withColumn("lo", lit(null).cast("double"))
+          .withColumn("hi", lit(null).cast("double"))
+          .withColumn("__w", lit(null).cast("double"))
     }
   }
 
@@ -60,21 +41,17 @@ object Robust {
     * bounds (per-domain clipping — a global bound would let one
     * heavy-tailed domain set everyone's limits). ONE grouped
     * array-percentile aggregate (group-count rows) joins back by
-    * broadcast, the clamp stays map-side; `approxBounds` as in
-    * [[winsorize]]. Per-group exact state parallelizes across groups
-    * (each map is bounded by ITS group's distinct values, merged on
-    * that group's reducer); if one group's value set itself outgrows a
-    * reducer, [[Quantiles.exactQuantilesByKey]] is the bit-identical
+    * broadcast, the clamp stays map-side. Per-group exact state
+    * parallelizes across groups (each map is bounded by ITS group's
+    * distinct values, merged on that group's reducer); if one group's
+    * value set itself outgrows a reducer,
+    * [[Quantiles.exactQuantilesByKey]] is the bit-identical
     * funnel-free swap. Adds `lo`, `hi`, `__w`. */
   def winsorizeByGroup(df: DataFrame, groupCol: String, valueCol: String,
-      loQ: Double = 0.01, hiQ: Double = 0.99,
-      approxBounds: Boolean = false, accuracy: Int = 10000): DataFrame = {
+      loQ: Double = 0.01, hiQ: Double = 0.99): DataFrame = {
     require(0 <= loQ && loQ < hiQ && hiQ <= 1, s"bad quantiles [$loQ, $hiQ]")
-    val both =
-      if (approxBounds)
-        expr(s"approx_percentile($valueCol, array($loQ, $hiQ), $accuracy)")
-      else expr(s"percentile($valueCol, array($loQ, $hiQ))")
-    val bounds = df.groupBy(col(groupCol)).agg(both.as("__b"))
+    val bounds = df.groupBy(col(groupCol))
+      .agg(expr(s"percentile($valueCol, array($loQ, $hiQ))").as("__b"))
       .select(col(groupCol),
         element_at(col("__b"), 1).cast("double").as("lo"),
         element_at(col("__b"), 2).cast("double").as("hi"))
@@ -147,42 +124,29 @@ object Robust {
     * (0.6745 · (x − median) / MAD) that a single extreme value cannot
     * corrupt the way it corrupts mean/stddev. Two median passes
     * (median, then median of |x − median|) — funnel-free exact
-    * [[Quantiles.exactQuantiles]] literals by default, the fixed-state
-    * sketch under `approxBounds` exactly as [[winsorize]]. A zero/NULL
-    * MAD (constant-majority column) scores NULL — never a division
-    * blowup. Returns df + `med`, `mad`, `robust_z`. */
-  def madScore(df: DataFrame, valueCol: String,
-      approxBounds: Boolean = false, accuracy: Int = 10000): DataFrame =
-    if (approxBounds) {
-      def med(c: String) = expr(s"approx_percentile($c, 0.5, $accuracy)")
-      val m = df.agg(med(valueCol).cast("double").as("med"))
-      val withMed = df.crossJoin(broadcast(m))
-      val a = withMed.select(abs(col(valueCol).cast("double") - col("med")).as("__d"))
-        .agg(med("__d").cast("double").as("mad"))
-      withMed.crossJoin(broadcast(a))
-        .withColumn("robust_z",
-          when(col("mad") > 0,
-            lit(0.6745) * (col(valueCol).cast("double") - col("med")) / col("mad")))
-    } else {
-      // two exact passes, each re-reading the source: the median, then
-      // the median of |x − m|. None (empty / all-NULL input) mirrors
-      // percentile()'s NULL medians.
-      val stats = Quantiles.exactQuantilesOpt(df, valueCol, Seq(0.5)).map { m0 =>
-        val m = m0.head
-        (m, Quantiles.exactQuantiles(
-          df.select(abs(col(valueCol).cast("double") - m).as("__d")),
-          "__d", Seq(0.5)).head)
-      }
-      stats match {
-        case Some((med, mad)) =>
-          df.withColumn("med", lit(med)).withColumn("mad", lit(mad))
-            .withColumn("robust_z",
-              when(lit(mad) > 0,
-                lit(0.6745) * (col(valueCol).cast("double") - med) / mad))
-        case None =>
-          df.withColumn("med", lit(null).cast("double"))
-            .withColumn("mad", lit(null).cast("double"))
-            .withColumn("robust_z", lit(null).cast("double"))
-      }
+    * [[Quantiles.exactQuantiles]] literals, as in [[winsorize]]. A
+    * zero/NULL MAD (constant-majority column) scores NULL — never a
+    * division blowup. Returns df + `med`, `mad`, `robust_z`. */
+  def madScore(df: DataFrame, valueCol: String): DataFrame = {
+    // two exact passes, each re-reading the source: the median, then
+    // the median of |x − m|. None (empty / all-NULL input) mirrors
+    // percentile()'s NULL medians.
+    val stats = Quantiles.exactQuantilesOpt(df, valueCol, Seq(0.5)).map { m0 =>
+      val m = m0.head
+      (m, Quantiles.exactQuantiles(
+        df.select(abs(col(valueCol).cast("double") - m).as("__d")),
+        "__d", Seq(0.5)).head)
     }
+    stats match {
+      case Some((med, mad)) =>
+        df.withColumn("med", lit(med)).withColumn("mad", lit(mad))
+          .withColumn("robust_z",
+            when(lit(mad) > 0,
+              lit(0.6745) * (col(valueCol).cast("double") - med) / mad))
+      case None =>
+        df.withColumn("med", lit(null).cast("double"))
+          .withColumn("mad", lit(null).cast("double"))
+          .withColumn("robust_z", lit(null).cast("double"))
+    }
+  }
 }

@@ -2371,8 +2371,8 @@ object DocumentQueries extends QueryModule {
       doc = "per-domain token budget: targets, rates, epoch factors under uniform weights"),
 
     // ---- percentile-normalized quality blend: decile-bin each signal
-    // against ONE broadcast edge row, weighted-mean to a [0,1] score —
-    // scale-free fusion of incommensurable quality signals
+    // against its exact edges bound as literals, weighted-mean to a
+    // [0,1] score — scale-free fusion of incommensurable quality signals
     "q_quality_blend" -> Q(
       (s, dir) => graft.operators.Features.percentileBlend(
           table(s, dir, "documents")

@@ -565,8 +565,7 @@ object TensorQueries extends QueryModule {
     // feature cleaning — exact [p01, p99] bounds come from funnel-free
     // sketch-then-refine (operators.Quantiles, bit-identical to DuckDB
     // quantile_cont so fully oracle-checked) and bind as literals;
-    // clamping is map-side math. operators.Robust also offers
-    // approxBounds (fixed-size sketch state) as the lazy posture.
+    // clamping is map-side math.
     "q_winsorize" -> Q(
       (s, dir) => {
         val li = table(s, dir, "lineitem")
@@ -648,8 +647,6 @@ object TensorQueries extends QueryModule {
              |FROM c GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin.replace('\n', ' ')),
       doc = "median-absolute-deviation robust z outlier profile per return flag"),
 
-    // ---- equal-frequency discretization: decile binning against ONE
-    // broadcast array-percentile edge frame, map-side bin math
     // ---- cross-source quantile normalization (batch-effect removal):
     // every language's n_chars distribution maps onto English's via
     // Q_ref(F_group(x)) with linear quantile interpolation — after the
@@ -678,6 +675,8 @@ object TensorQueries extends QueryModule {
              |ORDER BY doc_id""".stripMargin.replace('\n', ' ')),
       doc = "cross-source quantile normalization of n_chars onto the English distribution"),
 
+    // ---- equal-frequency discretization: decile binning against
+    // exact edges bound as literals, map-side bin math
     "q_discretize" -> Q(
       (s, dir) => {
         val li = table(s, dir, "lineitem")

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.operators.Drift
 
 /** Streaming PSI drift maintenance: the reference side of
   * [[graft.operators.Drift.psiBins]] freezes ONCE (its quantile edges
@@ -18,9 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object StreamingDrift {
 
   /** Compute and persist the frozen reference: k−1 quantile edges (the
-    * same single array-percentile aggregate as the batch operator) and
-    * the reference bin counts. Returns the edges — a bounded (k−1)-
-    * double artifact, legitimately driver-held like ANN centroids. */
+    * same exact quantile call as the batch operator) and the reference
+    * bin counts. Returns the edges — a bounded (k−1)-double artifact,
+    * legitimately driver-held like ANN centroids. */
   def freezeReference(ref: DataFrame, valueCol: String, dir: String,
       nBins: Int = 10): Array[Double] = {
     require(nBins >= 2, "need at least 2 bins")
@@ -30,7 +31,7 @@ object StreamingDrift {
     // value-map single-reducer state — the repo's exact-default rule)
     val edges = graft.operators.Quantiles.exactQuantiles(
       refNn, valueCol, (1 until nBins).map(_.toDouble / nBins))
-    binCounts(refNn, valueCol, edges)
+    Drift.binCounts(refNn, valueCol, edges)
       .write.mode("overwrite").parquet(s"$dir/ref_bins")
     import spark.implicits._
     edges.toSeq.zipWithIndex.map { case (e, i) => (i, e) }
@@ -44,25 +45,17 @@ object StreamingDrift {
     spark.read.parquet(s"$dir/edges").orderBy(col("idx"))
       .collect().map(_.getDouble(1))
 
-  /** same bin rule as the batch operator: bin = # edges strictly below */
-  private def binCounts(df: DataFrame, valueCol: String,
-      edges: Array[Double]): DataFrame = {
-    val b = edges.map(e => when(col(valueCol) > lit(e), 1).otherwise(0))
-      .reduce[org.apache.spark.sql.Column](_ + _)
-    df.filter(col(valueCol).isNotNull)
-      .select(b.as("bin")).groupBy(col("bin")).agg(count(lit(1)).as("n"))
-  }
-
-  /** per micro-batch: bin the arrivals against the frozen edges and
-    * write the k-row count segment, batch-id keyed (bin counts are
-    * algebraic — an at-least-once replay must rewrite, never re-add) */
+  /** per micro-batch: bin the arrivals against the frozen edges (the
+    * batch operator's own [[Drift.binCounts]]) and write the k-row
+    * count segment, batch-id keyed (bin counts are algebraic — an
+    * at-least-once replay must rewrite, never re-add) */
   def maintainPsi(stream: DataFrame, valueCol: String,
       edges: Array[Double], dir: String, checkpoint: String): StreamingQuery =
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Lsm.absorbSegment(binCounts(batch, valueCol, edges),
+        Lsm.absorbSegment(Drift.binCounts(batch, valueCol, edges),
           s"$dir/cur_bins", Lsm.segmentKey(checkpoint, batchId))
         ()
       }

@@ -370,35 +370,6 @@ class EventAnalyticsSpec extends AnyFunSuite {
     assert(bins.map(_.getLong(2)).sum === 2000L, "NULLs leaked into bin counts")
   }
 
-  test("approx-bounds posture: sketch edges track exact within rank error, same verdicts") {
-    import spark.implicits._
-    import graft.operators.{Drift, Robust}
-    val rnd = new scala.util.Random(23)
-    val ref = (1 to 4000).map(_ => rnd.nextGaussian()).toDF("value")
-    val cur = (1 to 4000).map(_ => rnd.nextGaussian() + 1.5).toDF("value")
-    // PSI: approx edges give the same drift verdict and a close score
-    val exact = Drift.psi(ref, cur, "value")
-    val approx = Drift.psi(ref, cur, "value", approxEdges = true)
-    assert(approx > 0.25, s"approx PSI must still alarm: $approx")
-    assert(math.abs(approx - exact) < 0.15 * exact,
-      s"approx PSI drifted from exact: $exact vs $approx")
-    // winsorize: approx bounds land within the quantile neighborhood of
-    // exact (rank error 1/accuracy over n=4000 -> a few order stats)
-    val df = ref
-    def bounds(a: Boolean) = Robust.winsorize(df, "value", approxBounds = a)
-      .select(col("lo"), col("hi")).head()
-    val (el, eh) = { val r = bounds(false); (r.getDouble(0), r.getDouble(1)) }
-    val (al, ah) = { val r = bounds(true); (r.getDouble(0), r.getDouble(1)) }
-    val sorted = df.collect().map(_.getDouble(0)).sorted
-    def rank(v: Double) = sorted.count(_ <= v)
-    assert(math.abs(rank(al) - rank(el)) <= 8, s"lo rank gap: $el vs $al")
-    assert(math.abs(rank(ah) - rank(eh)) <= 8, s"hi rank gap: $eh vs $ah")
-    // clamped means agree closely
-    def wMean(a: Boolean) = Robust.winsorize(df, "value", approxBounds = a)
-      .agg(avg(col("__w"))).head().getDouble(0)
-    assert(math.abs(wMean(true) - wMean(false)) < 1e-2)
-  }
-
   test("JS divergence: 0 for identical mixes, ln 2 for disjoint, symmetric") {
     import spark.implicits._
     import graft.operators.Drift
@@ -597,29 +568,22 @@ class EventAnalyticsSpec extends AnyFunSuite {
     assert(w0 === wa)
   }
 
-  test("approx posture: interArrival and percentileBlend track exact within rank error") {
+  test("interArrival sketch fallback past maxExactTypes tracks exact within rank error") {
     import spark.implicits._
     // gaps: 1..2000 seconds, one user per series to make gaps exact
     val ev = (0 until 2000).flatMap { i =>
       Seq((i.toLong, 0L, "a", 100L), (i.toLong, (1L + i) * 1000000000L, "a", 101L))
     }.toDF("user_id", "ts_ns", "event_type", "event_id")
       .select(col("user_id"), col("ts_ns"), col("event_type"))
-    def gaps(a: Boolean) = EventAnalytics.interArrival(
-        ev, "user_id", "ts_ns", "event_type", approxBounds = a)
+    def gaps(maxExactTypes: Int) = EventAnalytics.interArrival(
+        ev, "user_id", "ts_ns", "event_type", maxExactTypes = maxExactTypes)
       .head()
-    val (e50, e90) = { val r = gaps(false); (r.getDouble(2), r.getDouble(3)) }
-    val (a50, a90) = { val r = gaps(true); (r.getDouble(2), r.getDouble(3)) }
-    // accuracy=10000 over n=2000 -> approx lands within a few order stats
+    val (e50, e90) = { val r = gaps(100000); (r.getDouble(2), r.getDouble(3)) }
+    // one type > 0 allowed: the driver guard takes the sketch fallback
+    val (a50, a90) = { val r = gaps(0); (r.getDouble(2), r.getDouble(3)) }
+    // accuracy=10000 over n=2000 -> the sketch lands within a few order stats
     assert(math.abs(a50 - e50) <= 3.0, s"p50: $e50 vs $a50")
     assert(math.abs(a90 - e90) <= 3.0, s"p90: $e90 vs $a90")
-    // blend: approx bins differ from exact by at most one decile per row
-    val df = (1 to 1000).map(i => (i.toLong, i.toDouble)).toDF("id", "s")
-    val ex = graft.operators.Features.percentileBlend(df, Seq("s"), Seq(1.0))
-      .select(col("id"), col("bin_s")).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val ap = graft.operators.Features.percentileBlend(df, Seq("s"), Seq(1.0),
-        approxBounds = true)
-      .select(col("id"), col("bin_s")).collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(ex.keys.forall(k => math.abs(ex(k) - ap(k)) <= 1))
   }
 
   test("categoricalMi: independence gives 0 bits; identity gives H(X)") {

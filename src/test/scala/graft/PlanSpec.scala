@@ -387,16 +387,23 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("drift PSI: reference edges bind as literals — no nested-loop or cartesian join") {
+    val p = planOf("q_drift_psi")
+    assert(!p.contains("BroadcastNestedLoopJoin"), s"edges must bind as literals:\n$p")
+    assert(!p.contains("CartesianProduct"), s"edges must bind as literals:\n$p")
+  }
+
   test("inter-arrival gaps: lazy sketch posture is one fine-key window + one agg; exact default funnel-free") {
     // the exact default sketches then refines per type and assembles a
     // type-count-bounded local result — no plan to window-audit, but it
     // must never carry a percentile aggregate either
     val exact = planOf("q_event_gaps")
     assert(!exact.toLowerCase.contains("percentile"), exact)
-    // the approx (lazy, in-plan) posture keeps the audited shape
+    // the sketch fallback past maxExactTypes (lazy, in-plan) keeps the
+    // audited shape
     val p = graft.operators.EventAnalytics.interArrival(
         graft.sources.Tables(spark, dir, "events"),
-        "user_id", "ts_ns", "event_type", approxBounds = true)
+        "user_id", "ts_ns", "event_type", maxExactTypes = 0)
       .queryExecution.executedPlan.toString
     assert(p.contains("Window"), p)
     assert(!p.contains("Join"), p)

@@ -24,8 +24,18 @@ import graft.operators.Quantiles
   *    longer keeps the first slice under its cap, every rank is still
   *    read in at most one refine round: ≤ 4 jobs, whatever the ranks.
   *
-  * Ignored by default; opt in with
-  *   GRAFT_QUANTILE_SCALE=1 sbt "testOnly graft.QuantileScaleSpec"
+  * Ignored by default. Opt in outside sbt's forked test groups: `sbt
+  * testOnly` gives this suite the tier-1 fork heap, and the
+  * `percentile()` reference then dies with an OOM on a 4-core, 16 GB
+  * host. Run the ScalaTest runner on the exported test classpath with
+  * a 6 GB heap and the `jdk17AddOpens` flags of build.sbt:
+  *   CP=$(sbt --batch -Dsbt.log.noformat=true "export Test/fullClasspath" | tail -n 1)
+  *   OPENS=$(for p in lang lang.invoke lang.reflect io net nio util util.concurrent \
+  *       util.concurrent.atomic; do echo "--add-opens=java.base/java.$p=ALL-UNNAMED"; done;
+  *     for p in nio.ch nio.cs security.action util.calendar; do
+  *       echo "--add-opens=java.base/sun.$p=ALL-UNNAMED"; done)
+  *   GRAFT_QUANTILE_SCALE=1 java -Xmx6g $OPENS -cp "$CP" \
+  *     org.scalatest.tools.Runner -oD -s graft.QuantileScaleSpec
   * Measured numbers print to stderr for the round notes.
   */
 class QuantileScaleSpec extends AnyFunSuite {

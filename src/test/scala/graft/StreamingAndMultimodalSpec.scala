@@ -155,6 +155,41 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     }
   }
 
+  /** Feed a parquet file stream two landed batches — `a`, processed,
+    * then `b`, processed — through the maintainer `start` builds from
+    * (stream, temp dir), stop it, and run `check` on the temp dir. */
+  private def twoBatchStream(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame)(
+      start: (org.apache.spark.sql.DataFrame, String) =>
+        org.apache.spark.sql.streaming.StreamingQuery)(
+      check: String => Unit): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_two").toFile
+    val landDir = new java.io.File(tmp, "in"); landDir.mkdirs()
+    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+      val stage = new java.io.File(tmp, s"stage_$name")
+      df.coalesce(1).write.parquet(stage.toString)
+      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath,
+        new java.io.File(landDir, s"$name.parquet").toPath)
+    }
+    try {
+      land(a, "a")
+      val q = start(spark.readStream.schema(a.schema).parquet(landDir.toString),
+        tmp.toString)
+      try {
+        q.processAllAvailable()
+        land(b, "b")
+        q.processAllAvailable()
+      } finally q.stop()
+      check(tmp.toString)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
+      }
+      rm(tmp)
+    }
+  }
+
   test("streaming chunk dedup equals the batch operator for id-ordered arrival") {
     import graft.streaming.StreamingDedup
     // boilerplate-enriched corpus (the q_dedup_chunks fixture) so
@@ -169,25 +204,10 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
         (r.getLong(1), r.getLong(2), Option(r.getString(3)))).toMap
     val mid = docs.select(percentile_approx(col("doc_id"), lit(0.5), lit(100000)))
       .head.get(0).toString.toDouble
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_chunk").toFile
-    val landDir = new java.io.File(tmp, "in"); landDir.mkdirs()
-    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(tmp, s"stage_$name")
-      df.coalesce(1).write.parquet(stage.toString)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(landDir, s"$name.parquet").toPath)
-    }
-    try {
-      land(docs.filter(col("doc_id") <= mid), "a")
-      val stream = spark.readStream.schema(docs.schema).parquet(landDir.toString)
-      val q = StreamingDedup.maintainChunkDedup(stream, s"$tmp/state",
+    twoBatchStream(docs.filter(col("doc_id") <= mid), docs.filter(col("doc_id") > mid)) {
+      (stream, tmp) => StreamingDedup.maintainChunkDedup(stream, s"$tmp/state",
         "doc_id", "text", 8, s"$tmp/ckpt")
-      try {
-        q.processAllAvailable()
-        land(docs.filter(col("doc_id") > mid), "b")
-        q.processAllAvailable()
-      } finally q.stop()
+    } { tmp =>
       val got = StreamingDedup.currentChunkDeduped(spark, s"$tmp/state")
         .collect().map(r => r.getLong(0) ->
           (r.getLong(1), r.getLong(2), Option(r.getString(3)))).toMap
@@ -195,11 +215,6 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
       assert(got === expected)
       // the dedup actually bit: some doc lost its boilerplate chunk
       assert(expected.values.exists { case (n, k, _) => k < n })
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(tmp)
     }
   }
 
@@ -217,36 +232,89 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     val expected = graft.operators.Dedup.chunkDedupFrom(cdc(docs), sep = "")
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), Option(r.getString(3)))).toMap
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_cdc").toFile
-    val landDir = new java.io.File(tmp, "in"); landDir.mkdirs()
-    def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val stage = new java.io.File(tmp, s"stage_$name")
-      df.coalesce(1).write.parquet(stage.toString)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(landDir, s"$name.parquet").toPath)
-    }
-    try {
-      land(docs.filter(col("doc_id") <= 100), "a")
-      val stream = spark.readStream.schema(docs.schema).parquet(landDir.toString)
-      val q = StreamingDedup.maintainChunkDedupFrom(stream, s"$tmp/state",
+    twoBatchStream(docs.filter(col("doc_id") <= 100), docs.filter(col("doc_id") > 100)) {
+      (stream, tmp) => StreamingDedup.maintainChunkDedupFrom(stream, s"$tmp/state",
         cdc, sep = "", s"$tmp/ckpt")
-      try {
-        q.processAllAvailable()
-        land(docs.filter(col("doc_id") > 100), "b")
-        q.processAllAvailable()
-      } finally q.stop()
+    } { tmp =>
       val got = StreamingDedup.currentChunkDeduped(spark, s"$tmp/state")
         .collect().map(r => r.getLong(0) ->
           (r.getLong(1), r.getLong(2), Option(r.getString(3)))).toMap
       assert(got === expected)
       // the CDC dedup actually bit across documents
       assert(expected.values.exists { case (n, k, _) => k < n })
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(tmp)
+    }
+  }
+
+  test("streaming boilerplate dedup equals the batch operator when each batch saturates minDf") {
+    import spark.implicits._
+    import graft.streaming.StreamingDedup
+    val banner = "accept all cookies to continue reading this site"
+    val docs = (1L to 12L)
+      .map(i => (i, s"$banner unique tail for document number $i here x$i y$i z$i"))
+      .toDF("doc_id", "text")
+    def chunker(b: org.apache.spark.sql.DataFrame) =
+      graft.operators.TextAnalysis.chunkTokens(b, "doc_id", "text", 8, 0)
+        .select(col("doc_id").as("id"), col("chunk_idx"), col("chunk_text"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getAs[String]("text_clean"))).sortBy(_._1).toSeq
+    val expected = rows(graft.operators.Dedup.boilerplateDedupFrom(chunker(docs), " ", 2))
+    twoBatchStream(docs.filter(col("doc_id") <= 6), docs.filter(col("doc_id") > 6)) {
+      (stream, tmp) => StreamingDedup.maintainBoilerplateDedup(stream,
+        s"$tmp/state", chunker, " ", 2, s"$tmp/ckpt")
+    } { tmp =>
+      val got = rows(StreamingDedup.currentBoilerplateDeduped(spark, s"$tmp/state"))
+      assert(got === expected)
+      assert(got.size === 12 &&
+        got.forall(r => Option(r._4).forall(!_.contains("accept all"))),
+        "banner must be gone from every doc")
+    }
+  }
+
+  test("streaming decontamination equals the batch Bloom operator across micro-batches") {
+    import spark.implicits._
+    import graft.streaming.StreamingDedup
+    def text(doc: Long) = (0 until 20).map(j => s"w${(doc * 31 + j * 7) % 97}").mkString(" ")
+    val train = (0L until 60L).map(i => (i, text(i))).toDF("doc_id", "text")
+    val evalDf = Seq((1000L, text(7L)), (1001L, text(42L)),
+        (1002L, (0 until 20).map(j => s"z$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    def tags(df: org.apache.spark.sql.DataFrame) =
+      df.select("eval_id", "train_id", "containment").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val expected = tags(graft.operators.Dedup.crossCorpusContainmentBloom(
+      train, "doc_id", "text", evalDf, "doc_id", "text"))
+    twoBatchStream(train.filter(col("doc_id") < 30), train.filter(col("doc_id") >= 30)) {
+      (stream, tmp) =>
+        StreamingDedup.writeDecontaminationEval(evalDf, "doc_id", "text", s"$tmp/state")
+        StreamingDedup.maintainDecontamination(stream, s"$tmp/state",
+          "doc_id", "text", s"$tmp/ckpt")
+    } { tmp =>
+      val got = tags(StreamingDedup.currentContaminated(spark, s"$tmp/state"))
+      assert(got === expected)
+      // the planted copies sit one in each batch
+      assert(got.map(_._2).toSet.intersect(Set(7L, 42L)) === Set(7L, 42L))
+    }
+  }
+
+  test("streaming uniform sample equals the batch bottom-k across micro-batches") {
+    import spark.implicits._
+    import graft.streaming.StreamingSketch
+    val all = (0L until 300L).map(i => (i, s"payload-$i")).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    val expected = rows(all
+      .withColumn("__u", graft.operators.Sampling.hashUniform(
+        concat_ws(":", lit("urs42"), col("doc_id").cast("string"))))
+      .orderBy(col("__u"), col("doc_id")).limit(20).drop("__u"))
+    twoBatchStream(all.filter(col("doc_id") < 120), all.filter(col("doc_id") >= 120)) {
+      (stream, tmp) => StreamingSketch.maintainUniformSample(stream,
+        s"$tmp/state", "doc_id", 20, s"$tmp/ckpt")
+    } { tmp =>
+      val got = rows(StreamingSketch.currentUniformSample(spark, s"$tmp/state", 20, "doc_id"))
+      assert(got === expected)
+      // both batches contribute members
+      assert(got.exists(_._1 < 120) && got.exists(_._1 >= 120))
     }
   }
 
